@@ -1,13 +1,16 @@
 package graft.dedup
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.{functions => F}
-import org.apache.spark.storage.StorageLevel
 
 /** Distributed union-find: connected components over an undirected edge
-  * list, pure DataFrame implementation of the alternating
-  * large-star / small-star algorithm (Kiveris et al., "Connected
-  * Components in MapReduce and Beyond", SoCC'14).
+  * list. A union-find per partition contracts the edges first; the
+  * alternating large-star / small-star rounds (Kiveris et al., "Connected
+  * Components in MapReduce and Beyond", SoCC'14) then run only on what
+  * the contraction left, and not at all when one partition saw every
+  * edge.
   *
   * This is the engine's re-expression of the reference's `put_dup_groups`
   * group-merging kernel (reference/dupliganger/dedup.py:483-522). There, a
@@ -17,14 +20,32 @@ import org.apache.spark.storage.StorageLevel
   * union-find at shuffle scale.
   *
   * Scale design:
-  *  - O(log n) rounds; every round is TWO shuffles on the node id (the
-  *    large-star window + the small-star groupBy — round 6 fused the
-  *    small star's dedup into its aggregation, dropping the per-round
-  *    distinct exchange) — no driver-side state, no collect. Works
-  *    identically at 10^12 edges on a 1000-executor cluster; only
-  *    `spark.sql.shuffle.partitions` changes.
-  *  - `localCheckpoint` after every round truncates lineage, otherwise the
-  *    iterative plan grows exponentially and the optimizer chokes.
+  *  - Contraction: after the canonical-orientation `distinct`, every
+  *    partition runs an in-memory union-find over its edges (Dataset
+  *    `mapPartitions`) and emits (node, min id of its local component) for
+  *    every node it saw. A task's union-find state is bounded by the
+  *    distinct nodes of one partition of the `distinct`'s exchange: AQE
+  *    coalesces the hash partitions only up to its advisory partition
+  *    size, so the state is one AQE-sized partition's worth, and a larger
+  *    graph needs more `spark.sql.shuffle.partitions`, like every other
+  *    shuffle in the engine. Local trees link the larger root under the
+  *    smaller (so a root is its tree's min id) and `find` halves paths,
+  *    which keeps finds amortized O(log n) in a skewed, hub-heavy
+  *    component too — the balanced-tree concern of BTS (ICDE 2024,
+  *    load-balanced distributed union-find).
+  *  - One partition: AQE coalesces a small edge set into one partition,
+  *    so one union-find saw every edge and the contraction is already the
+  *    exact answer. It is returned with no star round, no node `distinct`
+  *    and no final join: two Spark jobs (the `distinct`'s exchange and
+  *    the checkpoint fill) whatever the graph's depth.
+  *  - More than one partition: the contracted edges (child -> local root)
+  *    go through star rounds. Every round is TWO shuffles on the node id
+  *    (the large-star window + the small-star groupBy) — no driver-side
+  *    state, no collect. A node has at most one contracted edge per
+  *    partition that saw it.
+  *  - `localCheckpoint` after the contraction and after every round
+  *    truncates lineage, otherwise the iterative plan grows exponentially
+  *    and the optimizer chokes.
   *  - Convergence test = count + order-independent decimal-sum multiset
   *    fingerprint of the round's emitted edges (one cheap job per round
   *    that doubles as the round's materializing action), not DataFrame
@@ -46,80 +67,68 @@ object ConnectedComponents {
 
   /** @param edges DataFrame with two LongType columns (src, dst) — column
     *              names are positional; self-loops and duplicates are fine.
-    * @param maxIterations must be ≥ 2: the sentinel-folded convergence
-    *              probe (see the loop comment) detects a fixpoint one
-    *              round AFTER reaching it, so an input already at
-    *              fixpoint needs 2 rounds to be declared converged.
+    * @param maxIterations cap on star rounds (≥ 1). The round signature is
+    *              seeded with the contraction's own, so a contraction that
+    *              is already a star forest is confirmed by one round.
     * @return DataFrame (id: long, component: long) — every node that
     *         appears in `edges`, component = min node id of its component.
     */
   def run(edges: DataFrame, maxIterations: Int = 50): DataFrame = {
-    require(maxIterations >= 2,
-      s"maxIterations must be >= 2 (sentinel probe needs a confirming round), got $maxIterations")
-    val spark = edges.sparkSession
+    require(maxIterations >= 1, s"maxIterations must be >= 1, got $maxIterations")
+    val contracted = contract(edges)
+    if (contracted.rdd.getNumPartitions > 1) starRounds(contracted, maxIterations)
+    else {
+      // One union-find saw every edge: the contraction is the exact
+      // answer. One job fills its checkpoint, so callers get a
+      // materialized frame either way.
+      contracted.foreachPartition((rows: Iterator[Row]) => rows.foreach(_ => ()))
+      contracted.toDF("id", "component")
+    }
+  }
+
+  /** Large-star / small-star rounds over a [[contract]]ion whose edges
+    * were spread over more than one partition, then every node's
+    * component. */
+  private def starRounds(contracted: DataFrame, maxIterations: Int): DataFrame = {
+    val spark = contracted.sparkSession
     import spark.implicits._
 
-    val in = edges.toDF("u", "v").where($"u".isNotNull && $"v".isNotNull)
-    val nodes = in.select($"u".as("id")).union(in.select($"v".as("id")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    // canonical edge orientation (big, small), dropping self-loops.
-    // LAZY localCheckpoint: the convergence-signature aggregate is the
-    // action that materializes it, so each signature check costs ONE Spark
-    // job (checkpoint + count + xor in a single pass) instead of two — at
-    // small-per-round edge volumes the driver-side job latency is the
-    // dominant cost of the loop, not the shuffle.
-    var cur = in.where($"u" =!= $"v")
-      .select(F.greatest($"u", $"v").as("u"), F.least($"u", $"v").as("v"))
-      .distinct()
-      .localCheckpoint(false)
-
-    // Driver-job economy: the initial signature probe is folded into the
-    // first round (sentinel lastSig) — an already-converged input pays one
-    // cheap round over its fixpoint edge set instead of a dedicated probe
-    // job; convergence is checked EVERY round, riding the round's own
-    // materialization job (batching rounds between checks was tried and
-    // measured worse — extra full star rounds past the fixpoint cost ~2×
-    // what the saved driver round-trips recover: CC stage 4.4 s → 8.4 s
-    // at 60k docs with checkEvery=2 in the round-5 history).
+    // Star rounds on the contracted edges. Convergence signature:
+    // (count, Σ xxhash64(u,v) as DECIMAL(38,0)) over each round's EMITTED
+    // edge stream — a MULTISET fingerprint (decimal sum: exact,
+    // order-independent, and immune to the ANSI overflow that a wrapping
+    // BIGINT sum would throw). A round is a deterministic function of its
+    // input multiset, so an output equal to the input is a fixpoint. The
+    // seed is the contraction's own signature, taken by the job that
+    // materializes its checkpoint, so a contraction that is already a
+    // star forest is confirmed after ONE round; each later signature is
+    // likewise the action that materializes its round's checkpoint, so a
+    // round costs one driver round-trip (checking every round beat
+    // batching rounds between checks in the round-5 history: extra full
+    // star rounds past the fixpoint cost ~2× the saved round-trips).
     //
-    // Round 6 round shape: the lazy localCheckpoint sits on the GROUPED
+    // Round shape: the lazy localCheckpoint sits on the GROUPED
     // small-star frame (hub → distinct small-neighbor set), not on the
     // exploded edge list; the edge list the next large-star consumes is a
     // narrow explode over it (recomputed from the checkpoint per
     // reference, no shuffle). The exploded stream may carry cross-hub
-    // duplicate (v, m) rows — the per-round distinct exchange the old
-    // loop paid to remove them is gone, and both stars tolerate duplicate
-    // input rows (large-star windows over them; small-star's collect_set
-    // re-dedupes map-side).
-    //
-    // Convergence signature: (count, Σ xxhash64(u,v) as DECIMAL(38,0))
-    // over the round's EMITTED edge stream — a MULTISET fingerprint
-    // (decimal sum: exact, order-independent, and immune to the ANSI
-    // overflow that a wrapping BIGINT sum would throw; xor was the old
-    // choice only because the stream was then distinct). Fingerprinting
-    // the round OUTPUT keeps the detection round count identical to the
-    // round-5 loop (a fixpoint is still detected one round after it is
-    // reached): at the star fixpoint the emitted stream has no duplicates
-    // — every child is one hub with a single-element set, and no root has
-    // an outgoing edge — so multiset equality coincides with the old set
-    // equality exactly when it matters. (An earlier draft fingerprinted
-    // the grouped LARGE-STAR output instead; that detects the same
-    // fixpoint one round later — measured as a full extra round on
-    // q_cc_chain.) The signature aggregation is the action that
-    // materializes the round's checkpoint, so a round still costs ONE
-    // Spark job.
-    var curCp = cur // the frame holding the round's persist handle
-    var lastSig: (Long, java.math.BigDecimal) = (-1L, null) // sentinel
-    var converged = false
+    // duplicate (v, m) rows — and the contraction may carry the same
+    // (child, root) edge from two partitions — both stars tolerate
+    // duplicate input rows (large-star windows over them; small-star's
+    // collect_set re-dedupes map-side). At the star fixpoint the emitted
+    // stream has no duplicates — every child is one hub with a
+    // single-element set, and no root has an outgoing edge.
+    var cur = contracted.where($"u" =!= $"v")
+    var lastSig = signatureOfEdges(cur) // materializes the contraction
+    var curCp: Option[DataFrame] = None // the frame holding the round's persist handle
+    var converged = lastSig._1 == 0L // no edge left: every node is its own root
     var iter = 0
     while (!converged && iter < maxIterations) {
       val grouped = smallStarGrouped(largeStar(cur)).localCheckpoint(false)
       cur = emitEdges(grouped)
       val sig = signatureOfEdges(cur) // materializes the checkpoint
-      curCp.unpersist(false)
-      curCp = grouped
+      curCp.foreach(_.unpersist(false))
+      curCp = Some(grouped)
       converged = sig == lastSig || sig._1 == 0L // unchanged multiset, or no edges
       lastSig = sig
       iter += 1
@@ -127,23 +136,65 @@ object ConnectedComponents {
     require(converged, s"connected components did not converge in $maxIterations rounds")
 
     // At fixpoint every edge is (child -> root). Nodes absent from the edge
-    // list (isolated after self-loop removal, or roots) map to themselves.
+    // list (roots, and nodes seen only in self-loops) map to themselves.
     val assign = cur.select($"u".as("id"), $"v".as("component"))
-    val out = nodes
+    contracted.select($"u".as("id")).distinct()
       .join(assign, Seq("id"), "left")
       .select($"id", F.coalesce($"component", $"id").as("component"))
-    val materialized = out.localCheckpoint(true)
-    nodes.unpersist(false)
-    materialized
+      .localCheckpoint(true)
   }
 
-  /** GraphX fallback — the one place BASELINE.json permits an RDD ("no
-    * RDD fallback except where union-find iteration forces it"). Same
-    * contract as [[run]], but component ids follow GraphX's convention
-    * (min vertex id — identical to ours). Prefer [[run]]: the DataFrame
-    * loop keeps AQE/codegen and avoids RDD serialization; this exists as
-    * the escape hatch for pathological graphs (very long chains) where
-    * Pregel's in-memory vertex state wins. */
+  /** The contraction: (node, local root) for every node in `edges`,
+    * lazily localCheckpointed. Canonical edge orientation (big, small),
+    * then `distinct`, then one union-find per partition. Self-loops stay,
+    * so a node seen only in a self-loop still reaches a union-find and
+    * the output. Creating the lazy checkpoint runs the distinct's
+    * exchange (AQE plans the final stage), which fixes the partition
+    * count; the rows materialize on the first action over the frame. */
+  private[dedup] def contract(edges: DataFrame): DataFrame = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    edges.toDF("u", "v").where($"u".isNotNull && $"v".isNotNull)
+      .select(F.greatest($"u", $"v").as("u"), F.least($"u", $"v").as("v"))
+      .distinct()
+      .as[(Long, Long)].mapPartitions(localRoots)
+      .toDF("u", "v")
+      .localCheckpoint(false)
+  }
+
+  /** Union-find over one partition's edges: (node, min id of its local
+    * component) for every node the partition saw. The larger root links
+    * under the smaller, so every root is its tree's min id; `find` halves
+    * paths as it walks. */
+  private def localRoots(edges: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    val parent = new mutable.LongMap[Long]()
+    def find(x: Long): Long = {
+      var c = x
+      var p = parent(c)
+      while (p != c) {
+        val g = parent(p)
+        parent(c) = g
+        c = g
+        p = parent(c)
+      }
+      c
+    }
+    edges.foreach { case (u, v) =>
+      parent.getOrElseUpdate(u, u)
+      parent.getOrElseUpdate(v, v)
+      val (ru, rv) = (find(u), find(v))
+      if (ru < rv) parent(rv) = ru else if (rv < ru) parent(ru) = rv
+    }
+    // keys snapshotted first: find rewrites the map while rows stream out
+    parent.keysIterator.toArray.iterator.map(x => (x, find(x)))
+  }
+
+  /** GraphX connected components — the one place BASELINE.json permits an
+    * RDD ("no RDD fallback except where union-find iteration forces it").
+    * Same contract as [[run]], and GraphX's component id is the min vertex
+    * id too, so the two outputs are directly comparable. Nothing on the
+    * engine's path calls it; it stays as the independent parity reference
+    * for [[run]] (LshSpec, FlagshipDemo). */
   def runGraphX(edges: DataFrame): DataFrame = {
     import org.apache.spark.graphx.{Edge, Graph}
     val spark = edges.sparkSession

@@ -455,10 +455,12 @@ object DedupPipeline {
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
     // Enforced (not assumed): every frame a future first-touches must be a
-    // MATERIALIZED checkpoint before submission. ConnectedComponents.run's
-    // actions normally forced all three; if a future code path ever skips
-    // that (early exit, reordering), the cheap count() here closes the
-    // accumulator race instead of reintroducing it.
+    // MATERIALIZED checkpoint before submission. The guard below is what
+    // keeps that first touch safe: it forces, with a cheap count() on this
+    // thread, whichever of the three no earlier action has (the overlap
+    // block above normally forced all three; ConnectedComponents.run
+    // reads only scored and substr, never sigsAll), so a reordered or
+    // shortened stage path cannot reopen the accumulator race.
     Seq(sigsAll, scored, substr).foreach { f =>
       if (!org.apache.spark.sql.graftshim.GraftSqlShim.isMaterializedLocalCheckpoint(f))
         f.count()
