@@ -451,10 +451,9 @@ object Bench {
     // Stage frames use the SAME lineage-truncating lazy checkpoint as
     // DedupPipeline.run (a columnar persist() here once charged the
     // signatures stage a single-threaded text+array encode the real
-    // engine never pays), and each tick wraps CONSTRUCTION + action:
-    // the auto strategies' eager size probes submit jobs at plan time,
-    // so building the frame outside its tick would let that work escape
-    // the attribution.
+    // engine never pays), and each tick wraps CONSTRUCTION + action, so
+    // any job a stage submits while its frame is built is attributed to
+    // that stage.
     val pages = SyntheticCorpus.pages(spark, n)
     var sigsAll: DataFrame = null
     tick("signatures") {

@@ -194,7 +194,7 @@ object ConnectedComponents {
     * Same contract as [[run]], and GraphX's component id is the min vertex
     * id too, so the two outputs are directly comparable. Nothing on the
     * engine's path calls it; it stays as the independent parity reference
-    * for [[run]] (LshSpec, FlagshipDemo). */
+    * for [[run]] (LshSpec). */
   def runGraphX(edges: DataFrame): DataFrame = {
     import org.apache.spark.graphx.{Edge, Graph}
     val spark = edges.sparkSession

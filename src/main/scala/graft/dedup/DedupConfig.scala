@@ -24,18 +24,6 @@ final case class DedupConfig(
       * (boilerplate mega-buckets); dropped volume is reported in metrics.
       * The hot-bucket cap from SURVEY.md §4. */
     maxBucketSize: Int = 2000,
-    /** Hot-key strategy for BOTH mega-key hazards in the engine — LSH
-      * band buckets (graft.dedup.Lsh) and winnow fingerprint posting
-      * lists (graft.dedup.SubstringDedup). "auto" (default): probe the
-      * actual max key size (from a map-side-combined counts pass) and
-      * pick "window" (one shuffle) while no key exceeds 4× its cap, or
-      * "salted" (two-phase salted size count + join-back — no task ever
-      * holds a hot key's rows) once one does. Force either explicitly
-      * for corpora whose skew is known in advance. All three produce
-      * identical pairs (parity specs in LshSpec / SubstringDedupSpec). */
-    hotBucketStrategy: String = "auto",
-    /** Salt fan-out for the salted strategy's partial size aggregation. */
-    saltBuckets: Int = 64,
     /** Winnowing window sizes for the exact-substring pass: any shared
       * substring of ≥ winnowW + winnowWin − 1 chars shares a fingerprint.
       * win also sets the sampling density (~2/(win+1) of all grams): the
@@ -96,8 +84,6 @@ final case class DedupConfig(
   require(numHashes == bands * rowsPerBand,
     s"numHashes ($numHashes) must equal bands*rowsPerBand (${bands * rowsPerBand})")
   require(idRemapRounds >= 1, s"idRemapRounds must be >= 1, got $idRemapRounds")
-  require(Set("auto", "window", "salted").contains(hotBucketStrategy),
-    s"hotBucketStrategy must be 'auto', 'window' or 'salted', got '$hotBucketStrategy'")
   require(minSubstringChars >= winnowW + winnowWin - 1,
     s"minSubstringChars ($minSubstringChars) below the winnowing guarantee " +
       s"floor winnowW+winnowWin-1 (${winnowW + winnowWin - 1}): docs shorter " +

@@ -145,9 +145,9 @@ object DedupPipeline {
     * remapped something (never, on real data) — the old form paid a
     * corpus-wide aggregation + join per configured round unconditionally.
     *
-    * NOTE: eager, like Lsh's auto-strategy probe — the anomaly
-    * aggregation runs a small Spark job at call time so the clean-corpus
-    * case can skip the apply-join at plan level. */
+    * NOTE: eager — the anomaly aggregation runs a small Spark job at
+    * call time so the clean-corpus case can skip the apply-join at plan
+    * level. */
   private[dedup] def enforceIds(hashed: DataFrame, cfg: DedupConfig): DataFrame = {
     val spark = hashed.sparkSession
     import spark.implicits._
@@ -324,30 +324,6 @@ object DedupPipeline {
         F.col("best.near_miss_est_jaccard"), F.col("best.near_miss_hamming"))
   }
 
-  /** Verified near-dup edges (LSH ∪ substring): the CC input. The
-    * signature columns are cached here because candidate generation (and
-    * under the default "auto" strategy, its eager size probe), the
-    * verification joins and the substring pass each re-evaluate them —
-    * uncached, the most expensive expressions in the engine would run
-    * several extra times. */
-  def dupEdges(sigs: DataFrame, cfg: DedupConfig): DataFrame = {
-    val spark = sigs.sparkSession
-    import spark.implicits._
-    // lineage-truncating checkpoint, not a columnar persist: the payload
-    // is the 128-long minhash array per row — columnar encode costs more
-    // than a signature recompute (see the q_minhash entry in SparkEntry)
-    val sigCols = graft.Caches.truncate(sigs.select("doc_id", "minhash", "simhash"))
-    val (pairs, _) = Lsh.candidatePairs(sigCols, cfg)
-    val verified = Lsh.verifyPairs(pairs, sigCols, cfg)
-      .where($"verified").select($"a", $"b")
-    val substr =
-      if (cfg.substringPass)
-        SubstringDedup.substringEdges(sigs.select($"doc_id", $"text"), cfg)
-          .select($"a", $"b")
-      else spark.emptyDataset[(Long, Long)].toDF("a", "b")
-    verified.union(substr)
-  }
-
   /** Full run. `pages` must have columns (url, text, lang [, warc_ts, html]). */
   def run(pages: DataFrame, cfg: DedupConfig = DedupConfig()): DedupResult = {
     val spark = pages.sparkSession
@@ -440,7 +416,8 @@ object DedupPipeline {
     // Report — consolidated into 5 aggregate jobs (one per stage frame),
     // not a count() per counter, with the four that read ALREADY
     // MATERIALIZED stage checkpoints (sigsAll/scored/substr were forced
-    // by earlier actions; overflow is a local relation) submitted
+    // by earlier actions; overflow re-counts the band buckets from the
+    // sigsAll checkpoint) submitted
     // CONCURRENTLY: the driver awaits them together, so their scheduler
     // round-trips overlap instead of paying serial latencies (on a
     // cluster the independent jobs also fill otherwise-idle executors).

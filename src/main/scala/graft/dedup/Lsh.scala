@@ -22,9 +22,11 @@ import graft.functions._
   *    a boilerplate bucket with 10^8 members costs a counter per task, not
   *    a collect_list OOM. Oversized buckets never reach pair generation;
   *    their dropped volume is reported (`lsh_overflow_*` metrics).
-  *  - pair generation is a bucket-key equi-join (a self-join of the
-  *    bucket-exploded table), shuffled on (band, bucket); AQE handles
-  *    residual skew below the cap.
+  *  - the eligible buckets (2..cap members) are joined back onto the
+  *    exploded (doc_id, bucket) rows, each bucket's members are collected
+  *    into one array and pairs are exploded from it; AQE chooses the
+  *    join (broadcast when few buckets are eligible) and handles residual
+  *    skew below the cap.
   *  - verification re-joins the two signature columns by doc id instead of
   *    carrying signatures through the bucket shuffle `bands` times.
   */
@@ -52,142 +54,48 @@ object Lsh {
         F.explode(bandBuckets(F.col("minhash"), cfg.bands, cfg.rowsPerBand))
           .as("bucket"))
 
-  /** Candidate pairs (a < b by doc_id) from band buckets, hot buckets
-    * capped. Returns (pairs, overflowStats). Strategies (output-identical,
-    * parity-tested in LshSpec):
+  /** Groups of `member` per `key`, keys held by fewer than 2 or more than
+    * `cap` rows dropped. Returns (groups, overflow): groups has columns
+    * `key` and `members` (the collected array, at most `cap` long);
+    * overflow is one row (overflow_buckets, overflow_rows) counting the
+    * keys over the cap and their rows. Both frames are lazy.
     *
-    *  - "window" — one shuffle on bucket: a window count tags every
-    *    member with its bucket size, the capped groupBy reuses the
-    *    window's hash partitioning. Cheapest, BUT the window sort
-    *    co-locates a mega-bucket in ONE task before the cap filter.
-    *  - "salted" — two-phase salted size count + eligibility join-back:
-    *    no task ever holds an uncapped bucket, at the cost of an extra
-    *    pass over the exploded table and the join machinery (~1.3× the
-    *    candidate stage).
-    *  - "auto" (default) — probe the ACTUAL max bucket size first, from
-    *    a map-side-combined counts pass (a partial-agg count never
-    *    co-locates a bucket: each reducer sees at most one partial per
-    *    map task), then pick: window while the largest bucket is ≤ 4×
-    *    the cap (bounded co-location — the post-filter collect_list
-    *    co-locates up to cap rows per bucket anyway), salted once a
-    *    genuinely hot bucket exists. The probe pass doubles as the
-    *    overflow-stats pass, so in the calm case auto costs the same
-    *    passes as the forced window strategy. The hazard decision is
-    *    made from data, not guessed from config.
-    *
-    * NOTE: "auto" is EAGER — the probe submits a small Spark job at call
-    * time (the other strategies stay fully lazy). Callers should pass
-    * CACHED signature frames (as DedupPipeline.run and dupEdges do), or
-    * the probe re-evaluates the signature expressions once more. */
-  def candidatePairs(sigs: DataFrame, cfg: DedupConfig): (DataFrame, DataFrame) =
-    cfg.hotBucketStrategy match {
-      case "salted" => candidatePairsSalted(sigs, cfg)
-      case "window" => candidatePairsWindow(sigs, cfg)
-      case _ => // auto (round 6): counts → eligibility join, the universal form
-        // The pre-round-6 auto ran an EAGER probe pass (groupBy counts →
-        // head()) just to choose between window and salted — a driver-
-        // blocking job on the serial floor of every pipeline run — and
-        // then paid the chosen strategy's own full pass. This form needs
-        // no choice: bucket sizes aggregate map-side-combine-safely at
-        // ANY skew (a hot bucket costs one counter per map task), the
-        // eligibility filter (2 ≤ n ≤ cap) excludes hot buckets BEFORE
-        // the only shuffle that co-locates one, and the member join is
-        // left to AQE — the eligible-bucket table is tiny on calm
-        // corpora (dup buckets only), so it broadcasts at runtime and
-        // the exploded table never crosses a full exchange at all; on a
-        // dup-heavy corpus AQE keeps a shuffle join, which is exactly
-        // the salted form's shape minus its redundant salt level (the
-        // salt guarded the SIZE aggregation, but partial aggregation
-        // already bounds a hot bucket's reduce-side rows to one per map
-        // task). No window sort anywhere. Output pairs and overflow
-        // stats are bit-identical to both forced strategies (LshSpec
-        // parity, calm + planted-mega-bucket), and the overflow frame is
-        // now LAZY: callers that discard it (q_minhash_lsh_dedup) never
-        // pay its pass.
-        val exploded = explodeBuckets(sigs, cfg)
-        val counts = exploded.groupBy("bucket").count()
-        val overflow = counts.where(F.col("count") > cfg.maxBucketSize)
-          .agg(
-            F.coalesce(F.count(F.lit(1)), F.lit(0L)).as("overflow_buckets"),
-            F.coalesce(F.sum("count"), F.lit(0L)).as("overflow_rows"))
-        val eligible = counts.where(F.col("count").between(2, cfg.maxBucketSize))
-          .select("bucket")
-        val members = exploded.join(eligible, Seq("bucket"))
-        val buckets = members.groupBy("bucket")
-          .agg(F.collect_list(F.col("doc_id")).as("ids")) // bounded by maxBucketSize
-        val pairs = buckets
-          .select(F.explode(F.col("ids")).as("a"), F.col("ids"))
-          .select(F.col("a"), F.explode(F.col("ids")).as("b"))
-          .where(F.col("a") < F.col("b"))
-          .distinct()
-        (pairs, overflow)
-    }
-
-  /** Salted two-phase strategy — the 10^12-doc path (north_rule: "salted
-    * repartition + groupBy to tame hot-bucket skew"). Bucket sizes are
-    * aggregated per (band, bucket, salt) first — a boilerplate mega-bucket
-    * spreads over `saltBuckets` reducers instead of one — then rolled up,
-    * so NO task ever receives all rows of a hot bucket at any point: the
-    * eligibility filter (2 ≤ n ≤ cap) is joined back onto the exploded
-    * rows BEFORE the only shuffle that co-locates a bucket, and by then
-    * hot buckets are already excluded. The window strategy below is
-    * cheaper when mega-buckets are rare (one shuffle, no join-back), but
-    * its window sort would single-task a hot bucket first.
-    */
-  def candidatePairsSalted(sigs: DataFrame, cfg: DedupConfig): (DataFrame, DataFrame) = {
-    val exploded = explodeBuckets(sigs, cfg)
-    val salted = exploded.withColumn("salt",
-      F.pmod(F.xxhash64(F.col("doc_id")), F.lit(cfg.saltBuckets)))
-    val partial = salted.groupBy("bucket", "salt").count()
-    val sizes = partial.groupBy("bucket")
-      .agg(F.sum("count").as("n"))
-    val overflow = sizes.where(F.col("n") > cfg.maxBucketSize)
-      .agg(F.coalesce(F.count(F.lit(1)), F.lit(0L)).as("overflow_buckets"),
-        F.coalesce(F.sum("n"), F.lit(0L)).as("overflow_rows"))
-    val eligible = sizes.where(F.col("n").between(2, cfg.maxBucketSize))
-      .select("bucket")
-    val members = exploded.join(eligible.hint("shuffle_hash"), Seq("bucket"))
-    val buckets = members.groupBy("bucket")
-      .agg(F.collect_list(F.col("doc_id")).as("ids")) // bounded by maxBucketSize
-    val pairs = buckets
-      .select(F.explode(F.col("ids")).as("a"), F.col("ids"))
-      .select(F.col("a"), F.explode(F.col("ids")).as("b"))
-      .where(F.col("a") < F.col("b"))
-      .distinct()
-    (pairs, overflow)
-  }
-
-  /** Single-shuffle window strategy. */
-  def candidatePairsWindow(sigs: DataFrame, cfg: DedupConfig): (DataFrame, DataFrame) = {
-    // overflow stats take their own narrow count-aggregate pass (partial
-    // agg, counts only) — cheaper than persisting the full window output
-    // just to read two numbers from it
-    val overflow = explodeBuckets(sigs, cfg).groupBy("bucket").count()
-      .where(F.col("count") > cfg.maxBucketSize)
+    * The one hot-key form of the engine, shared by the LSH band buckets
+    * and the winnow posting lists. Key sizes are counted first: the count
+    * aggregates map-side, so a key held by 10^8 rows costs one partial
+    * counter per map task, never a co-located group. The 2..cap filter
+    * then drops hot keys and singletons BEFORE the only shuffle that
+    * co-locates a key's rows (the join back + collect_list). The join
+    * carries no hint: AQE broadcasts the eligible keys when they are few
+    * (calm corpora) and keeps a shuffle join otherwise. */
+  private[dedup] def cappedGroups(rows: DataFrame, key: String, member: Column,
+      cap: Int): (DataFrame, DataFrame) = {
+    val counts = rows.groupBy(key).count()
+    val overflow = counts.where(F.col("count") > cap)
       .agg(
         F.coalesce(F.count(F.lit(1)), F.lit(0L)).as("overflow_buckets"),
         F.coalesce(F.sum("count"), F.lit(0L)).as("overflow_rows"))
-    (windowPairs(sigs, cfg), overflow)
+    val eligible = counts.where(F.col("count").between(2, cap)).select(key)
+    val groups = rows.join(eligible, Seq(key))
+      .groupBy(key).agg(F.collect_list(member).as("members"))
+    (groups, overflow)
   }
 
-  /** The window strategy's pair generation alone (no overflow stats):
-    * one shuffle on bucket — window count tags members with their bucket
-    * size, the capped groupBy reuses the window's hash partitioning. */
-  private def windowPairs(sigs: DataFrame, cfg: DedupConfig): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val exploded = explodeBuckets(sigs, cfg)
-    val counted = exploded.withColumn("n",
-      F.count(F.lit(1)).over(Window.partitionBy("bucket")))
-    // singleton short-circuit (reference/dupliganger/dedup.py:543-562) +
-    // mega-bucket cap in one filter
-    val members = counted.where(F.col("n").between(2, cfg.maxBucketSize))
-    val buckets = members.groupBy("bucket")
-      .agg(F.collect_list(F.col("doc_id")).as("ids")) // bounded by maxBucketSize
-    buckets
-      .select(F.explode(F.col("ids")).as("a"), F.col("ids"))
-      .select(F.col("a"), F.explode(F.col("ids")).as("b"))
+  /** Candidate pairs (a < b by doc_id) from band buckets holding 2 to
+    * `maxBucketSize` docs ([[cappedGroups]]). Returns (pairs, overflow):
+    * overflow is the one-row (overflow_buckets, overflow_rows) count of
+    * the buckets over the cap, reported as the `lsh_overflow_*` metrics.
+    * Both frames are lazy; callers that discard the overflow frame
+    * (q_minhash_lsh_dedup) never run its aggregate. */
+  def candidatePairs(sigs: DataFrame, cfg: DedupConfig): (DataFrame, DataFrame) = {
+    val (buckets, overflow) =
+      cappedGroups(explodeBuckets(sigs, cfg), "bucket", F.col("doc_id"), cfg.maxBucketSize)
+    val pairs = buckets
+      .select(F.explode(F.col("members")).as("a"), F.col("members"))
+      .select(F.col("a"), F.explode(F.col("members")).as("b"))
       .where(F.col("a") < F.col("b"))
       .distinct()
+    (pairs, overflow)
   }
 
   /** Attach signatures to pairs and score them. Output columns:

@@ -69,8 +69,8 @@ object SubstringDedup {
     // directed candidates: shorter doc (a) potentially inside longer (b);
     // shared-fingerprint count / |fp(a)| = containment estimate
     val candRaw = buckets
-      .select(F.explode(F.col("ms")).as("x"), F.col("ms"))
-      .select(F.col("x"), F.explode(F.col("ms")).as("y"))
+      .select(F.explode(F.col("members")).as("x"), F.col("members"))
+      .select(F.col("x"), F.explode(F.col("members")).as("y"))
       .where(F.col("x.len") < F.col("y.len") ||
         (F.col("x.len") === F.col("y.len") && F.col("x.doc_id") < F.col("y.doc_id")))
       .groupBy(F.col("x.doc_id").as("a"), F.col("y.doc_id").as("b"))
@@ -120,63 +120,17 @@ object SubstringDedup {
       .select("a", "b", "containment")
   }
 
-  /** Capped posting-list buckets (f → bounded member array), hot
-    * fingerprints tamed by the SAME strategy triple as the LSH band
-    * buckets (`cfg.hotBucketStrategy`, parity-tested in
-    * SubstringDedupSpec) — a site-wide boilerplate block ≥
+  /** Capped posting-list buckets (f → `members` array of (doc_id, len,
+    * nfp)): fingerprints shared by 2 to `maxFingerprintPostings` docs,
+    * through the same hot-key form as the LSH band buckets
+    * ([[Lsh.cappedGroups]]). A site-wide boilerplate block ≥
     * winnowW+winnowWin−1 chars shared by 10^8 pages is exactly the
-    * mega-key this pass meets at web scale:
-    *
-    *  - "window": one shuffle on f; the window count co-locates ALL
-    *    postings of one fingerprint in a task BEFORE the cap filter —
-    *    cheapest, safe only while no fingerprint is truly hot.
-    *  - "salted": posting sizes aggregated per (f, salt) first, rolled
-    *    up, and eligibility (2 ≤ pn ≤ cap) joined back BEFORE the only
-    *    shuffle that co-locates a fingerprint — no task ever holds an
-    *    uncapped posting list.
-    *  - "auto" (default): probe the ACTUAL max posting-list size from a
-    *    map-side-combined counts pass (eager — `eligible` is cached by
-    *    the caller), window while ≤ 4× the cap, salted beyond. */
+    * mega-key this pass meets at web scale. The pass reports no posting
+    * overflow, so the overflow frame is discarded unevaluated. */
   private def cappedPostingBuckets(eligible: DataFrame, cfg: DedupConfig): DataFrame = {
     val postings = eligible.select(F.col("doc_id"), F.col("len"), F.col("nfp"),
       F.explode(F.col("fp")).as("f"))
-    def collectMembers(capped: DataFrame): DataFrame =
-      capped.groupBy("f")
-        .agg(F.collect_list(F.struct(F.col("doc_id"), F.col("len"), F.col("nfp"))).as("ms"))
-    def windowForm: DataFrame =
-      collectMembers(postings.withColumn("pn",
-        F.count(F.lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy("f")))
-        .where(F.col("pn").between(2, cfg.maxFingerprintPostings))
-        .drop("pn"))
-    def saltedForm: DataFrame = {
-      val sizes = postings
-        .withColumn("salt", F.pmod(F.xxhash64(F.col("doc_id")), F.lit(cfg.saltBuckets)))
-        .groupBy("f", "salt").count()
-        .groupBy("f").agg(F.sum("count").as("pn"))
-      val ok = sizes.where(F.col("pn").between(2, cfg.maxFingerprintPostings))
-        .select("f")
-      collectMembers(postings.join(ok.hint("shuffle_hash"), Seq("f")))
-    }
-    cfg.hotBucketStrategy match {
-      case "window" => windowForm
-      case "salted" => saltedForm
-      case _ => // auto (round 6): counts → eligibility join, the universal form
-        // Replaces the eager max-posting probe (a full explode+aggregate
-        // pass, driver-blocking, whose only output was the window-vs-
-        // salted choice) + the chosen strategy's own pass. Posting sizes
-        // aggregate map-side-combine-safely at any skew; the 2..cap
-        // filter drops hot fingerprints (and the singleton majority)
-        // BEFORE any shuffle co-locates them; AQE broadcasts the
-        // eligible set when it is small (the common case — only
-        // fingerprints shared by 2..cap docs survive), so the wide
-        // posting rows skip the full exchange + window sort the window
-        // form paid. Output-identical to both forced strategies
-        // (SubstringDedupSpec parity, calm + hot corpora).
-        val counts = postings.groupBy("f").count()
-        val ok = counts.where(F.col("count")
-          .between(2, cfg.maxFingerprintPostings)).select("f")
-        collectMembers(postings.join(ok, Seq("f")))
-    }
+    Lsh.cappedGroups(postings, "f",
+      F.struct(F.col("doc_id"), F.col("len"), F.col("nfp")), cfg.maxFingerprintPostings)._1
   }
 }

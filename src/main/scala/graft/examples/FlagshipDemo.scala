@@ -43,22 +43,6 @@ object FlagshipDemo {
     routed.groupBy("route").count().orderBy("route").collect()
       .foreach(r => println(s"ROUTE ${r.getString(0)}=${r.getLong(1)}"))
 
-    // salted hot-bucket strategy: same clusters as the window strategy
-    val resSalted = DedupPipeline.run(pages,
-      DedupConfig(allowedLangs = Some(Set("en")), hotBucketStrategy = "salted"))
-    val a = res.clusters.orderBy("url").collect().map(_.toString).toSeq
-    val b = resSalted.clusters.orderBy("url").collect().map(_.toString).toSeq
-    println(s"SALTED-MATCHES-WINDOW=${a == b}")
-
-    // GraphX union-find fallback on the same verified edges
-    val sigs = DedupPipeline.signatures(pages, DedupConfig(allowedLangs = Some(Set("en"))))._1
-      .where(F.col("minhash").isNotNull)
-    val edges = DedupPipeline.dupEdges(sigs, DedupConfig(allowedLangs = Some(Set("en"))))
-    val gx = graft.dedup.ConnectedComponents.runGraphX(edges)
-    val dfcc = graft.dedup.ConnectedComponents.run(edges)
-    println(s"GRAPHX-COMPONENTS=${gx.select("component").distinct().count()} " +
-      s"DF-COMPONENTS=${dfcc.select("component").distinct().count()}")
-
     // minimal-schema run (url, text, lang only)
     val slim = pages.select("url", "text", "lang")
     val res2 = DedupPipeline.run(slim, DedupConfig(substringPass = false))

@@ -2,6 +2,7 @@ package graft.dedup
 
 import graft.SparkSpec
 import graft.io.SyntheticCorpus
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.{functions => F}
 import graft.functions._
 
@@ -17,69 +18,120 @@ class LshSpec extends SparkSpec {
       .where(F.col("minhash").isNotNull)
   }
 
-  test("salted and window hot-bucket strategies emit identical candidate pairs") {
-    val sigs = sigsOf(800).cache()
-    val (pw, ow) = Lsh.candidatePairsWindow(sigs, DedupConfig())
-    val (ps, os) = Lsh.candidatePairsSalted(sigs, DedupConfig(hotBucketStrategy = "salted"))
-    val a = pw.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    val b = ps.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    assert(a === b)
-    assert(a.nonEmpty)
-    assert(ow.head().getLong(1) === os.head().getLong(1)) // same overflow rows
+  /** Brute-force candidate generation over collected rows: bucket sizes
+    * counted over the exploded (doc_id, bucket) rows as a multiset,
+    * buckets with 2..cap rows kept, every a < b pair of their members
+    * emitted once. Returns (pairs, overflow_buckets, overflow_rows). */
+  private def oracle(sigs: DataFrame, cap: Int): (Seq[(Long, Long)], Long, Long) = {
+    val cfg = DedupConfig()
+    val rows = sigs.where(F.col("minhash").isNotNull)
+      .select(F.col("doc_id"), Lsh.bandBuckets(F.col("minhash"), cfg.bands, cfg.rowsPerBand))
+      .collect()
+      .flatMap(r => r.getSeq[Long](1).map(bucket => (bucket, r.getLong(0))))
+    val members = rows.groupBy(_._1).values.map(_.map(_._2).toSeq).toSeq
+    val (fit, over) = members.partition(_.size <= cap)
+    val pairs = fit.filter(_.size >= 2)
+      .flatMap(ms => for (a <- ms; b <- ms if a < b) yield (a, b))
+      .distinct.sorted
+    (pairs, over.size.toLong, over.map(_.size.toLong).sum)
   }
 
-  test("all strategies enforce the mega-bucket cap identically") {
-    val sigs = sigsOf(800).cache()
-    // absurdly small cap: every multi-member bucket overflows
-    for (strategy <- Seq("window", "salted", "auto")) {
-      val cfg = DedupConfig(maxBucketSize = 1, hotBucketStrategy = strategy)
-      val (pairs, overflow) = Lsh.candidatePairs(sigs, cfg)
-      assert(pairs.count() === 0, strategy)
-      assert(overflow.head().getLong(1) > 0, strategy)
-    }
+  private def overflowCounts(overflow: DataFrame): (Long, Long) = {
+    val o = overflow.head()
+    (o.getAs[Long]("overflow_buckets"), o.getAs[Long]("overflow_rows"))
   }
 
-  test("auto strategy matches both forced strategies on hot and calm corpora") {
-    val sigs = sigsOf(800).cache()
-    def pairsOf(strategy: String, cap: Int) = Lsh.candidatePairs(sigs,
-      DedupConfig(hotBucketStrategy = strategy, maxBucketSize = cap))._1
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    // calm regime (default cap → probe picks window) and hot regime
-    // (cap 1 → every shared bucket is >4× cap → probe picks salted):
-    // auto must be output-identical to the forced strategies in both
-    for (cap <- Seq(DedupConfig().maxBucketSize, 1)) {
-      val auto = pairsOf("auto", cap)
-      assert(auto === pairsOf("window", cap), s"cap=$cap")
-      assert(auto === pairsOf("salted", cap), s"cap=$cap")
-    }
+  /** Lsh.candidatePairs at `cap` as (pairs, overflow_buckets, overflow_rows). */
+  private def engine(sigs: DataFrame, cap: Int): (Seq[(Long, Long)], Long, Long) = {
+    val (pairs, overflow) = Lsh.candidatePairs(sigs, DedupConfig(maxBucketSize = cap))
+    val (buckets, rows) = overflowCounts(overflow)
+    (pairs.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq, buckets, rows)
   }
 
-  test("auto picks salted on a planted mega-bucket, output-identical, calm pairs intact") {
+  /** The same triple from a HotKeyForms reference over the exploded band
+    * buckets, pairs emitted from its groups in plain Scala. */
+  private def reference(sigs: DataFrame, cap: Int,
+      form: HotKeyForms.Form): (Seq[(Long, Long)], Long, Long) = {
+    val (groups, overflow) =
+      form(Lsh.explodeBuckets(sigs, DedupConfig()), "bucket", F.col("doc_id"), cap)
+    val pairs = groups.collect().toSeq.flatMap { r =>
+      val ms = r.getSeq[Long](r.fieldIndex("members"))
+      for (a <- ms; b <- ms if a < b) yield (a, b)
+    }.distinct.sorted
+    val (buckets, rows) = overflowCounts(overflow)
+    (pairs, buckets, rows)
+  }
+
+  /** Asserts Lsh.candidatePairs equals the oracle (pairs and both overflow
+    * counters) at `cap`; returns the engine's (pairs, overflow_buckets,
+    * overflow_rows). */
+  private def checkOracle(sigs: DataFrame, cap: Int): (Seq[(Long, Long)], Long, Long) = {
+    val got = engine(sigs, cap)
+    assert(got === oracle(sigs, cap), s"cap=$cap")
+    got
+  }
+
+  /** Planted corpus: mega group of 30 docs sharing one signature → every
+    * band bucket holds 30 members = 15× a cap of 2; pair groups: 2-member
+    * signatures sit exactly at that cap → their pairs must still be
+    * emitted, so parity is checked against a NONEMPTY pair set while the
+    * mega bucket is dropped. */
+  private def plantedSigs: DataFrame = {
     val spark2 = spark
     import spark2.implicits._
-    // mega group: 30 docs share one signature → every band bucket holds 30
-    // members = 15× the cap of 2 (> 4×cap, the auto salted trigger);
-    // pair groups: 2-member signatures sit exactly at the cap → pairs must
-    // still be emitted, so the salted branch is parity-checked against a
-    // NONEMPTY pair set while the mega bucket is dropped
     val mega = (0 until 30).map(i => (100L + i, Array.fill(128)(7L)))
     val pairGroups = (0 until 5).flatMap(g => Seq(
       (200L + 2 * g, Array.fill(128)(1000L + g)),
       (201L + 2 * g, Array.fill(128)(1000L + g))))
-    val sigs = (mega ++ pairGroups).toDF("doc_id", "minhash").cache()
-    def run(st: String): Seq[(Long, Long)] =
-      Lsh.candidatePairs(sigs,
-        DedupConfig(maxBucketSize = 2, hotBucketStrategy = st))._1
-        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    val auto = run("auto")
-    assert(auto === (0 until 5).map(g => (200L + 2 * g, 201L + 2 * g)))
-    assert(auto === run("window"))
-    assert(auto === run("salted"))
-    assert(!auto.exists { case (a, b) => a >= 100L && a < 130L }) // mega dropped
-    // the auto probe's stats pass reports the mega bucket at every band
-    val (_, overflow) = Lsh.candidatePairs(sigs,
-      DedupConfig(maxBucketSize = 2, hotBucketStrategy = "auto"))
-    assert(overflow.head().getLong(0) >= 32L)
+    (mega ++ pairGroups).toDF("doc_id", "minhash")
+  }
+  private val plantedPairs = (0 until 5).map(g => (200L + 2 * g, 201L + 2 * g))
+
+  test("salted and window hot-bucket strategies emit identical candidate pairs") {
+    // the engine's one form against the window and salted forms it
+    // replaced (now test references): same pairs, same overflow counts
+    val sigs = sigsOf(800).cache()
+    val cap = DedupConfig().maxBucketSize
+    val got = engine(sigs, cap)
+    assert(got._1.nonEmpty)
+    assert(reference(sigs, cap, HotKeyForms.window) === got)
+    assert(reference(sigs, cap, HotKeyForms.salted) === got)
+    sigs.unpersist()
+  }
+
+  test("candidate pairs and overflow match the brute-force bucket oracle on a calm corpus") {
+    val sigs = sigsOf(800).cache()
+    assert(checkOracle(sigs, DedupConfig().maxBucketSize)._1.nonEmpty)
+    sigs.unpersist()
+  }
+
+  test("cap 1: every multi-member bucket overflows, as the oracle counts") {
+    val sigs = sigsOf(800).cache()
+    val (pairs, _, overflowRows) = checkOracle(sigs, cap = 1)
+    assert(pairs.isEmpty)
+    assert(overflowRows > 0)
+    sigs.unpersist()
+  }
+
+  test("planted mega-bucket is dropped and reported, pairs at the cap kept, as the oracle says") {
+    val sigs = plantedSigs.cache()
+    val (pairs, overflowBuckets, _) = checkOracle(sigs, cap = 2)
+    assert(pairs === plantedPairs)
+    assert(!pairs.exists { case (a, _) => a >= 100L && a < 130L }) // mega dropped
+    assert(overflowBuckets >= 32L) // the mega bucket, reported at every band
+    sigs.unpersist()
+  }
+
+  test("auto picks salted on a planted mega-bucket, output-identical, calm pairs intact") {
+    // the former size-probed "auto" default switched to the salted form on
+    // a bucket this hot; the engine's one form (what "auto" now runs) must
+    // emit the salted and window forms' pairs and overflow counts here
+    val sigs = plantedSigs.cache()
+    val got = engine(sigs, cap = 2)
+    assert(got._1 === plantedPairs) // calm pairs intact, mega dropped
+    assert(got._2 >= 32L)
+    assert(reference(sigs, 2, HotKeyForms.salted) === got)
+    assert(reference(sigs, 2, HotKeyForms.window) === got)
     sigs.unpersist()
   }
 
