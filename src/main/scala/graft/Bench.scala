@@ -2,10 +2,9 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.{functions => F}
+import org.apache.spark.sql.SparkSession
 
-import graft.dedup.{ConnectedComponents, DedupConfig, DedupPipeline, Lsh, SubstringDedup}
+import graft.dedup.{DedupConfig, DedupPipeline}
 import graft.io.SyntheticCorpus
 
 /** Benchmark main — one JSON line (stdout AND ./bench.json, so the driver
@@ -436,51 +435,32 @@ object Bench {
     runs.toSeq
   }
 
-  /** Per-stage wall times of one decomposed pipeline pass (stage list
-    * mirrors graft.examples.StageProbe / DedupPipeline.run's op order;
-    * each stage is forced by a count so its wall time is attributable). */
+  /** Per-stage wall times of one pipeline pass: `DedupPipeline.stages`
+    * with a timing hold. Each stage is held by the same lineage-truncating
+    * lazy checkpoint as `DedupPipeline.run` and forced by a count. A
+    * stage's wall runs from the end of the previous hold (from the start
+    * of the pass, for `signatures`), so it covers CONSTRUCTION + action:
+    * any job a stage submits while its frame is built — the eager id
+    * check inside `DedupPipeline.signatures` included — is attributed to
+    * that stage. The holds run one after another, so no two walls
+    * overlap. */
   private def stagedRun(cores: Int, n: Long): Seq[(String, Double)] = {
     val spark = session(cores)
-    import spark.implicits._
+    // bench.json keys of the stages' store names
+    val keys = Map("signatures" -> "signatures", "scored" -> "lsh_verify",
+      "substr_edges" -> "substring", "assign" -> "connected_components",
+      "flags" -> "winner_flags")
     val out = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-    def tick(label: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime()
-      f
-      out += label -> (System.nanoTime() - t0) / 1e9
-    }
-    // Stage frames use the SAME lineage-truncating lazy checkpoint as
-    // DedupPipeline.run (a columnar persist() here once charged the
-    // signatures stage a single-threaded text+array encode the real
-    // engine never pays), and each tick wraps CONSTRUCTION + action, so
-    // any job a stage submits while its frame is built is attributed to
-    // that stage.
     val pages = SyntheticCorpus.pages(spark, n)
-    var sigsAll: DataFrame = null
-    tick("signatures") {
-      val (sigsAll0, _) = DedupPipeline.signatures(pages, cfg)
-      sigsAll = graft.Caches.truncate(
-        sigsAll0.select("doc_id", "text", "minhash", "simhash", "reject_reason"))
-      sigsAll.count()
+    var t0 = System.nanoTime()
+    DedupPipeline.stages(pages, cfg) { (name, build) =>
+      val df = Caches.truncate(build())
+      df.count()
+      val t1 = System.nanoTime()
+      out += keys(name) -> (t1 - t0) / 1e9
+      t0 = t1
+      df
     }
-    val sigs = sigsAll.where($"minhash".isNotNull)
-    val sigCols = sigs.select("doc_id", "minhash", "simhash")
-    var scored: DataFrame = null
-    tick("lsh_verify") {
-      val (pairs, _) = Lsh.candidatePairs(sigCols, cfg)
-      scored = graft.Caches.truncate(Lsh.verifyPairs(pairs, sigCols, cfg))
-      scored.count()
-    }
-    var substr: DataFrame = null
-    tick("substring") {
-      substr = graft.Caches.truncate(
-        SubstringDedup.substringEdges(sigs.select($"doc_id", $"text"), cfg))
-      substr.count()
-    }
-    val edges = scored.where($"verified").select($"a", $"b").union(substr.select($"a", $"b"))
-    var assign: DataFrame = null
-    tick("connected_components") { assign = ConnectedComponents.run(edges); assign.count() }
-    tick("winner_flags")(DedupPipeline.winnerFlags(sigs, assign, cfg)
-      .where($"is_duplicate").count())
     Caches.release(spark)
     spark.stop()
     SparkSession.clearActiveSession()
@@ -770,8 +750,8 @@ object Bench {
           // render an empty table
           "|_(skipped this run: the scaling pairs + headline phase " +
             "consumed the budget — the table is the lowest-priority " +
-            "phase; a prior run's table survives in git history and " +
-            "`graft.examples.StageProbe` reproduces it on demand)_"
+            "phase; a prior run's table survives in git history, and " +
+            "`python3 perfbench/run.py --trace 1` reports per-layer cost)_"
         else stages.map { case (k, ts, tb) =>
           // sub-2 s stage walls are dominated by per-job driver latency at
           // this corpus size — flagged so noise isn't read as signal
@@ -895,21 +875,23 @@ object Bench {
          |serial by construction (no collect-loops, no driver-side joins,
          |no unpartitioned state).
          |
-         |Measured decomposition of one pipeline run (probes:
-         |`graft.examples.FloorProbe` / `FloorPhases` /
-         |`ClusterScaleProbe`): an executor-count-independent serial
-         |floor — ~7–8 s thread mode, ~13 s cluster mode (the ~90 AQE
-         |stage-submission jobs cross real scheduler RPC) — after the
-         |round-5 cuts (window-form star rounds, one-pass id enforcement,
-         |window winner selection took the floor down from ~10.7 s /
-         |~213 jobs); plus a contention term from hypervisor weather that
-         |varies by the hour (identical code and data measured 0.66–0.81
-         |efficiency in one day — every run is a line in
-         |bench_history.jsonl, and single samples of either level swing
-         |±50%%: observed 87.6/125.2 s small and 27.2/54.3 s big walls
-         |within ONE quiet-hour probe). GC is ruled out as that term:
-         |`ScaleProbe` records 0.4–1.3 s of collector time per 120k-doc
-         |run at BOTH levels. On a real 4N cluster the floor amortizes
+         |Measured decomposition of one pipeline run: an
+         |executor-count-independent serial floor — ~7–8 s thread mode,
+         |~13 s cluster mode (the AQE stage-submission jobs cross real
+         |scheduler RPC) — after the round-5 cuts (window-form star rounds,
+         |one-pass id enforcement, window winner selection took the floor
+         |down from ~10.7 s / ~213 jobs); plus a contention term from
+         |hypervisor weather that varies by the hour (identical code and
+         |data measured 0.66–0.81 efficiency in one day — every run is a
+         |line in bench_history.jsonl, and single samples of either level
+         |swing ±50%%: observed 87.6/125.2 s small and 27.2/54.3 s big
+         |walls within ONE quiet-hour probe). GC was ruled out as that
+         |term: 0.4–1.3 s of collector time per 120k-doc run at BOTH
+         |levels. The benchmark's traced run
+         |(`python3 perfbench/run.py --workload dup_heavy --seed 1
+         |--seconds 15 --trace 1`) re-measures both from the flagship's
+         |own passes: jobs per stage layer (`*.jobs`) and collector time
+         |per run (`run.gc_s`). On a real 4N cluster the floor amortizes
          |over real per-stage work and each executor brings its own
          |memory bus, so both terms are artifacts of benchmarking on one
          |host — which is exactly why the raw samples, not just the

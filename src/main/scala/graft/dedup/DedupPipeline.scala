@@ -324,75 +324,124 @@ object DedupPipeline {
         F.col("best.near_miss_est_jaccard"), F.col("best.near_miss_hamming"))
   }
 
-  /** Full run. `pages` must have columns (url, text, lang [, warc_ts, html]). */
-  def run(pages: DataFrame, cfg: DedupConfig = DedupConfig()): DedupResult = {
+  /** How one stage's output is held for the stages that read it: given
+    * the stage name and its builder, return the frame later stages read.
+    * The shape of `StageStore.runStaged`. [[run]] truncates lineage
+    * (`Caches.truncate`); `ResumableDedupPipeline` commits each stage to
+    * parquet; `graft.Bench` truncates, counts and times each stage. A
+    * hold may skip the builder (a resume reloads committed bytes). */
+  private[graft] type Hold = (String, () => DataFrame) => DataFrame
+
+  /** The stage frames of one run, as the hold returned them, plus what
+    * emission needs from outside the holds: the raw signature frame (wide
+    * admitted rows), the gate rejects and the lazy LSH overflow count. */
+  private[graft] final case class Stages(
+      sigsAllRaw: DataFrame,
+      gateRejects: DataFrame,
+      overflow: DataFrame,
+      sigsAll: DataFrame,
+      scored: DataFrame,
+      substr: DataFrame,
+      assign: DataFrame,
+      flags: DataFrame)
+
+  /** Forces `df` when its plan still holds an unmaterialized lazy
+    * checkpoint. Concurrent FIRST touch of such a checkpoint races on its
+    * SQL-metric accumulators ("attempted to access non-existent
+    * accumulator"), so every frame a future touches goes through here on
+    * the caller's thread first. Frames that hold no pending checkpoint (a
+    * materialized one, or a parquet stage) cost nothing here. */
+  private def firstTouch(df: DataFrame): Unit =
+    if (org.apache.spark.sql.graftshim.GraftSqlShim.hasPendingCheckpoint(df)) df.count()
+
+  /** The stage graph, written once: `signatures` → `scored` (every LSH
+    * candidate pair with its est-Jaccard / Hamming / verified verdict) →
+    * `substr_edges` (a, b, containment) → `assign` (id, component) →
+    * `flags` (winner flags). Each stage's builder goes through `hold`; the
+    * hold is the only thing the plain, resumable and benchmark runs
+    * change. Mirrors the reference's sequential ops
+    * (reference/dupliganger/dedup.py:864-1072).
+    *
+    * Payload discipline for 100 TB inputs: only (doc_id, text, minhash,
+    * simhash) is held and shuffled through the compute stages; the wide
+    * row (html binary, timestamps) stays in the source scan and crosses
+    * exactly one shuffle — the flag join at emission ([[emit]]). */
+  private[graft] def stages(pages: DataFrame, cfg: DedupConfig)(hold: Hold): Stages = {
     val spark = pages.sparkSession
     import spark.implicits._
+    def held(name: String)(build: => DataFrame): DataFrame = hold(name, () => build)
 
-    // Op1 — signatures (reference Op1: build_read_and_loc_dbs).
-    // Payload discipline for 100 TB inputs: only (doc_id, text, minhash,
-    // simhash) is materialized (lineage-truncating lazy checkpoint — see
-    // Caches.truncate: re-analysis of deep lineage at every downstream
-    // action is the pipeline's serial floor) and shuffled through the
-    // compute stages; the wide row (html binary, timestamps) stays in the
-    // source scan and crosses exactly one shuffle — the final flag join
-    // at emission.
+    // Op1 — signatures (reference Op1: build_read_and_loc_dbs)
     val (sigsAllRaw, gateRejects) = signatures(pages, cfg)
-    val sigsAll = graft.Caches.truncate(sigsAllRaw
+    val sigsAll = held("signatures")(sigsAllRaw
       .select("doc_id", "text", "minhash", "simhash", "reject_reason"))
     val sigs = sigsAll.where($"minhash".isNotNull)
-    val admittedWide = sigsAllRaw.where($"reject_reason".isNull)
+    val sigCols = sigs.select("doc_id", "minhash", "simhash")
+
+    // Op2 — LSH buckets → candidates → verification (reference Op2:
+    // write_to_dup_group_db with the tolerant in-bucket match). Both
+    // candidate frames are lazy: a resume that reloads `scored` never
+    // runs `pairs`, and `overflow` re-counts the buckets from the held
+    // signatures for the report.
+    val (pairs, overflow) = Lsh.candidatePairs(sigCols, cfg)
+    val scored = held("scored")(Lsh.verifyPairs(pairs, sigCols, cfg))
+
+    // Op2b — exact-substring pass (north_star suffix-array analog)
+    val substr = held("substr_edges") {
+      if (cfg.substringPass)
+        SubstringDedup.substringEdges(sigs.select($"doc_id", $"text"), cfg)
+      else spark.emptyDataset[(Long, Long, Double)].toDF("a", "b", "containment")
+    }
+
+    // The two edge sources are independent given the signature stage, so
+    // their first touches run CONCURRENTLY instead of back-to-back inside
+    // CC's first action. Under AQE a truncate hold has already run its
+    // frame's shuffle stages while it was built, on this thread, so what
+    // overlaps here is each branch's final stage. Race discipline (same
+    // as the report futures in [[emit]]): each future first-touches a
+    // DIFFERENT frame, and their shared upstream (sigsAll) is forced
+    // first, on this thread.
+    locally {
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.ExecutionContext.Implicits.global
+      import scala.concurrent.duration.Duration
+      firstTouch(sigsAll)
+      val scoredF = Future(firstTouch(scored))
+      val substrF = Future(firstTouch(substr))
+      Await.result(scoredF, Duration.Inf)
+      Await.result(substrF, Duration.Inf)
+    }
+
+    // Op2c — group merge = connected components (reference put_dup_groups)
+    val edges = scored.where($"verified").select($"a", $"b")
+      .union(substr.select($"a", $"b"))
+    val assign = held("assign")(ConnectedComponents.run(edges))
+
+    // Op3 — winner per cluster (narrow: ids only — no payload in the
+    // winner shuffles)
+    val flags = held("flags")(winnerFlags(sigs, assign, cfg))
+
+    Stages(sigsAllRaw, gateRejects, overflow, sigsAll, scored, substr, assign, flags)
+  }
+
+  /** Emission and report over held stages: the one wide join (flags and
+    * near-miss tags back onto the admitted source rows), the anti/semi
+    * routing into the result frames, and the metrics table. The wide rows
+    * come from the source scan, so every output row is a projection of an
+    * input row whichever hold produced the stages. */
+  private[graft] def emit(st: Stages): DedupResult = {
+    val spark = st.sigsAll.sparkSession
+    import spark.implicits._
+    import st.{sigsAll, scored, substr, flags, overflow}
+
+    val admittedWide = st.sigsAllRaw.where($"reject_reason".isNull)
       .drop("minhash", "simhash", "reject_reason")
     val noContent = admittedWide.join(
       sigsAll.where($"reject_reason".isNull && $"minhash".isNull)
         .select("doc_id"), Seq("doc_id"), "left_semi")
       .withColumn("reject_reason", F.lit("no_content"))
-    val rejects = gateRejects.unionByName(noContent, allowMissingColumns = true)
-    val sigCols = sigs.select("doc_id", "minhash", "simhash")
-
-    // Op2 — LSH buckets → candidates → verification (reference Op2:
-    // write_to_dup_group_db with the tolerant in-bucket match)
-    val (pairs, overflow) = Lsh.candidatePairs(sigCols, cfg)
-    val scored = graft.Caches.truncate(Lsh.verifyPairs(pairs, sigCols, cfg))
-    val verified = scored.where($"verified").select($"a", $"b")
+    val rejects = st.gateRejects.unionByName(noContent, allowMissingColumns = true)
     val nearMisses = scored.where(!$"verified")
-
-    // Op2b — exact-substring pass (north_star suffix-array analog)
-    val substr = graft.Caches.truncate(
-      if (cfg.substringPass)
-        SubstringDedup.substringEdges(sigs.select($"doc_id", $"text"), cfg)
-          .select($"a", $"b")
-      else spark.emptyDataset[(Long, Long)].toDF("a", "b"))
-
-    // Op2c — group merge = connected components (reference put_dup_groups).
-    // The two edge sources are independent given the signature checkpoint,
-    // so their first-touch materializations run CONCURRENTLY instead of
-    // back-to-back inside CC's first action: each branch is a serial chain
-    // of AQE stage-submission round-trips (~21 jobs LSH-verify, ~26
-    // substring), and overlapping the chains removes min(t_lsh, t_substr)
-    // of executor-count-independent latency from every run — on a real
-    // cluster the same submission overlap also fills otherwise-idle
-    // executors. Race discipline (same as the report futures below): each
-    // future first-touches a DIFFERENT lazy checkpoint, and their shared
-    // upstream (sigsAll) is forced to be materialized first, on this
-    // thread.
-    locally {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      if (!org.apache.spark.sql.graftshim.GraftSqlShim.isMaterializedLocalCheckpoint(sigsAll))
-        sigsAll.count()
-      val scoredF = Future(scored.count())
-      val substrF = Future(substr.count())
-      Await.result(scoredF, Duration.Inf)
-      Await.result(substrF, Duration.Inf)
-    }
-    val edges = verified.union(substr)
-    val assign = ConnectedComponents.run(edges) // (id, component)
-
-    // Op3 — winner per cluster (narrow: ids only — no payload in the
-    // winner shuffles)
-    val flags = winnerFlags(sigs, assign, cfg)
 
     // Op5 prep — the ONE wide join: flags back onto full admitted rows.
     // shuffle_hash: the hash table builds from the narrow flags side and
@@ -414,34 +463,25 @@ object DedupPipeline {
     val clusters = flagged.select($"url", $"doc_id", $"cluster_id", $"is_canonical")
 
     // Report — consolidated into 5 aggregate jobs (one per stage frame),
-    // not a count() per counter, with the four that read ALREADY
-    // MATERIALIZED stage checkpoints (sigsAll/scored/substr were forced
-    // by earlier actions; overflow re-counts the band buckets from the
-    // sigsAll checkpoint) submitted
-    // CONCURRENTLY: the driver awaits them together, so their scheduler
-    // round-trips overlap instead of paying serial latencies (on a
-    // cluster the independent jobs also fill otherwise-idle executors).
-    // flagStats stays on the caller thread — it is the FIRST action on
-    // flagged's lazy checkpoint, and concurrent first-touch of an
-    // unmaterialized checkpoint races on its SQL-metric accumulators
-    // (observed: "attempted to access non-existent accumulator"). ALL
-    // gate numbers (pages_total, per-reason rejects, signed/admitted)
-    // come from ONE aggregation of the stage signature frame — no job
-    // ever re-scans the source.
+    // not a count() per counter, with the four that read held stages
+    // (sigsAll/scored/substr, and overflow re-counting the band buckets
+    // from sigsAll) submitted CONCURRENTLY: the driver awaits them
+    // together, so their scheduler round-trips overlap instead of paying
+    // serial latencies (on a cluster the independent jobs also fill
+    // otherwise-idle executors). flagStats stays on the caller thread —
+    // it is the FIRST action on flagged's lazy checkpoint. ALL gate
+    // numbers (pages_total, per-reason rejects, signed/admitted) come
+    // from ONE aggregation of the signature stage — no job ever re-scans
+    // the source.
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
-    // Enforced (not assumed): every frame a future first-touches must be a
-    // MATERIALIZED checkpoint before submission. The guard below is what
-    // keeps that first touch safe: it forces, with a cheap count() on this
-    // thread, whichever of the three no earlier action has (the overlap
-    // block above normally forced all three; ConnectedComponents.run
-    // reads only scored and substr, never sigsAll), so a reordered or
-    // shortened stage path cannot reopen the accumulator race.
-    Seq(sigsAll, scored, substr).foreach { f =>
-      if (!org.apache.spark.sql.graftshim.GraftSqlShim.isMaterializedLocalCheckpoint(f))
-        f.count()
-    }
+    // Enforced (not assumed): no future may first-touch a pending lazy
+    // checkpoint. The stage overlap normally forced all three already
+    // (ConnectedComponents.run reads only scored and substr, never
+    // sigsAll); this guard keeps a reordered or shortened stage path from
+    // reopening the accumulator race.
+    Seq(sigsAll, scored, substr).foreach(firstTouch)
     val gateStatsF = Future(sigsAll.groupBy("reject_reason")
       .agg(F.count(F.lit(1)).as("n"), F.count($"minhash").as("nsig")).collect())
     val pairAggs = Seq(
@@ -491,4 +531,14 @@ object DedupPipeline {
 
     DedupResult(flagged, deduped, duplicates, clusters, nearMisses, rejects, metrics)
   }
+
+  /** Full run. `pages` must have columns (url, text, lang [, warc_ts, html]).
+    *
+    * The [[stages]] graph with every stage held by a lineage-truncating
+    * lazy checkpoint (`Caches.truncate`: re-analysis of deep lineage at
+    * every downstream action is the pipeline's serial floor), then
+    * [[emit]]. `ResumableDedupPipeline.run` is the same graph and the same
+    * emission with stages committed to parquet instead. */
+  def run(pages: DataFrame, cfg: DedupConfig = DedupConfig()): DedupResult =
+    emit(stages(pages, cfg)((_, build) => graft.Caches.truncate(build())))
 }

@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.{functions => F}
 
 import graft.io.StageStore
@@ -10,16 +10,20 @@ import graft.io.StageStore
   * 100k records, dedup.py:594-612; atomic tmp-rename outputs,
   * common.py:601-733), at Spark-stage granularity.
   *
-  * Five committed stages: `signatures`, `scored` (every LSH candidate
-  * pair with its est-Jaccard / Hamming / verified verdict), `substr_edges`,
-  * `assign`, `flags` — the expensive shuffles. A killed job re-run with
-  * the same store reloads every committed stage byte-identically (builders
-  * are not evaluated) and recomputes only what never committed; emission
-  * is derived from the source scan + the `flags` stage, so outputs stay
-  * projections of input rows. Staging the scored pairs (not just the
-  * verified edges) keeps `nearMisses` identical to the non-resumable
-  * pipeline's contract. Lineage (per-partition row counts + checksums)
-  * and metrics land in `_lineage` / `_metrics` tables in the store.
+  * It is `DedupPipeline.run`'s stage graph and emission with one
+  * difference: the hold. The plain run holds each stage in a
+  * lineage-truncating lazy checkpoint; this one commits each stage to the
+  * [[StageStore]] (`runStaged`) — the lineage-vs-checkpoint trade of the
+  * RDD paper, taken at every stage boundary. The five committed stages
+  * are `signatures`, `scored` (every LSH candidate pair with its
+  * est-Jaccard / Hamming / verified verdict), `substr_edges`, `assign`
+  * and `flags`. A killed job re-run with the same store reloads every
+  * committed stage byte-identically (builders are not evaluated) and
+  * recomputes only what never committed. Emission is derived from the
+  * source scan + the `flags` stage, so outputs stay projections of input
+  * rows, and the metrics table is the plain run's (written to the store's
+  * `_metrics` table as well). Lineage (per-partition row counts +
+  * checksums) lands in `_lineage`.
   *
   * Resume safety: the store is bound to a fingerprint of (config, input
   * row count, order-independent url checksum) on first run; re-running
@@ -49,71 +53,10 @@ object ResumableDedupPipeline {
   }
 
   def run(pages: DataFrame, cfg: DedupConfig, store: StageStore): DedupResult = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-
     store.ensureBinding(fingerprint(pages, cfg))
-
-    val (sigsAllRaw, gateRejects) = DedupPipeline.signatures(pages, cfg)
-    val sigsAll = store.runStaged("signatures") {
-      sigsAllRaw.select("doc_id", "text", "minhash", "simhash", "reject_reason")
-    }
-    val sigs = sigsAll.where($"minhash".isNotNull)
-    val sigCols = sigs.select("doc_id", "minhash", "simhash")
-
-    val scored = store.runStaged("scored") {
-      val (pairs, _) = Lsh.candidatePairs(sigCols, cfg)
-      Lsh.verifyPairs(pairs, sigCols, cfg)
-    }
-    val substr = store.runStaged("substr_edges") {
-      if (cfg.substringPass)
-        SubstringDedup.substringEdges(sigs.select($"doc_id", $"text"), cfg)
-      else spark.emptyDataset[(Long, Long, Double)].toDF("a", "b", "containment")
-    }
-    val edges = scored.where($"verified").select($"a", $"b")
-      .union(substr.select($"a", $"b"))
-    val assign = store.runStaged("assign")(ConnectedComponents.run(edges))
-    val flags = store.runStaged("flags")(DedupPipeline.winnerFlags(sigs, assign, cfg))
-
-    // emission — derived, not staged (cheap joins of source rows + flags)
-    val admittedWide = sigsAllRaw.where($"reject_reason".isNull)
-      .drop("minhash", "simhash", "reject_reason")
-    val noContent = admittedWide.join(
-      sigsAll.where($"reject_reason".isNull && $"minhash".isNull)
-        .select("doc_id"), Seq("doc_id"), "left_semi")
-      .withColumn("reject_reason", F.lit("no_content"))
-    val rejects = gateRejects.unionByName(noContent, allowMissingColumns = true)
-    val nearMisses = scored.where(!$"verified")
-    // narrow side builds the hash table; wide rows stream (no payload sort)
-    val flagged = admittedWide.join(flags.hint("shuffle_hash"), "doc_id")
-      .join(DedupPipeline.nearMissTags(nearMisses).hint("shuffle_hash"),
-        Seq("doc_id"), "left")
-    val deduped = flagged.where($"is_canonical")
-      .drop("is_canonical", "is_duplicate", "cluster_id")
-    val duplicates = flagged.where($"is_duplicate")
-      .drop("is_canonical", "is_duplicate")
-    val clusters = flagged.select($"url", $"doc_id", $"cluster_id", $"is_canonical")
-
-    val flagStats = flags.agg(
-      F.count(F.lit(1)),
-      F.coalesce(F.sum(F.when($"is_duplicate", 1L).otherwise(0L)), F.lit(0L))).head()
-    val scoredAggs = Seq(
-      F.count(F.lit(1)),
-      F.coalesce(F.sum(F.when($"verified", 1L).otherwise(0L)), F.lit(0L))) ++
-      DedupPipeline.distanceHistogramAggs
-    val scoredStats = scored.agg(scoredAggs.head, scoredAggs.tail: _*).head()
-    val hists = DedupPipeline.distanceHistogramLabels.zipWithIndex
-      .map { case (l, i) => l -> scoredStats.getLong(i + 2) }
-    val metrics = (Seq(
-      "docs_flagged" -> flagStats.getLong(0),
-      "duplicates_removed" -> flagStats.getLong(1),
-      "candidate_pairs" -> scoredStats.getLong(0),
-      "verified_pairs" -> scoredStats.getLong(1),
-      "near_miss_pairs" -> (scoredStats.getLong(0) - scoredStats.getLong(1)),
-      "substring_pairs" -> substr.count()
-    ) ++ hists).toDF("metric", "value").orderBy("metric")
-    store.writeMetrics(metrics)
-
-    DedupResult(flagged, deduped, duplicates, clusters, nearMisses, rejects, metrics)
+    val result = DedupPipeline.emit(
+      DedupPipeline.stages(pages, cfg)((name, build) => store.runStaged(name)(build())))
+    store.writeMetrics(result.metrics)
+    result
   }
 }

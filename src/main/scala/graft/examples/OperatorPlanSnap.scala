@@ -2,22 +2,23 @@ package graft.examples
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.{functions => F}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
 
-import graft.dedup.{DedupConfig, DedupPipeline, Lsh, SubstringDedup}
+import graft.dedup.{DedupConfig, DedupPipeline}
 import graft.io.SyntheticCorpus
 
 /** Plan captures for operator internals that the query-level snapshots
   * cannot show: q_minhash_lsh_dedup and the flagship pipeline run their
   * LSH/verify/CC machinery eagerly (checkpointed) during query
   * CONSTRUCTION, so plans/r06/q_minhash_* only contains the final
-  * assignment join. This dumps the formatted plans of the operators
-  * themselves — candidate generation (counts → eligibility join) and the
-  * stacked verify join (build side = the pair frame) — over the
-  * synthetic corpus. Usage: runMain graft.examples.OperatorPlanSnap
-  * <outDir> <suffix> [nDocs] */
+  * assignment join. This runs the flagship's stage graph
+  * (`DedupPipeline.stages`) with a hold that dumps the formatted plan of
+  * each stage's builder before truncating it — signatures, scored
+  * (candidate generation + the stacked verify join), substr_edges,
+  * assign, flags — plus the LSH overflow count, over the synthetic
+  * corpus. Files are `op_<stage>_<suffix>.txt`. Usage: runMain
+  * graft.examples.OperatorPlanSnap <outDir> <suffix> [nDocs] */
 object OperatorPlanSnap {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
@@ -30,21 +31,17 @@ object OperatorPlanSnap {
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     val cfg = DedupConfig(allowedLangs = Some(Set("en")))
-    val (sigsAll, _) = DedupPipeline.signatures(SyntheticCorpus.pages(spark, n), cfg)
-    val sigs = graft.Caches.truncate(sigsAll.where(F.col("minhash").isNotNull)
-      .select("doc_id", "text", "minhash", "simhash"))
-    val sigCols = sigs.select("doc_id", "minhash", "simhash")
-    def snap(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
-      Files.writeString(Paths.get(outDir, s"${name}_$suffix.txt"),
+    def snap(name: String, df: DataFrame): Unit = {
+      Files.writeString(Paths.get(outDir, s"op_${name}_$suffix.txt"),
         df.queryExecution.explainString(ExplainMode.fromString("formatted")))
-      println(s"PLAN $name -> $outDir/${name}_$suffix.txt")
+      println(s"PLAN op_$name -> $outDir/op_${name}_$suffix.txt")
     }
-    val (pairs, overflow) = Lsh.candidatePairs(sigCols, cfg)
-    snap("op_lsh_candidatePairs", pairs)
-    snap("op_lsh_overflow", overflow)
-    snap("op_lsh_verifyPairs", Lsh.verifyPairs(pairs, sigCols, cfg))
-    snap("op_substring_edges",
-      SubstringDedup.substringEdges(sigs.select("doc_id", "text"), cfg))
+    val st = DedupPipeline.stages(SyntheticCorpus.pages(spark, n), cfg) { (name, build) =>
+      val df = build()
+      snap(name, df)
+      graft.Caches.truncate(df)
+    }
+    snap("lsh_overflow", st.overflow)
     spark.stop()
   }
 }

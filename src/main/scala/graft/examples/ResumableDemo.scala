@@ -22,7 +22,7 @@ object ResumableDemo {
     spark.sparkContext.setLogLevel("ERROR")
 
     val store = new StageStore(spark, storeDir)
-    Seq("signatures", "edges", "assign", "flags").foreach { s =>
+    Seq("signatures", "scored", "substr_edges", "assign", "flags").foreach { s =>
       println(s"RESUME $s committed=${store.isCommitted(s)}")
     }
     val res = ResumableDedupPipeline.run(

@@ -102,6 +102,47 @@ class ResumableDedupPipelineSpec extends SparkSpec {
     } finally rmRf(root)
   }
 
+  test("metric parity: plain run, cold resumable run, full resume and the store's table agree") {
+    val root = tmpDir()
+    try {
+      // three more copies of page 0 make a 4-page group whose band
+      // buckets exceed a cap of 3: the LSH overflow counters are non-zero,
+      // so the full resume must re-count them from the stored signatures
+      val base = SyntheticCorpus.pages(spark, 600)
+      val page0 = base.where(F.col("url") === "https://example.org/site0/page0")
+      val pages = (1 to 3).map(i => page0.withColumn("url", F.concat(F.col("url"), F.lit(s"-copy$i"))))
+        .foldLeft(base)(_ unionByName _)
+      val capped = cfg.copy(maxBucketSize = 3)
+      def table(df: org.apache.spark.sql.DataFrame): Seq[(String, Long)] =
+        df.collect().map(r => (r.getString(0), r.getLong(1))).toSeq.sorted
+      val plain = DedupPipeline.run(pages, capped)
+      val ref = table(plain.metrics)
+      plain.cleanup()
+      val keys = ref.map(_._1).toSet
+      assert(Set("pages_total", "rejects", "reject_lang", "clusters_multi",
+        "lsh_overflow_buckets", "lsh_overflow_rows").subsetOf(keys))
+      assert(ref.toMap.apply("lsh_overflow_buckets") > 0)
+
+      val store = new StageStore(spark, root.toString)
+      val cold = ResumableDedupPipeline.run(pages, capped, store)
+      assert(table(cold.metrics) === ref)
+      assert(table(store.metrics()) === ref)
+
+      // full resume: every stage is committed, so no builder runs
+      val stages = Seq("signatures", "scored", "substr_edges", "assign", "flags")
+      assert(stages.forall(store.isCommitted))
+      val committed = stages.map(st => st -> Files.getLastModifiedTime(root.resolve(st).resolve("_SUCCESS")).toMillis)
+      val resumed = ResumableDedupPipeline.run(pages, capped, new StageStore(spark, root.toString))
+      assert(table(resumed.metrics) === ref)
+      assert(stages.map(st => st -> Files.getLastModifiedTime(root.resolve(st).resolve("_SUCCESS")).toMillis) === committed)
+      // one table per run, both equal to the plain run's
+      val stored = store.metrics()
+      assert(stored.count() === 2L * ref.size)
+      assert(table(stored.distinct()) === ref)
+      resumed.cleanup()
+    } finally rmRf(root)
+  }
+
   test("store binding: resume with a changed config or input fails fast") {
     val root = tmpDir()
     try {
