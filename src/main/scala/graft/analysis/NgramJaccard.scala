@@ -6,9 +6,10 @@ import org.apache.spark.sql.{functions => F}
 /** N-gram Jaccard pair scoring, two physical forms with identical output:
   *
   *  - [[pairwise]]: blocked all-pairs join + `array_intersect` per pair —
-  *    simple, exact, right when blocks are small (the oracle-checked
-  *    `q_ngram_jaccard_pairs` uses this form).
-  *  - [[indexed]]: inverted-index form — explode n-grams to postings,
+  *    simple, exact, right when blocks are small; the parity reference
+  *    `NgramJaccardSpec` checks [[indexed]] against.
+  *  - [[indexed]]: inverted-index form (the oracle-checked
+  *    `q_ngram_jaccard_pairs` uses this form) — explode n-grams to postings,
   *    count shared grams per pair with one aggregation, left-join the
   *    counts back onto the (small) pair frame. At 10^12 docs this is the
   *    only viable shape: per-pair set intersection touches every n-gram
@@ -30,9 +31,10 @@ object NgramJaccard {
     * codegen'd pass (graft.functions.WordNgrams) — the old higher-order
     * transform/concat_ws/array_distinct chain was CodegenFallback and
     * cost 4.6-6.8 s alone on q_ngram_jaccard_pairs' single sf0.1 scan
-    * task (NgramProbe); identical output incl. first-occurrence order
-    * and the "null text → empty array" coalesce the `when` form had
-    * (parity-tested in TextWindowExpressionsSpec). */
+    * task (round-6 stage attribution, OPTIMIZATION_r06.md §1); identical
+    * output incl. first-occurrence order and the "null text → empty
+    * array" coalesce the `when` form had (parity-tested in
+    * TextWindowExpressionsSpec). */
   def ngrams(text: Column, n: Int): Column =
     F.coalesce(graft.functions.wordNgrams(text, n),
       F.array().cast("array<string>"))

@@ -10,8 +10,11 @@ import graft.functions.HashUtil
   *
   * Defaults follow SURVEY.md §7.1: 9-word shingles, 128 MinHashes in
   * 32 bands × 4 rows, est-Jaccard τ = 0.8. At τ = 0.8 the banding S-curve
-  * gives candidate-recall 1 − (1 − 0.8⁴)³² ≈ 1 − 5·10⁻⁸ — the ≥0.99
-  * dup-pair recall target is met by construction, before verification.
+  * gives candidate-recall 1 − (1 − 0.8⁴)³² ≈ 1 − 5·10⁻⁸ — the ≥0.99 target
+  * is met by construction for CANDIDATE recall only. Verification keeps a
+  * pair when its 128-hash estimate is ≥ τ, a binomial tail: a pair of
+  * true Jaccard 0.80 survives with probability ≈ 0.50, 0.85 with ≈ 0.94,
+  * 0.88 with ≈ 0.995 — dup-pair recall ≥ 0.99 holds only for J ≳ 0.88.
   */
 final case class DedupConfig(
     shingleK: Int = 9,

@@ -242,9 +242,13 @@ object DedupPipeline {
       .where(F.col("_rn") === 1).drop("_rn")
   }
 
-  /** The 16 aggregate columns behind [[distanceHistograms]], exposed so
-    * callers can fold them into an existing pass over the scored pairs
-    * (one aggregation job instead of two). */
+  /** 8-bucket distance histograms over scored candidate pairs as 16
+    * aggregate columns — the analog of the reference's mismatch-distance
+    * report counters (reference/dupliganger/constants.py:67-88,
+    * incremented at dedup.py:442-458): est-Jaccard bucket =
+    * min(floor(est·8), 7), SimHash-Hamming bucket = min(hamming, 7).
+    * [[emit]] folds them into its one aggregation over the scored pairs,
+    * next to the candidate and verified counts. */
   def distanceHistogramAggs: Seq[org.apache.spark.sql.Column] =
     (0 until 8).map(b => F.coalesce(F.sum(F.when(
       F.least(F.floor(F.col("est_jaccard") * 8), F.lit(7L)) === b, 1L)
@@ -257,17 +261,6 @@ object DedupPipeline {
   val distanceHistogramLabels: Seq[String] =
     (0 until 8).map(b => s"hist_est_jaccard_$b") ++
       (0 until 8).map(b => s"hist_sim_hamming_$b")
-
-  /** 8-bucket distance histograms over scored candidate pairs — the
-    * analog of the reference's mismatch-distance report counters
-    * (reference/dupliganger/constants.py:67-88, incremented at
-    * dedup.py:442-458): est-Jaccard bucket = min(floor(est·8), 7),
-    * SimHash-Hamming bucket = min(hamming, 7). */
-  def distanceHistograms(scored: DataFrame): Seq[(String, Long)] = {
-    val aggs = distanceHistogramAggs
-    val row = scored.agg(aggs.head, aggs.tail: _*).head()
-    distanceHistogramLabels.zipWithIndex.map { case (l, i) => l -> row.getLong(i) }
-  }
 
   /** Winner flags per doc: (doc_id, cluster_id, is_canonical,
     * is_duplicate) from a cluster assignment (id, component). Pure hash
@@ -393,25 +386,6 @@ object DedupPipeline {
       else spark.emptyDataset[(Long, Long, Double)].toDF("a", "b", "containment")
     }
 
-    // The two edge sources are independent given the signature stage, so
-    // their first touches run CONCURRENTLY instead of back-to-back inside
-    // CC's first action. Under AQE a truncate hold has already run its
-    // frame's shuffle stages while it was built, on this thread, so what
-    // overlaps here is each branch's final stage. Race discipline (same
-    // as the report futures in [[emit]]): each future first-touches a
-    // DIFFERENT frame, and their shared upstream (sigsAll) is forced
-    // first, on this thread.
-    locally {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      firstTouch(sigsAll)
-      val scoredF = Future(firstTouch(scored))
-      val substrF = Future(firstTouch(substr))
-      Await.result(scoredF, Duration.Inf)
-      Await.result(substrF, Duration.Inf)
-    }
-
     // Op2c — group merge = connected components (reference put_dup_groups)
     val edges = scored.where($"verified").select($"a", $"b")
       .union(substr.select($"a", $"b"))
@@ -477,10 +451,10 @@ object DedupPipeline {
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
     // Enforced (not assumed): no future may first-touch a pending lazy
-    // checkpoint. The stage overlap normally forced all three already
-    // (ConnectedComponents.run reads only scored and substr, never
-    // sigsAll); this guard keeps a reordered or shortened stage path from
-    // reopening the accumulator race.
+    // checkpoint. CC's first job normally forces scored and substr; this
+    // guard forces whatever is still pending (sigsAll, which CC reads only
+    // through them) on this thread, and keeps a reordered or shortened
+    // stage path from reopening the accumulator race.
     Seq(sigsAll, scored, substr).foreach(firstTouch)
     val gateStatsF = Future(sigsAll.groupBy("reject_reason")
       .agg(F.count(F.lit(1)).as("n"), F.count($"minhash").as("nsig")).collect())

@@ -113,10 +113,10 @@ object WindowedMinQuality {
   * CodegenFallback: every gram walked an interpreted
   * transform/element_at/concat_ws/array_distinct tree — measured 4.6-6.8 s
   * for 250k grams on the single scan task q_ngram_jaccard_pairs reads
-  * (NgramProbe, sf0.1); this is one pass with a dedup set. Fewer than n
-  * tokens yields an empty array; null propagates (callers that need the
-  * old "null text → empty array" coalesce at the column level —
-  * see NgramJaccard.ngrams). */
+  * (sf0.1, round-6 measurement, OPTIMIZATION_r06.md §1); this is one pass
+  * with a dedup set. Fewer than n tokens yields an empty array; null
+  * propagates (callers that need the old "null text → empty array"
+  * coalesce at the column level — see NgramJaccard.ngrams). */
 case class WordNgrams(child: Expression, n: Int) extends UnaryExpression {
   require(n >= 1, s"n-gram n must be >= 1, got $n")
 

@@ -11,13 +11,7 @@ import graft.dedup.{DedupConfig, Lsh}
   * the state encoder's generated code needs a public constructor.) */
 final case class SeenState(firstUrl: String)
 
-/** One LSH-bucket member held in streaming state. */
-final case class BucketMember(id: Long, minhash: Array[Long], tsMs: Long)
-
-/** Per-bucket streaming state: recent members within the watermark. */
-final case class BucketState(members: Array[BucketMember])
-
-/** One LSH-bucket member in the KEYED variant's state: id + event time
+/** One LSH-bucket member in near-dup streaming state: id + event time
   * only — the signature lives in the doc_id-keyed join state instead. */
 final case class IdMember(id: Long, tsMs: Long)
 
@@ -27,10 +21,6 @@ final case class BucketIdState(members: Array[IdMember])
 /** An unverified streaming candidate pair (id_a < id_b; ts = the newer
   * member's event time). */
 final case class StreamCandidate(id_a: Long, id_b: Long, ts: java.sql.Timestamp)
-
-/** A verified streaming near-dup pair (id_a < id_b). */
-final case class StreamPair(id_a: Long, id_b: Long, est_jaccard: Double,
-                            ts: java.sql.Timestamp)
 
 /** Streaming ingestion dedup — the event-time re-expression of the
   * reference's "second scan + dup_db membership check" emission pass
@@ -74,7 +64,7 @@ object StreamingDedup {
     }
   }
 
-  /** Cross-band pair dedup for the near-dup pair streams: one emission
+  /** Cross-band pair dedup for the near-dup pair stream: one emission
     * per (id_a, id_b) per watermark window — the streaming analog of the
     * batch pass's `distinct()`, folded onto the operator output
     * ([[nearDupPairsStreamKeyed]] emits once per SHARED band bucket
@@ -83,7 +73,7 @@ object StreamingDedup {
     * output does — re-declaring one here would be a disallowed watermark
     * redefinition). Adds a stateful operator behind the candidate fMGWS,
     * so the chained query must start inside
-    * [[withStatefulCheckDisabled]] — sound for the keyed variant, whose
+    * [[withStatefulCheckDisabled]] — sound because the keyed operator's
     * emitted `ts` is provably ≥ the watermark. */
   def distinctPairs(pairs: DataFrame): DataFrame =
     pairs.dropDuplicatesWithinWatermark("id_a", "id_b")
@@ -140,153 +130,42 @@ object StreamingDedup {
   }
 
   /** Streaming NEAR-duplicate detection — the event-time form of the
-    * batch LSH pass, sharing its exact signature/banding expressions
-    * (`minhash`, `Lsh.bandBuckets`, same `DedupConfig`): an arriving
-    * page's signature lands in its band buckets; per-bucket state holds
-    * the most recent `maxBucketState` members within the watermark; the
-    * arrival is verified (est-Jaccard ≥ τ, computed from the full
-    * signatures, exactly the batch semantics) against those members and
-    * qualifying pairs are emitted as (id_a, id_b, est_jaccard).
-    *
-    * Scale discipline (10^12-docs/day ingestion):
-    *  - state is keyed by bucket and bounded twice: event-time timeout
-    *    drops whole buckets past the watermark, and `maxBucketState` caps
-    *    a boilerplate mega-bucket (the streaming twin of the batch
-    *    `maxBucketSize` — overflow degrades recall, never memory).
-    *  - a pair sharing several bands emits once per SHARED BAND BUCKET
-    *    (state is per-bucket; buckets cannot see each other's emissions —
-    *    an exact copy can emit up to `bands` times in one micro-batch)
-    *    and can emit again in later batches. Consumers needing distinct
-    *    pairs route through `dropDuplicatesWithinWatermark(id_a, id_b)`
-    *    downstream — the streaming analog of the batch pass's
-    *    `distinct()`.
-    *  - state carries the full signature once per band (a `bands`×
-    *    amplification); a flagship-scale deployment would keep signatures
-    *    in a doc_id-keyed store and only (doc_id, ts) per bucket —
-    *    documented trade-off for a single self-contained operator.
-    *
-    * Input: (url, text, event-time) columns; ids are `xxhash64(seed, url)`
-    * as in the batch pipeline. */
-  def nearDupPairsStream(docs: DataFrame, tsCol: String, watermark: String,
-                         cfg: DedupConfig = DedupConfig(),
-                         maxBucketState: Int = 64): Dataset[StreamPair] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    import graft.functions.{minhash, shingles}
-    val keyed = docs
-      .select(
-        F.xxhash64(F.lit(cfg.seed), F.col("url")).as("doc_id"),
-        minhash(shingles(F.col("text"), cfg.shingleK, cfg.seed),
-          cfg.numHashes, cfg.seed).as("minhash"),
-        F.col(tsCol).cast("timestamp").as("ts"))
-      .where(F.col("minhash").isNotNull)
-      .withWatermark("ts", watermark)
-      .select(F.col("doc_id"), F.col("minhash"), F.col("ts"),
-        F.explode(Lsh.bandBuckets(F.col("minhash"), cfg.bands, cfg.rowsPerBand))
-          .as("bucket"))
-      .as[(Long, Array[Long], java.sql.Timestamp, Long)]
-      .groupByKey(_._4)
-
-    def estJ(a: Array[Long], b: Array[Long]): Double = {
-      var eq = 0; var i = 0
-      while (i < a.length) { if (a(i) == b(i)) eq += 1; i += 1 }
-      eq.toDouble / a.length
-    }
-
-    keyed.flatMapGroupsWithState(
-      OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-      (bucket: Long, rows: Iterator[(Long, Array[Long], java.sql.Timestamp, Long)],
-       state: GroupState[BucketState]) =>
-        if (state.hasTimedOut) { state.remove(); Iterator.empty }
-        else {
-          val wmMs = state.getCurrentWatermarkMs()
-          var members = state.getOption.map(_.members).getOrElse(Array.empty)
-            .filter(_.tsMs >= wmMs) // evict past-watermark members eagerly
-          // In-batch twin of maxBucketState: a mega-bucket burst within ONE
-          // micro-batch must degrade recall, never memory — keep only the
-          // batchCap smallest (ts, id) arrivals via a bounded max-heap
-          // (deterministic selection), instead of materializing them all.
-          val batchCap = maxBucketState * 4
-          val heap = scala.collection.mutable.PriorityQueue
-            .empty[(Long, Array[Long], java.sql.Timestamp)](
-              Ordering.by(r => (r._3.getTime, r._1)))
-          rows.foreach { case (id, mh, ts, _) =>
-            heap.enqueue((id, mh, ts))
-            if (heap.size > batchCap) heap.dequeue()
-          }
-          val sorted = heap.dequeueAll.reverse // ascending (ts, id)
-          val out = Vector.newBuilder[StreamPair]
-          val seenInBatch = scala.collection.mutable.HashSet.empty[(Long, Long)]
-          sorted.foreach { case (id, mh, ts) =>
-            members.foreach { m =>
-              if (m.id != id) {
-                val j = estJ(m.minhash, mh)
-                if (j >= cfg.tau) {
-                  val pair = (math.min(m.id, id), math.max(m.id, id))
-                  if (seenInBatch.add(pair))
-                    out += StreamPair(pair._1, pair._2, j, ts)
-                }
-              }
-            }
-            if (!members.exists(_.id == id)) {
-              members = (members :+ BucketMember(id, mh, ts.getTime))
-              if (members.length > maxBucketState)
-                members = members.sortBy(m => (-m.tsMs, m.id)).take(maxBucketState)
-            }
-          }
-          state.update(BucketState(members))
-          state.setTimeoutTimestamp(
-            math.max(wmMs + 1, members.map(_.tsMs).max), watermark)
-          out.result().iterator
-        }
-    }
-  }
-
-  /** Estimated Jaccard between two equal-length MinHash signature columns:
-    * fraction of agreeing positions — the batch `Lsh.verifyPairs` formula
-    * as a single codegen'd expression. */
-  def estJaccardCol(a: org.apache.spark.sql.Column,
-                    b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    F.aggregate(F.zip_with(a, b, (x, y) => F.when(x === y, 1L).otherwise(0L)),
-      F.lit(0L), _ + _).cast("double") / F.size(a)
-
-  /** Streaming near-dup with the doc_id-KEYED signature store — the
-    * 10^12-docs/day layout. [[nearDupPairsStream]] holds the full
-    * `numHashes`-long signature once per band bucket (a `bands`× ≈ 32×
-    * state amplification); here the bucket operator's state is ids-only
-    * (16 bytes/member vs ~1 KiB) and signatures live in the doc_id-keyed
-    * state of two stream-stream verification joins — stored ~2× total,
-    * independent of `bands`:
+    * batch LSH pass, sharing its exact signature/banding/verification
+    * expressions (`minhash`, `Lsh.bandBuckets`, `estJaccard`, same
+    * `DedupConfig`). The 10^12-docs/day layout: the bucket operator's
+    * state is ids-only (16 bytes/member, never the ~1 KiB signature once
+    * per band) and signatures live in the doc_id-keyed state of two
+    * stream-stream verification joins — stored ~2× total, independent of
+    * `bands`:
     *
     *  1. CANDIDATES — `flatMapGroupsWithState` keyed by band bucket, state
     *     = recent (doc_id, ts) members, same double bounding as the batch
     *     cap discipline (event-time timeout + `maxBucketState` + in-batch
-    *     heap cap); emits unverified (id_a, id_b, ts) pairs.
+    *     heap cap — overflow degrades recall, never memory); emits
+    *     unverified (id_a, id_b, ts) pairs.
     *  2. VERIFY — the candidate stream re-watermarks on its `ts` and
     *     equi-joins the signature stream twice (id_a, then id_b) under a
     *     time-interval bound (signature ts within [cand ts − delay,
     *     cand ts]), so join state evicts with the watermark; est-Jaccard
     *     ≥ τ filters exactly as in the batch pass.
     *
-    * SEMANTIC DIVERGENCE from [[nearDupPairsStream]] (by design): the
-    * verify interval spans exactly one watermark delay, so a candidate
-    * pair whose two members' event times lie MORE than `watermark` apart
-    * — possible when an arrival jumps far ahead of watermark + delay
-    * while the older member still sits in bucket state — is dropped here
-    * (the older signature falls outside [cts − watermark, cts]), whereas
-    * the self-contained variant, whose signatures ride inside bucket
-    * state, emits it. This is the price of watermark-bounded join state:
-    * widening the interval would hold signature state beyond the
-    * watermark. Pairs within one watermark interval — the contract the
-    * operator promises — verify identically in both variants.
+    * Watermark-interval contract: pairs whose members' event times lie
+    * within one `watermark` delay verify exactly as the batch pass would.
+    * A candidate pair whose members lie MORE than `watermark` apart —
+    * possible when an arrival jumps far ahead while the older member
+    * still sits in bucket state — is dropped (the older signature falls
+    * outside [cts − watermark, cts]): widening the interval would hold
+    * signature state beyond the watermark.
     *
-    * Same emission contract as [[nearDupPairsStream]]: a pair sharing
-    * several bands can emit once per shared band bucket; chain
+    * Emission: a pair sharing several bands can emit once per shared band
+    * bucket (buckets cannot see each other's emissions); chain
     * [[distinctPairs]] for one emission per pair per watermark window
     * (the batch pass's `distinct()`). Input contract as in the batch
-    * pipeline: url is THE document key — a url re-crawled within the
-    * watermark window fans out the verify joins (route re-crawls
-    * through ingest dedup first, as batch callers do via dedupeByUrl).
+    * pipeline: (url, text, event-time) columns, ids are
+    * `xxhash64(seed, url)`, and url is THE document key — a url
+    * re-crawled within the watermark window fans out the verify joins
+    * (route re-crawls through ingest dedup first, as batch callers do via
+    * dedupeByUrl).
     *
     * REQUIRES the stateful-operator correctness check disabled AT QUERY
     * START — use [[withStatefulCheckDisabled]], which scopes the conf to
@@ -303,7 +182,7 @@ object StreamingDedup {
                               maxBucketState: Int = 64): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    import graft.functions.{minhash, shingles}
+    import graft.functions.{estJaccard, minhash, shingles}
     val sigs = docs
       .select(
         F.xxhash64(F.lit(cfg.seed), F.col("url")).as("doc_id"),
@@ -329,7 +208,11 @@ object StreamingDedup {
         else {
           val wmMs = state.getCurrentWatermarkMs()
           var members = state.getOption.map(_.members).getOrElse(Array.empty)
-            .filter(_.tsMs >= wmMs)
+            .filter(_.tsMs >= wmMs) // evict past-watermark members eagerly
+          // In-batch twin of maxBucketState: a mega-bucket burst within ONE
+          // micro-batch must degrade recall, never memory — keep only the
+          // batchCap smallest (ts, id) arrivals via a bounded max-heap
+          // (deterministic selection), instead of materializing them all.
           val batchCap = maxBucketState * 4
           val heap = scala.collection.mutable.PriorityQueue
             .empty[(Long, java.sql.Timestamp)](Ordering.by(r => (r._2.getTime, r._1)))
@@ -392,7 +275,7 @@ object StreamingDedup {
         F.expr(s"ts_a BETWEEN cts - INTERVAL $watermark AND cts"))
       .join(sb, F.col("id_b") === F.col("b_id") &&
         F.expr(s"ts_b BETWEEN cts - INTERVAL $watermark AND cts"))
-      .withColumn("est_jaccard", estJaccardCol(F.col("mh_a"), F.col("mh_b")))
+      .withColumn("est_jaccard", estJaccard(F.col("mh_a"), F.col("mh_b")))
       .where(F.col("est_jaccard") >= cfg.tau)
       .select(F.col("id_a"), F.col("id_b"), F.col("est_jaccard"),
         F.col("cts").as("ts"))

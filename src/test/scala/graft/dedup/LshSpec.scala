@@ -122,10 +122,9 @@ class LshSpec extends SparkSpec {
     sigs.unpersist()
   }
 
-  test("auto picks salted on a planted mega-bucket, output-identical, calm pairs intact") {
-    // the former size-probed "auto" default switched to the salted form on
-    // a bucket this hot; the engine's one form (what "auto" now runs) must
-    // emit the salted and window forms' pairs and overflow counts here
+  test("planted mega-bucket at cap 2 matches the window and salted references, calm pairs intact") {
+    // the engine's one form must emit the window and salted reference
+    // forms' pairs and overflow counts on a bucket 15× over the cap
     val sigs = plantedSigs.cache()
     val got = engine(sigs, cap = 2)
     assert(got._1 === plantedPairs) // calm pairs intact, mega dropped

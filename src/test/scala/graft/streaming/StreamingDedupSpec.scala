@@ -56,51 +56,83 @@ class StreamingDedupSpec extends SparkSpec {
     assert(rows === Map("a1" -> false, "a2" -> true, "a3" -> false, "a4" -> true))
   }
 
-  test("nearDupPairsStream: near-dups found across micro-batches, unrelated pages are not") {
+  test("nearDupPairsStreamKeyed: 3 shuffled micro-batches emit exactly the brute-force band + est-Jaccard pair oracle") {
     val spark2 = spark
     import spark2.implicits._
     implicit val sqlCtx = spark.sqlContext
-    import graft.dedup.DedupConfig
+    import graft.dedup.{DedupConfig, Lsh}
+    import graft.functions.{minhash, shingles}
     import graft.io.SyntheticCorpus
+    import org.apache.spark.sql.{functions => F}
 
-    // planted corpus rows streamed with synthetic event times: id 16 is a
-    // near-dup (1-2 word edits) of id 11, id 14 an exact copy of id 13
-    def page(id: Long, min: Int): (String, String, Timestamp) = {
-      val p = SyntheticCorpus.pageAt(42L, id)
-      (p.url, p.text, ts(min))
-    }
+    // 200 planted pages (exact, near and substring copies among them),
+    // arriving in a shuffled order with shuffled event times: a later
+    // batch often brings the OLDER member of a pair. All event times lie
+    // inside one watermark, so the operator promises every pair.
     val cfg = DedupConfig(allowedLangs = None)
+    val rnd = new scala.util.Random(7)
+    val minutes = rnd.shuffle((0 until 200).toVector)
+    val arrivals = rnd.shuffle((0 until 200).toVector).map { i =>
+      val p = SyntheticCorpus.pageAt(42L, i.toLong)
+      (p.url, p.text, ts(minutes(i)))
+    }
+    val batches = arrivals.grouped(67).toSeq
+    assert(batches.length === 3)
+
+    // oracle: batch signatures and band buckets, every pair brute-forced
+    val sigRows = arrivals.toDF("url", "text", "ts")
+      .select($"url", F.xxhash64(F.lit(cfg.seed), $"url").as("doc_id"),
+        minhash(shingles($"text", cfg.shingleK, cfg.seed), cfg.numHashes, cfg.seed)
+          .as("minhash"))
+      .where($"minhash".isNotNull)
+      .select($"url", $"doc_id", $"minhash",
+        Lsh.bandBuckets($"minhash", cfg.bands, cfg.rowsPerBand).as("buckets"))
+      .as[(String, Long, Array[Long], Array[Long])].collect()
+    val maxBucketState = 64
+    val bucketSizes = sigRows.flatMap { case (_, id, _, bs) => bs.distinct.map(_ -> id) }
+      .groupBy(_._1).values.map(_.length)
+    assert(bucketSizes.max <= maxBucketState, "the cap would bias the comparison")
+    val oracle = (for {
+      i <- sigRows.indices; j <- sigRows.indices if i < j
+      (_, ia, ma, ba) = sigRows(i); (_, ib, mb, bb) = sigRows(j)
+      if ba.exists(bb.contains)
+      est = ma.indices.count(k => ma(k) == mb(k)).toDouble / ma.length
+      if est >= cfg.tau
+    } yield (math.min(ia, ib), math.max(ia, ib)) -> est).toMap
+    assert(oracle.size >= 20, s"too few planted pairs: ${oracle.size}")
+
+    // the ordering the candidate stamp must survive: some pair's later
+    // arrival carries the older event time
+    val urlOf = sigRows.map(r => r._2 -> r._1).toMap
+    val arrival = batches.zipWithIndex.flatMap { case (b, k) =>
+      b.map(r => r._1 -> (k, r._3.getTime)) }.toMap
+    assert(oracle.keys.exists { case (a, b) =>
+      val ((ka, ta), (kb, tb)) = (arrival(urlOf(a)), arrival(urlOf(b)))
+      ka != kb && (ka < kb) == (ta > tb)
+    }, "no pair has its later arrival older in event time")
+
     val input = MemoryStream[(String, String, Timestamp)]
     val docs = input.toDF().toDF("url", "text", "ts")
-    val q = StreamingDedup.nearDupPairsStream(docs, "ts", "30 minutes", cfg)
-      .writeStream.format("memory").queryName("near_out")
-      .outputMode("append").start()
-
-    input.addData(page(11, 0), page(13, 1), page(0, 1), page(1, 2))
-    q.processAllAvailable()
-    // the dups arrive in LATER micro-batches → found via bucket state
-    input.addData(page(16, 3), page(14, 4))
-    q.processAllAvailable()
+    val q = StreamingDedup.withStatefulCheckDisabled(spark) {
+      StreamingDedup.distinctPairs(
+        StreamingDedup.nearDupPairsStreamKeyed(docs, "ts", "6 hours", cfg, maxBucketState))
+        .writeStream.format("memory").queryName("near_oracle_out")
+        .outputMode("append").start()
+    }
+    batches.foreach { b => input.addData(b); q.processAllAvailable() }
     q.stop()
 
-    val ids = spark.table("near_out").collect()
-      .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
-    // doc ids are xxhash64(seed, url) — recompute for the planted pages
-    val hash = Seq(11L, 13L, 16L, 14L).map { i =>
-      i -> spark.sql(
-        s"SELECT xxhash64(${cfg.seed}L, '${SyntheticCorpus.pageAt(42L, i).url}')")
-        .head().getLong(0)
-    }.toMap
-    def pair(a: Long, b: Long) =
-      (math.min(hash(a), hash(b)), math.max(hash(a), hash(b)))
-    assert(ids.contains(pair(11, 16)), s"missing near pair in $ids")
-    assert(ids.contains(pair(13, 14)), s"missing exact pair in $ids")
-    assert(ids.size === 2, s"unexpected extra pairs: $ids")
-    val js = spark.table("near_out").collect().map(_.getAs[Double]("est_jaccard"))
-    assert(js.forall(_ >= cfg.tau))
+    val rows = spark.table("near_oracle_out")
+      .select("id_a", "id_b", "est_jaccard").as[(Long, Long, Double)].collect()
+    assert(rows.length === rows.map(r => (r._1, r._2)).distinct.length,
+      "a pair was emitted twice")
+    val got = rows.map(r => (r._1, r._2) -> r._3).toMap
+    assert(got.keySet -- oracle.keySet === Set.empty, "pairs the oracle does not have")
+    assert(oracle.keySet -- got.keySet === Set.empty, "oracle pairs the stream missed")
+    assert(got === oracle)
   }
 
-  test("nearDupPairsStreamKeyed: ids-only bucket state finds the same pairs as the signature-in-bucket variant") {
+  test("nearDupPairsStreamKeyed: cross-batch discovery, an out-of-order partner, one emission per pair") {
     val spark2 = spark
     import spark2.implicits._
     implicit val sqlCtx = spark.sqlContext
