@@ -23,9 +23,10 @@ import graft.io.SyntheticCorpus
   *    smaller corpus, thread-mode levels), so the compute-vs-DRAM-bound
   *    split is data in the JSON rather than prose in BENCH.md.
   *
-  * Both levels run identical per-executor configuration — constant
-  * `spark.memory.fraction` 0.6, constant per-executor memory, same
-  * partitions — so no per-level knob can differentially shape the ratio
+  * Both levels run identical per-executor configuration — Spark's
+  * default `spark.memory.fraction` (0.6), constant per-executor memory,
+  * the same partitions (`Sessions`' max(n, 8) is 8 at both default
+  * levels) — so no per-level knob can differentially shape the ratio
   * beyond what adding executors brings on a real cluster; the recorded
   * per-level SPILL totals are the detector for memory starvation at
   * either width (observed: the first cluster-mode runs left
@@ -50,24 +51,16 @@ object Bench {
     }
   }
 
-  private def session(cores: Int, fraction: Double = 0.6): SparkSession = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val localDir = sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/spark-local")
-    Files.createDirectories(Paths.get(localDir))
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-bench-$cores")
-      .config("spark.sql.shuffle.partitions", math.max(cores, 8).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.memory.fraction", fraction.toString)
-      .config("spark.local.dir", localDir) // tmpfs: shuffle files cost memcpy, not fs journaling
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+  /** Shuffle and spill files go to tmpfs: they cost memcpy, not fs
+    * journaling. */
+  private lazy val localDir: String = {
+    val d = sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/spark-local")
+    Files.createDirectories(Paths.get(d))
+    d
   }
+
+  private def session(cores: Int): SparkSession =
+    Sessions.local(cores, s"graft-bench-$cores", "spark.local.dir" -> localDir)
 
   private val benchStart = System.nanoTime()
   private def elapsedSec: Double = (System.nanoTime() - benchStart) / 1e9
@@ -102,10 +95,6 @@ object Bench {
     * cluster-mode on identical code and corpus). Executor JVMs find the
     * engine classes via this class's own code-source path. */
   private def clusterSession(executors: Int): SparkSession = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val localDir = sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/spark-local")
-    Files.createDirectories(Paths.get(localDir))
     val memMb = sys.env.getOrElse("SPARK_GRAFT_EXEC_MB", "8192").toInt
     val classesDir = getClass.getProtectionDomain.getCodeSource.getLocation.getPath
     val addOpens = Seq(
@@ -133,13 +122,9 @@ object Bench {
     // (~2 GB/executor here): measured 16.8 s vs 19.4 s (full -Xms) vs
     // 25-35 s (in-bench, full -Xms) at 25k docs / 4 executors. The 12k
     // in-session warmup run pays the first growth untimed.
-    val s = SparkSession.builder()
-      .master(s"local-cluster[$executors,1,$memMb]")
-      .appName(s"graft-bench-cluster-$executors")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.memory.fraction", "0.6")
-      .config("spark.local.dir", localDir)
+    Sessions.local(executors, s"graft-bench-cluster-$executors",
+      "spark.master" -> s"local-cluster[$executors,1,$memMb]",
+      "spark.local.dir" -> localDir,
       // Delay scheduling buys nothing on a single host — every executor is
       // node-local to every block — but it DOES idle free slots at the
       // multi-executor level (cached tracked frames + reduce-side
@@ -147,16 +132,10 @@ object Bench {
       // elsewhere then waits up to 3s per locality tier; the 1-executor
       // level is trivially all-local and never waits). Same value at both
       // levels; measured min-of-2 at 30k docs / 4 executors: 18.4 → 16.6 s.
-      .config("spark.locality.wait", "0s")
-      .config("spark.executor.memory", s"${memMb}m")
-      .config("spark.executor.extraClassPath", classesDir)
-      .config("spark.executor.extraJavaOptions",
-        s"$addOpens -Xms512m")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+      "spark.locality.wait" -> "0s",
+      "spark.executor.memory" -> s"${memMb}m",
+      "spark.executor.extraClassPath" -> classesDir,
+      "spark.executor.extraJavaOptions" -> s"$addOpens -Xms512m")
   }
 
   /** Fallback knob: SPARK_GRAFT_SCALE_MODE=threads restores the round-4
@@ -185,9 +164,7 @@ object Bench {
   }
 
   private def closeLevel(spark: SparkSession): Unit = {
-    spark.stop()
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
+    Sessions.stop(spark)
     // one full GC between sessions: the stopped session's cached blocks
     // and shuffle buffers otherwise age into the next timed run's heap
     System.gc()
@@ -462,9 +439,7 @@ object Bench {
       df
     }
     Caches.release(spark)
-    spark.stop()
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
+    Sessions.stop(spark)
     out.toSeq
   }
 
@@ -596,7 +571,7 @@ object Bench {
     def dpsBig = bestDocs / tBig
 
     // -- 2. headline queries ------------------------------------------------
-    val spark = session(cpus, 0.6)
+    val spark = session(cpus)
     // Untimed warmup pass over the SAME queries at a smaller SF before the
     // timed pass: first-touch costs — JIT of the analysis/codegen paths the
     // scaling pipeline never exercises (ANN, embeddings, n-gram scoring),
@@ -648,7 +623,7 @@ object Bench {
     }
     val total = results.map(_._2).sum
     Caches.release(spark)
-    spark.stop()
+    Sessions.stop(spark)
 
     // -- 2b. bonus scaling pairs: the ratio is the round's tightest
     // criterion and min-of-walls sharpens with samples, so leftover
@@ -815,8 +790,8 @@ object Bench {
          |than not at all — a smaller clean pair costs a few hundredths of
          |efficiency (serial-floor Amdahl term), an unprotected single
          |sample under CPU steal has cost 0.4 (round-4 record).
-         |Both levels run IDENTICAL configuration — constant
-         |`spark.memory.fraction` 0.6, same partitioning — so no per-level
+         |Both levels run IDENTICAL configuration — Spark's default
+         |`spark.memory.fraction` (0.6), same partitioning — so no per-level
          |knob can shape the ratio; the spill column is the detector for
          |the one thing a shared heap could hide (memory starvation at
          |either width). Min walls at the recorded size ($bestDocs docs):

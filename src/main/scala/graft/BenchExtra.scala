@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Extra benchmark main (guide §1.4) — NOT the driver's harness
   * (`graft.Bench` is frozen): times named SparkEntry queries (all if none
   * named) on an sf dir with the noop sink, repeated `SPARK_GRAFT_EXTRA_REPS`
@@ -18,12 +16,7 @@ object BenchExtra {
                 else SparkEntry.queries.keys.toSeq.sorted
     val reps = sys.env.getOrElse("SPARK_GRAFT_EXTRA_REPS", "2").toInt
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", math.max(cpus, 8).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(cpus, "graft-bench-extra")
 
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_EXTRA_WARMUP_DIR", "/root/testdata/sf0.001")
     if (warmDir != sfDir && java.nio.file.Files.isDirectory(java.nio.file.Paths.get(warmDir))) {
@@ -51,6 +44,6 @@ object BenchExtra {
       n -> samples.min
     }
     println(f"EXTRA_TOTAL min-sum=${out.map(_._2).sum}%.3f over ${out.size} queries, reps=$reps")
-    spark.stop()
+    Sessions.stop(spark)
   }
 }

@@ -22,7 +22,6 @@ final case class DedupConfig(
     bands: Int = 32,
     rowsPerBand: Int = 4,
     tau: Double = 0.8,
-    simhashMaxHamming: Int = 3,
     /** Band buckets larger than this are dropped from pair generation
       * (boilerplate mega-buckets); dropped volume is reported in metrics.
       * The hot-bucket cap from SURVEY.md §4. */

@@ -1,14 +1,11 @@
 package graft.examples
-import org.apache.spark.sql.SparkSession
+import graft.Sessions
 /** Replicates the driver's smoke check: SparkEntry.entry(spark).count > 0. */
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(4, "graft-entry-smoke")
     val n = graft.SparkEntry.entry(spark).count()
     println(s"ENTRY-ROWS=$n")
-    spark.stop()
+    Sessions.stop(spark)
   }
 }

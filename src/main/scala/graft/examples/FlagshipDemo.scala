@@ -1,6 +1,7 @@
 package graft.examples
 
-import org.apache.spark.sql.{SparkSession, functions => F}
+import org.apache.spark.sql.{functions => F}
+import graft.Sessions
 import graft.dedup.{DedupConfig, DedupPipeline}
 import graft.io.SyntheticCorpus
 
@@ -12,13 +13,8 @@ import graft.io.SyntheticCorpus
 object FlagshipDemo {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(2000L)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[8]"))
-      .appName("graft-flagship-demo")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(8, "graft-flagship-demo",
+      sys.env.get("SPARK_GRAFT_MASTER").map("spark.master" -> _).toSeq: _*)
 
     // SQL surface: every custom expression callable from spark.sql
     graft.functions.GraftFunctions.register(spark)
@@ -57,6 +53,6 @@ object FlagshipDemo {
     catch { case e: IllegalArgumentException => println("CFG-ERR: " + e.getMessage) }
 
     println("FLAGSHIP-DEMO-DONE")
-    spark.stop()
+    Sessions.stop(spark)
   }
 }

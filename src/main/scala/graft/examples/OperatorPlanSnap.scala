@@ -2,9 +2,10 @@ package graft.examples
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ExplainMode
 
+import graft.Sessions
 import graft.dedup.{DedupConfig, DedupPipeline}
 import graft.io.SyntheticCorpus
 
@@ -24,11 +25,7 @@ object OperatorPlanSnap {
     val outDir = args(0)
     val suffix = args(1)
     val n = if (args.length > 2) args(2).toLong else 20000L
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(4, "graft-operator-plan-snap")
     Files.createDirectories(Paths.get(outDir))
     val cfg = DedupConfig(allowedLangs = Some(Set("en")))
     def snap(name: String, df: DataFrame): Unit = {
@@ -42,6 +39,6 @@ object OperatorPlanSnap {
       graft.Caches.truncate(df)
     }
     snap("lsh_overflow", st.overflow)
-    spark.stop()
+    Sessions.stop(spark)
   }
 }

@@ -2,10 +2,9 @@ package graft.examples
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
-import graft.SparkEntry
+import graft.{Sessions, SparkEntry}
 
 /** Dump formatted physical plans for the audit-relevant queries into
   * PLANS.md — the reviewable record of pushdown / pruning / broadcast /
@@ -15,12 +14,7 @@ import graft.SparkEntry
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(4, "graft-plan-dump")
 
     // All 26 queries, each with a one-line "why this is the right plan"
     // (round-5 verdict ask #2). Round-6 shape changes are marked [r6].
@@ -62,6 +56,6 @@ object PlanDump {
     }
     Files.writeString(Paths.get("PLANS.md"), md.toString)
     println(s"PLANS.md written (${audited.size} plans)")
-    spark.stop()
+    Sessions.stop(spark)
   }
 }

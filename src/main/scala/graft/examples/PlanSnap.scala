@@ -2,7 +2,7 @@ package graft.examples
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import graft.Sessions
 
 /** Snapshot `explain("formatted")` of every SparkEntry query into one file
   * per query — the before/after plan evidence for optimization rounds.
@@ -17,11 +17,7 @@ object PlanSnap {
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.001"
     val names = if (args.length > 3) args.drop(3).toSeq
                 else graft.SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(4, "graft-plan-snap")
     Files.createDirectories(Paths.get(outDir))
     names.foreach { n =>
       try {
@@ -36,6 +32,6 @@ object PlanSnap {
       graft.Caches.release(spark)
       spark.catalog.clearCache()
     }
-    spark.stop()
+    Sessions.stop(spark)
   }
 }

@@ -1,5 +1,6 @@
 package graft.examples
-import org.apache.spark.sql.{SparkSession, functions => F}
+import org.apache.spark.sql.{functions => F}
+import graft.Sessions
 import graft.dedup.{DedupConfig, DedupPipeline}
 import graft.io.SyntheticCorpus
 
@@ -10,12 +11,8 @@ import graft.io.SyntheticCorpus
 object RecallProbe {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(100000L)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.local.dir", sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/spark-local"))
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(32, "graft-recall-probe", "spark.local.dir" ->
+      sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/spark-local"))
 
     val res = DedupPipeline.run(SyntheticCorpus.pages(spark, n),
       DedupConfig(allowedLangs = Some(Set("en"))))
@@ -40,6 +37,6 @@ object RecallProbe {
     val (pairs, recalled) = (perKind.map(_._2).sum, perKind.map(_._3).sum)
     println(f"RECALL n=$n pairs=$pairs recalled=$recalled recall=${recalled.toDouble / pairs}%.6f")
     res.cleanup()
-    spark.stop()
+    Sessions.stop(spark)
   }
 }

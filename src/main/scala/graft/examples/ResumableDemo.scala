@@ -1,6 +1,6 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
+import graft.Sessions
 import graft.dedup.{DedupConfig, ResumableDedupPipeline}
 import graft.io.{StageStore, SyntheticCorpus}
 
@@ -13,13 +13,7 @@ object ResumableDemo {
   def main(args: Array[String]): Unit = {
     val storeDir = args(0)
     val n = if (args.length > 1) args(1).toLong else 2000L
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-resumable-demo")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(8, "graft-resumable-demo")
 
     val store = new StageStore(spark, storeDir)
     Seq("signatures", "scored", "substr_edges", "assign", "flags").foreach { s =>
@@ -34,6 +28,6 @@ object ResumableDemo {
     store.lineage().groupBy("stage").sum("row_count").orderBy("stage")
       .show(10, truncate = false)
     println("RESUMABLE-DEMO-DONE")
-    spark.stop()
+    Sessions.stop(spark)
   }
 }

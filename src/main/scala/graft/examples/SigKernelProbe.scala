@@ -1,6 +1,6 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
+import graft.Sessions
 import graft.functions.{ShingleHashes, MinHashSignature, SimHash64}
 import graft.io.SyntheticCorpus
 
@@ -10,9 +10,7 @@ import graft.io.SyntheticCorpus
 object SigKernelProbe {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 20000L
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(4, "graft-sig-kernel-probe")
     val texts = SyntheticCorpus.pages(spark, n)
       .select("text").collect().map(_.getString(0))
     println(s"docs=${texts.length} avgLen=${texts.map(_.length.toLong).sum / texts.length}")
@@ -63,6 +61,6 @@ object SigKernelProbe {
       }
     }
     println(s"sink=$sink")
-    spark.stop()
+    Sessions.stop(spark)
   }
 }

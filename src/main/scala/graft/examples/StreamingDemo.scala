@@ -2,9 +2,9 @@ package graft.examples
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 
+import graft.Sessions
 import graft.streaming.StreamingDedup
 
 /** Example / verification driver: file-source streaming dedup.
@@ -17,12 +17,7 @@ object StreamingDemo {
     val work = args.headOption.getOrElse("/tmp/graft-stream-demo")
     val in = s"$work/in"
     Files.createDirectories(Paths.get(in))
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(4, "graft-streaming-demo")
 
     val schema = StructType(Seq(
       StructField("url", StringType), StructField("text", StringType),
@@ -90,6 +85,6 @@ object StreamingDemo {
       case e: Exception => println("BATCH-PROBE-ERR: " + e.getMessage.takeWhile(_ != '\n'))
     }
     println("STREAMING-DEMO-DONE")
-    spark.stop()
+    Sessions.stop(spark)
   }
 }
