@@ -292,141 +292,6 @@ object Similarity {
     F.conv(F.substring(F.md5(F.encode(id.cast("string"), "UTF-8")), 1, 15), 16, 10)
       .cast("long")
 
-  /** Lloyd refinement of a quantized-unit codebook: `rounds` iterations of
-    * assign-to-best-cell (integer dot, ties → smaller cid) + recenter on
-    * the member mean, re-normalized and re-quantized. Cell ids stay the
-    * sampled ids (stable tie ordering); a cell that loses all members
-    * keeps its previous centroid. The member-mean aggregation goes through
-    * (cell, component) partial sums — map-side combine caps the shuffle at
-    * C·dim rows per task, so a round's cost is one scan regardless of
-    * corpus size. Float means make refined centroids deterministic only up
-    * to summation order — production path, not oracle-replayable. */
-  private def refineCentroids(e: DataFrame, init: Array[(Long, Array[Long])],
-                              rounds: Int): Array[(Long, Array[Long])] = {
-    if (rounds <= 0) return init
-    val spark = e.sparkSession
-    import spark.implicits._
-    var cents = init
-    val withQv = e.select(F.col("vec_id"),
-      F.transform(F.col("emb"), x => x / F.col("nrm")).as("u"),
-      quantized(F.col("emb")).as("qv"))
-    for (_ <- 1 to rounds) {
-      // Best-cell assignment as a broadcast-codebook partition scan: the
-      // cell id is computed IN PLACE (no shuffle of the unit vectors, no
-      // per-centroid expression literals — at large C those generate
-      // unplannable codegen), and the member-mean aggregation below
-      // stays (cell, component) partial sums — shuffle ≤ C·dim rows per
-      // task, corpus-size-independent, exactly as before. Tie rule (dot
-      // desc, cid asc) identical to the oracle's assignment replay.
-      val bc = spark.sparkContext.broadcast(cents)
-      val assigned = withQv.select(F.col("u"), F.col("qv"))
-        .as[(Array[Double], Array[Long])]
-        .mapPartitions { it =>
-          val cs = bc.value
-          it.map { case (u, qv) =>
-            var bestCid = Long.MaxValue
-            var bestNd = Long.MaxValue
-            cs.foreach { case (cid, qc) =>
-              var d = 0L; var i = 0
-              while (i < qv.length) { d += qv(i) * qc(i); i += 1 }
-              val nd = -d
-              if (nd < bestNd || (nd == bestNd && cid < bestCid)) {
-                bestNd = nd; bestCid = cid
-              }
-            }
-            (bestCid, u)
-          }
-        }.toDF("cell", "u")
-      val sums = assigned
-        .select(F.col("cell"), F.posexplode(F.col("u")).as(Seq("i", "v")))
-        .groupBy("cell", "i")
-        .agg(F.sum("v").as("s"), F.count(F.lit(1)).as("c"))
-        .as[(Long, Int, Double, Long)].collect()
-      bc.unpersist(false)
-      val byCell = sums.groupBy(_._1)
-      cents = cents.map { case (cid, qc) =>
-        byCell.get(cid) match {
-          case Some(rows) =>
-            val mean = new Array[Double](qc.length)
-            rows.foreach { case (_, i, s, c) => mean(i) = s / c }
-            val nrm = math.sqrt(mean.map(x => x * x).sum)
-            if (nrm == 0.0) (cid, qc)
-            else (cid, mean.map(x => math.floor(x / nrm * 1000000.0 + 0.5).toLong))
-          case None => (cid, qc) // empty cell: keep previous centroid
-        }
-      }
-    }
-    cents
-  }
-
-  /** Deterministic k-means++-style codebook init (D² sampling): seed with
-    * the min-md5-rank vector, then draw each next centroid with
-    * probability ∝ its squared distance to the nearest chosen centroid —
-    * the Arthur/Vassilvitskii k-means++ rule — using the splitmix64
-    * stream for the draws, so the codebook is a pure function of the data
-    * (no RNG state, reproducible across runs and partitionings). Runs on
-    * a rank-deterministic sample of `sampleSize` unit vectors (TakeOrdered
-    * — no full sort) collected to the driver: k-means++ is inherently
-    * sequential in k, and a few thousand sample points bound the O(k·S)
-    * driver work while preserving init quality. Production-only (the
-    * D²-weighted draw chain is not SQL-replayable; the oracle pins the
-    * plain md5-rank sample init). */
-  private def kmeansppInit(e: DataFrame, numCentroids: Int,
-                           sampleSize: Int = 4096): Array[(Long, Array[Long])] = {
-    val spark = e.sparkSession
-    import spark.implicits._
-    val samp = e
-      .withColumn("rk", md5Rank(F.col("vec_id")))
-      .orderBy("rk", "vec_id").limit(sampleSize)
-      .select(F.col("vec_id"),
-        F.transform(F.col("emb"), x => x / F.col("nrm")).as("u"))
-      .as[(Long, Array[Double])].collect()
-    val n = samp.length
-    val k = math.min(numCentroids, n)
-    val chosen = new Array[Int](k)
-    val used = new Array[Boolean](n)
-    used(0) = true // chosen(0) = sample index 0 (min md5 rank)
-    val minD = Array.fill(n)(Double.MaxValue)
-    var c = 1
-    while (c < k) {
-      val last = samp(chosen(c - 1))._2
-      var total = 0.0
-      var i = 0
-      while (i < n) {
-        var d = 0.0; var t = 0
-        while (t < last.length) { d += samp(i)._2(t) * last(t); t += 1 }
-        val dist = math.max(0.0, 2.0 - 2.0 * d) // ||x−c||² on unit vectors
-        if (dist < minD(i)) minD(i) = dist
-        total += minD(i)
-        i += 1
-      }
-      // deterministic D² draw: u ∈ [0,1) from the splitmix64 stream
-      val u = (graft.functions.HashUtil.streamAt(
-        graft.functions.HashUtil.DefaultSeed, c.toLong) >>> 11) * 1.1102230246251565e-16
-      var target = u * total
-      var pick = -1
-      i = 0
-      while (i < n && pick < 0) {
-        if (minD(i) > 0) {
-          target -= minD(i)
-          if (target <= 0) pick = i
-        }
-        i += 1
-      }
-      if (pick < 0) pick = minD.indexWhere(_ > 0) // residual fp mass
-      // all-identical degenerate corpus: any unchosen index — never an
-      // already-chosen one (a duplicate (cid, centroid) row would take a
-      // row_number rank slot in ivfTopK and silently waste a probe slot)
-      if (pick < 0) pick = used.indexWhere(!_)
-      used(pick) = true
-      chosen(c) = pick
-      c += 1
-    }
-    chosen.map(ci => (samp(ci)._1,
-      samp(ci)._2.map(x => math.floor(x * 1000000.0 + 0.5).toLong)))
-      .sortBy(_._1).toArray
-  }
-
   /** IVF (inverted-file) approximate top-k — the codebook-based scale
     * path, complementing the hash-based [[lshTopK]]:
     *
@@ -448,52 +313,19 @@ object Similarity {
     *     degenerate cells).
     *
     * Output columns and tie rule match [[bruteForceTopK]]; recall < 1 by
-    * design and rises with `nProbe`.
-    *
-    * `lloydRounds` > 0 runs that many Lloyd refinement iterations on the
-    * initial codebook before building the index (assign all vectors to
-    * their best cell, recenter each cell on the mean of its members,
-    * re-normalize): recall per probe rises because cells track the data
-    * distribution instead of a random sample. Each round costs one
-    * assignment scan + a (cell, component) partial-sum aggregation whose
-    * shuffle is ≤ C·dim rows per task — corpus-size-independent.
-    *
-    * `init` picks the codebook seeding: "sample" (default) = the
-    * `numCentroids` smallest-md5-rank vectors — fully SQL-replayable, the
-    * oracle path; "kmeanspp" = deterministic D²-sampled k-means++ on a
-    * rank-deterministic sample ([[kmeansppInit]]) — the production path
-    * (better cell coverage, so higher recall per probe; pair with
-    * `lloydRounds` > 0).
-    *
-    * `assignTopA` > 1 stores every database vector in its `assignTopA`
-    * best cells instead of one (overlapping IVF / index-side
-    * multi-assignment): boundary vectors — whose true neighbors sit just
-    * across a Voronoi face, the dominant recall loss once Lloyd has
-    * converged — become reachable from both sides. Index size and the
-    * probe join grow ×a (still bucketed, still capped per cell); recall
-    * at fixed nProbe rises the way query-side probing alone cannot.
-    *
-    * Refined / k-means++ / multi-assigned layouts are production-only
-    * (not SQL-replayable; the oracle pins init="sample", lloydRounds=0,
-    * assignTopA=1). */
+    * design and rises with `nProbe`. */
   def ivfTopK(embeddings: DataFrame, k: Int, numCentroids: Int = 16,
-              nProbe: Int = 2, maxCell: Int = 1000000,
-              lloydRounds: Int = 0, init: String = "sample",
-              assignTopA: Int = 1): DataFrame = {
+              nProbe: Int = 2, maxCell: Int = 1000000): DataFrame = {
     val e = prepared(embeddings)
     val spark = e.sparkSession
     import spark.implicits._
     // codebook: C·dim quantized unit centroids — corpus-size-independent
-    val sample = init match {
-      case "kmeanspp" => kmeansppInit(e, numCentroids)
-      case _ => e.select(F.col("vec_id"), F.col("emb"), F.col("nrm"))
-        .withColumn("rk", md5Rank(F.col("vec_id")))
-        .orderBy("rk", "vec_id").limit(numCentroids)
-        .select(F.col("vec_id"),
-          F.transform(F.col("emb"), x => F.floor(x / F.col("nrm") * 1000000.0d + 0.5d)).as("qc"))
-        .as[(Long, Array[Long])].collect().sortBy(_._1)
-    }
-    val cents = refineCentroids(e, sample, lloydRounds)
+    val cents = e.select(F.col("vec_id"), F.col("emb"), F.col("nrm"))
+      .withColumn("rk", md5Rank(F.col("vec_id")))
+      .orderBy("rk", "vec_id").limit(numCentroids)
+      .select(F.col("vec_id"),
+        F.transform(F.col("emb"), x => F.floor(x / F.col("nrm") * 1000000.0d + 0.5d)).as("qc"))
+      .as[(Long, Array[Long])].collect().sortBy(_._1)
 
     // The codebook joins as broadcast DATA, not as inlined expression
     // literals: C typedLit'd centroid arrays generate O(C·dim) of code
@@ -503,11 +335,8 @@ object Similarity {
     // small codegen'd projection and scales to any codebook a driver can
     // hold. Cell ranks come from a (vec_id) window over those narrow
     // rows; the qu payload is attached once, by a vec_id join onto the
-    // ≤ max(nProbe, assignTopA) surviving rows per vector. Sort key
-    // (-dot, cid) keeps the tie rule (dot desc, cid asc) bit-identical
-    // to the oracle's replay.
-    val spark2 = e.sparkSession
-    import spark2.implicits.{localSeqToDatasetHolder, newProductEncoder}
+    // ≤ nProbe surviving rows per vector. Sort key (-dot, cid) keeps the
+    // tie rule (dot desc, cid asc) bit-identical to the oracle's replay.
     val centDF = cents.toSeq.toDF("cid", "qc")
     val unit = graft.Caches.truncate(e.select(F.col("vec_id"),
       quantized(F.col("emb")).as("qv"),
@@ -518,10 +347,10 @@ object Similarity {
         (-intDot(F.col("qv"), F.col("qc"))).as("nd"), F.col("cid"))
       .withColumn("cr", F.row_number().over(
         Window.partitionBy("vec_id").orderBy("nd", "cid")))
-      .where(F.col("cr") <= math.max(nProbe, assignTopA))
+      .where(F.col("cr") <= nProbe)
       .select(F.col("vec_id"), F.col("cid").as("cell"), F.col("cr"))
       .join(unit.select(F.col("vec_id"), F.col("qu")), Seq("vec_id")))
-    val assigned = ranked.where(F.col("cr") <= assignTopA)
+    val assigned = ranked.where(F.col("cr") <= 1)
       .select("vec_id", "qu", "cell")
     val capped = {
       val ok = assigned.groupBy("cell").count()
@@ -540,7 +369,7 @@ object Similarity {
       .where(F.col("vec_id") =!= F.col("nn_id"))
       .select(F.col("vec_id"), F.col("nn_id"),
         intDot(F.col("qq"), F.col("qc")).as("cos"))
-      .distinct() // a candidate reached via several (probe, replica) cells
+      .distinct() // a candidate reached via several probe cells
     val w = Window.partitionBy("vec_id").orderBy(F.col("cos").desc, F.col("nn_id"))
     cand.withColumn("rank", F.row_number().over(w))
       .where(F.col("rank") <= k)

@@ -65,18 +65,20 @@ import org.apache.spark.sql.{functions => F}
   */
 object ConnectedComponents {
 
+  /** Cap on star rounds: a run that has not converged by then fails
+    * loudly. The round signature is seeded with the contraction's own, so
+    * a contraction that is already a star forest is confirmed by one
+    * round. */
+  private val MaxStarRounds = 50
+
   /** @param edges DataFrame with two LongType columns (src, dst) — column
     *              names are positional; self-loops and duplicates are fine.
-    * @param maxIterations cap on star rounds (≥ 1). The round signature is
-    *              seeded with the contraction's own, so a contraction that
-    *              is already a star forest is confirmed by one round.
     * @return DataFrame (id: long, component: long) — every node that
     *         appears in `edges`, component = min node id of its component.
     */
-  def run(edges: DataFrame, maxIterations: Int = 50): DataFrame = {
-    require(maxIterations >= 1, s"maxIterations must be >= 1, got $maxIterations")
+  def run(edges: DataFrame): DataFrame = {
     val contracted = contract(edges)
-    if (contracted.rdd.getNumPartitions > 1) starRounds(contracted, maxIterations)
+    if (contracted.rdd.getNumPartitions > 1) starRounds(contracted)
     else {
       // One union-find saw every edge: the contraction is the exact
       // answer. One job fills its checkpoint, so callers get a
@@ -89,7 +91,7 @@ object ConnectedComponents {
   /** Large-star / small-star rounds over a [[contract]]ion whose edges
     * were spread over more than one partition, then every node's
     * component. */
-  private def starRounds(contracted: DataFrame, maxIterations: Int): DataFrame = {
+  private def starRounds(contracted: DataFrame): DataFrame = {
     val spark = contracted.sparkSession
     import spark.implicits._
 
@@ -123,7 +125,7 @@ object ConnectedComponents {
     var curCp: Option[DataFrame] = None // the frame holding the round's persist handle
     var converged = lastSig._1 == 0L // no edge left: every node is its own root
     var iter = 0
-    while (!converged && iter < maxIterations) {
+    while (!converged && iter < MaxStarRounds) {
       val grouped = smallStarGrouped(largeStar(cur)).localCheckpoint(false)
       cur = emitEdges(grouped)
       val sig = signatureOfEdges(cur) // materializes the checkpoint
@@ -133,7 +135,7 @@ object ConnectedComponents {
       lastSig = sig
       iter += 1
     }
-    require(converged, s"connected components did not converge in $maxIterations rounds")
+    require(converged, s"connected components did not converge in $MaxStarRounds rounds")
 
     // At fixpoint every edge is (child -> root). Nodes absent from the edge
     // list (roots, and nodes seen only in self-loops) map to themselves.

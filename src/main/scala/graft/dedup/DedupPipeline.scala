@@ -71,12 +71,9 @@ object DedupPipeline {
     //    pairs; ~10⁴ at 10^12 docs): the min-url row keeps its id, every
     //    other row is remapped to a salt-rehashed id. The remap is a pure
     //    function of the url — deterministic across runs/partitionings —
-    //    and keeps all documents in the run. Residual risk (a remapped id
-    //    colliding again) is ~collisions·n/2^64 ≈ 10⁻³ corpus-wide at
-    //    10^12 docs — documented, not re-checked.
-    val base =
-      if (!cfg.enforceUniqueIds) hashed.withColumn("dup_url", F.lit(false))
-      else enforceIds(hashed, cfg)
+    //    and keeps all documents in the run. Residual risk: see
+    //    [[IdRemapRounds]].
+    val base = enforceIds(hashed, cfg)
     val langOk = cfg.allowedLangs match {
       case Some(ls) => F.col("lang").isin(ls.toSeq: _*)
       case None => F.lit(true)
@@ -86,7 +83,7 @@ object DedupPipeline {
     val reason = F.when(F.col("url").isNull, "null_url")
       .when(F.col("dup_url"), "dup_url")
       .when(F.col("text").isNull, "null_text")
-      .when(F.length(F.trim(F.col("text"))) < cfg.minTextChars, "empty_text")
+      .when(F.trim(F.col("text")) === "", "empty_text")
       // NULL lang is a reject when a whitelist is set: isin() is
       // three-valued (NULL lang → NULL), so compare null-safely to true
       .when(F.not(langOk <=> F.lit(true)), "lang")
@@ -123,6 +120,15 @@ object DedupPipeline {
       .drop("shingles")
     (sigsAll, gated.where(F.col("reject_reason").isNotNull))
   }
+
+  /** Salt-rehash rounds for distinct-url hash collisions in
+    * [[enforceIds]]. One round leaves a ~n_coll·n/2^64 ≈ 5·10⁻⁴
+    * corpus-wide chance (at 10^12 docs) that a REMAPPED id collides again;
+    * each further round multiplies the residual by n/2^64 (≈ 5·10⁻⁸), so
+    * 2 retires it (~3·10⁻¹¹) for the cost of one extra narrow
+    * (doc_id, url) aggregation + broadcast join — the reason a 128-bit id
+    * type (and its fatter shuffles everywhere) is not needed. */
+  private val IdRemapRounds = 2
 
   /** Id-uniqueness enforcement over a frame that already carries
     * doc_id = xxhash64(seed, url): flags duplicate urls (`dup_url`
@@ -190,15 +196,15 @@ object DedupPipeline {
     def maybeBroadcast(df: DataFrame): DataFrame =
       if (broadcastable) F.broadcast(df) else df
 
-    // Rounds 2..idRemapRounds: a fresh remap target can collide with an
+    // Rounds 2..IdRemapRounds: a fresh remap target can collide with an
     // untouched existing id (or another fresh target). The probe joins
     // the corpus against the broadcast remap set — a narrow scan, paid
     // ONLY when the previous round remapped anything. Groups resolve as
     // before: min url keeps its current id, the rest take this round's
-    // salt. See DedupConfig.idRemapRounds for the residual-risk
-    // arithmetic that makes round 2 the last one that matters.
+    // salt. See IdRemapRounds for the residual-risk arithmetic that
+    // makes round 2 the last one that matters.
     var round = 2
-    while (round <= cfg.idRemapRounds && !lastRemapped.isEmpty) {
+    while (round <= IdRemapRounds && !lastRemapped.isEmpty) {
       val rIds = lastRemapped.select($"new_id".as("doc_id"), $"url")
       val existing = hashed.select($"doc_id", $"url")
         .where($"url".isNotNull)
@@ -274,7 +280,7 @@ object DedupPipeline {
       .withColumn("cluster_id", F.coalesce($"component", $"doc_id"))
       .drop("component")
     val ranked = withCluster.withColumn("rank",
-      F.xxhash64(F.lit(cfg.canonicalSeed), $"doc_id"))
+      F.xxhash64(F.lit(cfg.seed), $"doc_id"))
     // window min_by, not groupBy+join-back: the join would reshuffle the
     // ranked table on cluster_id anyway — co-locating each cluster in one
     // task exactly like the window does — so the separate winner

@@ -32,17 +32,6 @@ import graft.functions._
   */
 object Lsh {
 
-  /** Array of `bands` bucket keys for a minhash signature column:
-    * bucket_i = xxhash64(i, minhash[i*r .. i*r+r)). Round 6: a codegen'd
-    * kernel (graft.functions.BandBuckets) — the previous
-    * `transform(sequence, xxhash64(slice))` chain was CodegenFallback
-    * (array HOFs interpret their lambda per element) and allocated one
-    * slice array per band per row on the engine's hottest explode;
-    * bucket values are bit-identical (Spark's own XXH64 fold, parity
-    * spec in SignatureExpressionsSpec). */
-  def bandBuckets(minhashCol: Column, bands: Int, rowsPerBand: Int): Column =
-    graft.functions.bandBuckets(minhashCol, bands, rowsPerBand)
-
   /** (doc_id, bucket) — one row per band per doc. The band index is
     * already folded into the 64-bit bucket key (xxhash64(band, slice)),
     * so carrying a separate band column would only widen the explode —

@@ -49,9 +49,6 @@ object FlagshipDemo {
     val res3 = DedupPipeline.run(junk, DedupConfig())
     println(s"junk rejects=${res3.rejects.count()} deduped=${res3.deduped.count()}")
 
-    try DedupConfig(numHashes = 100, bands = 32, rowsPerBand = 4)
-    catch { case e: IllegalArgumentException => println("CFG-ERR: " + e.getMessage) }
-
     println("FLAGSHIP-DEMO-DONE")
     Sessions.stop(spark)
   }

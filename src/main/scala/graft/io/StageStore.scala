@@ -79,9 +79,17 @@ final class StageStore(spark: SparkSession, root: String) {
 
   def lineage(): DataFrame = spark.read.parquet(s"$root/_lineage")
 
-  /** Append stage metrics (the report_db analog, as a table). */
-  def writeMetrics(metrics: DataFrame): Unit =
-    metrics.write.mode("append").parquet(s"$root/_metrics")
+  /** Append one run's metrics (the report_db analog, as a table) with a
+    * last column `run`: 1 + the number of runs already in `_metrics`, so
+    * the runs of a resumed store stay apart. */
+  def writeMetrics(metrics: DataFrame): Unit = {
+    val priorRuns =
+      if (!Files.exists(Paths.get(root, "_metrics"))) 0L
+      else this.metrics().select("run").distinct().count()
+    metrics.withColumn("run", F.lit(priorRuns + 1))
+      .write.mode("append").parquet(s"$root/_metrics")
+  }
 
+  /** Every run's metrics: (metric, value, run). */
   def metrics(): DataFrame = spark.read.parquet(s"$root/_metrics")
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import org.apache.spark.sql.{functions => F}
 
 import graft.analysis.TextAnalysis
-import graft.dedup.{DedupConfig, Lsh}
+import graft.dedup.DedupConfig
 
 /** Per-fingerprint streaming state: the first-seen document. (Top-level —
   * the state encoder's generated code needs a public constructor.) */
@@ -131,7 +131,7 @@ object StreamingDedup {
 
   /** Streaming NEAR-duplicate detection — the event-time form of the
     * batch LSH pass, sharing its exact signature/banding/verification
-    * expressions (`minhash`, `Lsh.bandBuckets`, `estJaccard`, same
+    * expressions (`minhash`, `bandBuckets`, `estJaccard`, same
     * `DedupConfig`). The 10^12-docs/day layout: the bucket operator's
     * state is ids-only (16 bytes/member, never the ~1 KiB signature once
     * per band) and signatures live in the doc_id-keyed state of two
@@ -182,7 +182,7 @@ object StreamingDedup {
                               maxBucketState: Int = 64): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    import graft.functions.{estJaccard, minhash, shingles}
+    import graft.functions.{bandBuckets, estJaccard, minhash, shingles}
     val sigs = docs
       .select(
         F.xxhash64(F.lit(cfg.seed), F.col("url")).as("doc_id"),
@@ -195,7 +195,7 @@ object StreamingDedup {
     // ids-only bucket stream: the ONLY per-band replication is 16 bytes
     val keyed = sigs
       .select(F.col("doc_id"), F.col("ts"),
-        F.explode(Lsh.bandBuckets(F.col("minhash"), cfg.bands, cfg.rowsPerBand))
+        F.explode(bandBuckets(F.col("minhash"), cfg.bands, cfg.rowsPerBand))
           .as("bucket"))
       .as[(Long, java.sql.Timestamp, Long)]
       .groupByKey(_._3)

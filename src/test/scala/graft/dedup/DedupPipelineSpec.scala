@@ -179,6 +179,31 @@ class DedupPipelineSpec extends SparkSpec {
       .select("url").collect().map(_.getString(0)).toSeq === Seq("https://x/1"))
   }
 
+  test("empty_text gate: empty after trim is rejected, one character is not") {
+    val spark2 = spark
+    import spark2.implicits._
+    val rows = Seq(
+      ("https://x/empty", ""),
+      ("https://x/spaces", "   "),
+      // Spark's trim strips U+0020 only: a tab survives it, passes the
+      // gate and has no shingle, so it routes to no_content instead
+      ("https://x/tab", "  \t "),
+      ("https://x/one", "x"))
+      .toDF("url", "text")
+      .withColumn("lang", F.lit("en"))
+      .withColumn("warc_ts", F.current_timestamp())
+      .withColumn("html", F.encode(F.col("text"), "UTF-8"))
+    val res = DedupPipeline.run(rows, DedupConfig())
+    try {
+      val rej = res.rejects.select("url", "reject_reason").collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(rej === Map("https://x/empty" -> "empty_text",
+        "https://x/spaces" -> "empty_text", "https://x/tab" -> "no_content"))
+      assert(res.deduped.select("url").collect().map(_.getString(0)).toSeq
+        === Seq("https://x/one"))
+    } finally res.cleanup()
+  }
+
   test("duplicate input urls are rejected as dup_url (contract enforcement)") {
     val spark2 = spark
     import spark2.implicits._

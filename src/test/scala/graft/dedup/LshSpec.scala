@@ -25,7 +25,7 @@ class LshSpec extends SparkSpec {
   private def oracle(sigs: DataFrame, cap: Int): (Seq[(Long, Long)], Long, Long) = {
     val cfg = DedupConfig()
     val rows = sigs.where(F.col("minhash").isNotNull)
-      .select(F.col("doc_id"), Lsh.bandBuckets(F.col("minhash"), cfg.bands, cfg.rowsPerBand))
+      .select(F.col("doc_id"), bandBuckets(F.col("minhash"), cfg.bands, cfg.rowsPerBand))
       .collect()
       .flatMap(r => r.getSeq[Long](1).map(bucket => (bucket, r.getLong(0))))
     val members = rows.groupBy(_._1).values.map(_.map(_._2).toSeq).toSeq

@@ -13,8 +13,7 @@ class SubstringDedupSpec extends SparkSpec {
 
   // small winnow params so short fixtures clear the guarantee floor
   private def cfg(cap: Int = 1000) = DedupConfig(
-    winnowW = 8, winnowWin = 4, minSubstringChars = 11,
-    maxFingerprintPostings = cap, containmentThreshold = 0.8)
+    winnowW = 8, winnowWin = 4, maxFingerprintPostings = cap)
 
   /** A deterministic "calm" corpus: planted containment pairs (text of
     * doc 2i is embedded verbatim in doc 2i+1) + unrelated fillers. */

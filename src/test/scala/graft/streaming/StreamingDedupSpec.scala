@@ -60,8 +60,8 @@ class StreamingDedupSpec extends SparkSpec {
     val spark2 = spark
     import spark2.implicits._
     implicit val sqlCtx = spark.sqlContext
-    import graft.dedup.{DedupConfig, Lsh}
-    import graft.functions.{minhash, shingles}
+    import graft.dedup.DedupConfig
+    import graft.functions.{bandBuckets, minhash, shingles}
     import graft.io.SyntheticCorpus
     import org.apache.spark.sql.{functions => F}
 
@@ -86,7 +86,7 @@ class StreamingDedupSpec extends SparkSpec {
           .as("minhash"))
       .where($"minhash".isNotNull)
       .select($"url", $"doc_id", $"minhash",
-        Lsh.bandBuckets($"minhash", cfg.bands, cfg.rowsPerBand).as("buckets"))
+        bandBuckets($"minhash", cfg.bands, cfg.rowsPerBand).as("buckets"))
       .as[(String, Long, Array[Long], Array[Long])].collect()
     val maxBucketState = 64
     val bucketSizes = sigRows.flatMap { case (_, id, _, bs) => bs.distinct.map(_ -> id) }
