@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Paths, StandardOpenOption}
 
 import org.apache.spark.sql.SparkSession
 
@@ -10,34 +10,54 @@ import graft.io.SyntheticCorpus
 /** Benchmark main — one JSON line (stdout AND ./bench.json, so the driver
   * never has to scrape sbt-prefixed logs):
   *
-  * 1. headline `SparkEntry.queries` wall times on SPARK_GRAFT_SF_DIR at
-  *    local[SPARK_GRAFT_CPUS] (driver contract: BENCH_r{N}.json);
-  * 2. the north_rule cluster-size scaling criterion, evidenced in-sandbox
+  * 1. the north_rule cluster-size scaling criterion, evidenced in-sandbox
   *    (no managed cluster) by running the identical flagship pipeline on
   *    the identical deterministic corpus on a REAL local cluster of N vs
   *    4N single-core executor JVMs (local-cluster[n,1,mem] — own heaps,
-  *    GC, netty shuffle; see [[clusterSession]]), min of 2-4 alternating
-  *    timed runs per level (budget-adaptive): docs/sec at both +
-  *    efficiency = (T_N / T_4N) / 4;
-  * 3. a machine-readable per-stage N→4N scaling table (same pipeline,
-  *    smaller corpus, thread-mode levels), so the compute-vs-DRAM-bound
-  *    split is data in the JSON rather than prose in BENCH.md.
+  *    GC, netty shuffle; see [[clusterSession]]). The protocol is fixed
+  *    before any timing: one corpus size, two size-matched pairs per level
+  *    (see [[scalingBlocks]]), efficiency = (min T_N / min T_4N) / 4;
+  * 2. headline `SparkEntry.queries` wall times on SPARK_GRAFT_SF_DIR at
+  *    local[SPARK_GRAFT_CPUS] (driver contract: BENCH_r{N}.json);
+  * 3. a per-stage N→4N table (same pipeline, fixed smaller corpus, one
+  *    pass per thread-mode level), so the compute-vs-DRAM-bound split is
+  *    data in the JSON rather than prose in BENCH.md.
   *
   * Both levels run identical per-executor configuration — Spark's
   * default `spark.memory.fraction` (0.6), constant per-executor memory,
-  * the same partitions (`Sessions`' max(n, 8) is 8 at both default
-  * levels) — so no per-level knob can differentially shape the ratio
-  * beyond what adding executors brings on a real cluster; the recorded
-  * per-level SPILL totals are the detector for memory starvation at
-  * either width (observed: the first cluster-mode runs left
-  * spark.executor.memory at its 1g default — local-cluster's mem field
-  * only caps the WORKER — and the 1-executor level spilled 336 MiB at
-  * 220k docs; executors now run 8g-max heaps with a small -Xms — see
-  * the heap-policy note in [[clusterSession]]).
-  * Memory BANDWIDTH still comes from one host — see BENCH.md for how to
-  * read the number against the ≥0.8 criterion.
+  * the same partitions (`Sessions`' max(n, 8) is 8 at both levels) — so
+  * no per-level knob can differentially shape the ratio beyond what
+  * adding executors brings on a real cluster; the recorded per-level
+  * SPILL totals are the detector for memory starvation at either width.
+  * Memory BANDWIDTH, CPUs and the driver still come from one host — see
+  * README for how to read the number against the ≥0.8 criterion.
   */
 object Bench {
+
+  /** The criterion's N and 4N: executors at the small and big level. */
+  val NSmall = 1
+  val NBig = 4
+  /** Corpus of every timed scaling run (SPARK_GRAFT_BENCH_DOCS overrides):
+    * the two pairs, the headline and the stage table fit the budget in a
+    * slow phase of a 4-vCPU host (README, "Benchmark record"). */
+  val DefaultDocs = 100000L
+  /** Untimed warm-up run of every level session: it JITs the fresh
+    * executor JVMs and the driver codegen paths (12k docs already run
+    * every hot method thousands of times). */
+  val WarmupDocs = 12000L
+  /** Corpus of the per-stage table. */
+  val StageDocs = 50000L
+  /** Seconds the scaling blocks leave for the headline phase: its warm-up
+    * and timed passes measure 40–50 s together. */
+  val HeadlineReserveSec = 100.0
+  /** Seconds the per-stage table needs: one pass per level at
+    * [[StageDocs]], session starts included. */
+  val StageTableSec = 80.0
+  /** bench.json key of each `DedupPipeline.stages` store name, in
+    * pipeline order. */
+  val StageKeys = Seq("signatures" -> "signatures", "scored" -> "lsh_verify",
+    "substr_edges" -> "substring", "assign" -> "connected_components",
+    "flags" -> "winner_flags")
 
   /** Per-run spill totals — the starve detector: a memory-limited level
     * would show spill bytes here before it bends wall time. */
@@ -59,19 +79,22 @@ object Bench {
     d
   }
 
+  /** Executor heap (-Xmx) at both levels. 2 GB, not 8: with 8 GB heaps the
+    * four 4N executors grew to 2.3–3.0 GB resident each, and with the
+    * driver they exhausted a 16 GB host — an executor was OOM-killed
+    * (exit 137) during B2 at 100k and at 120k docs. */
+  private lazy val execMb = sys.env.getOrElse("SPARK_GRAFT_EXEC_MB", "2048").toInt
+
   private def session(cores: Int): SparkSession =
     Sessions.local(cores, s"graft-bench-$cores", "spark.local.dir" -> localDir)
 
   private val benchStart = System.nanoTime()
   private def elapsedSec: Double = (System.nanoTime() - benchStart) / 1e9
-  /** Soft wall-clock budget for the whole bench: optional passes are
-    * skipped once exceeded, so an unknown driver timeout can't leave the
-    * round with no JSON line at all. */
+  /** Soft wall-clock budget for the whole bench: the deadline guard skips
+    * optional runs once they would not fit, so an unknown driver timeout
+    * can't leave the round with no JSON line at all. */
   // 640 (not 700): the clock starts at JVM start, but the driver's sbt
   // wrapper adds launcher/compile overhead outside it — observed 15-32 s
-  // (sbt totals 658-690 on back-to-back runs with budget 660, one 716 s
-  // total against an earlier 700 default) — the margin keeps the whole
-  // sbt invocation under ~700 s even with the stage table
   private lazy val budgetSec =
     sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_SEC", "640").toDouble
 
@@ -83,19 +106,26 @@ object Bench {
     res.cleanup()
   }
 
-  /** Scaling-phase session: a REAL multi-executor local cluster
+  /** Runs `body` in the session `open` builds and stops that session
+    * whatever happens. `Sessions.local` is `getOrCreate`: a session that a
+    * failed block left open would come back as the next level's session,
+    * at the wrong width. A full GC follows the stop, so the stopped
+    * session's blocks and buffers do not age into the next timed run's
+    * heap. */
+  private[graft] def withSession[T](open: => SparkSession)(body: SparkSession => T): T = {
+    val spark = open
+    try body(spark)
+    finally { Sessions.stop(spark); System.gc() }
+  }
+
+  /** Scaling-level session: a REAL multi-executor local cluster
     * (`local-cluster[n,1,mem]`) — n executor JVMs with their own heaps,
     * GC, and netty shuffle. This is the literal shape of the north_rule's
     * "N and 4N executors" criterion: per-executor memory is CONSTANT
     * across levels, so 4N executors bring 4× aggregate memory and GC
-    * throughput exactly the way a real cluster scale-out does (the
-    * earlier thread-mode levels shared one heap and one allocator, which
-    * charged the 4N level a shared-JVM co-scheduling penalty a real
-    * cluster never pays — measured 0.63–0.71 thread-mode vs 0.73–0.84
-    * cluster-mode on identical code and corpus). Executor JVMs find the
-    * engine classes via this class's own code-source path. */
+    * throughput the way a real cluster scale-out does. Executor JVMs find
+    * the engine classes via this class's own code-source path. */
   private def clusterSession(executors: Int): SparkSession = {
-    val memMb = sys.env.getOrElse("SPARK_GRAFT_EXEC_MB", "8192").toInt
     val classesDir = getClass.getProtectionDomain.getCodeSource.getLocation.getPath
     val addOpens = Seq(
       "java.base/java.lang", "java.base/java.lang.invoke",
@@ -107,68 +137,31 @@ object Bench {
       "java.base/sun.security.action", "java.base/sun.util.calendar")
       .map(p => s"--add-opens=$p=ALL-UNNAMED").mkString(" ")
     // local-cluster[n,1,mem]'s third field is WORKER capacity only; the
-    // executor heap comes from spark.executor.memory (1g if unset — the
-    // first cluster-mode runs shipped 1g executors and spilled, visible
-    // as "-Xmx1024M" in the worker's launch command). Heap policy is
-    // measured, not guessed: -Xms=-Xmx WITH -XX:+AlwaysPreTouch zeroed
-    // 4×8 GB at executor launch — 110-150 s PER LAUNCH under adverse
-    // hypervisor memory weather (executor JVMs forked instantly, then
-    // spent 2+ min in JVM init at ~6 CPU-cores each; jstack showed
-    // thread elapsed 20 s in a process 2:38 old) — a nondeterministic
-    // budget hole; -Xms=-Xmx WITHOUT pre-touch moved the whole-heap
-    // zeroing into the RUNS (G1 commits the full Xms lazily as its
-    // regions activate), inflating the floor-dominated big level 25-35 s
-    // at 25k docs. A small -Xms commits only what runs actually use
-    // (~2 GB/executor here): measured 16.8 s vs 19.4 s (full -Xms) vs
-    // 25-35 s (in-bench, full -Xms) at 25k docs / 4 executors. The 12k
-    // in-session warmup run pays the first growth untimed.
+    // executor heap comes from spark.executor.memory (1g if unset). Heap
+    // policy is measured: -Xms=-Xmx with -XX:+AlwaysPreTouch zeroed 4×8 GB
+    // at executor launch (110-150 s per launch under adverse hypervisor
+    // memory weather); -Xms=-Xmx without pre-touch moved that zeroing into
+    // the timed runs. A small -Xms commits only what the runs use, and the
+    // untimed in-session warm-up pays the first growth.
     Sessions.local(executors, s"graft-bench-cluster-$executors",
-      "spark.master" -> s"local-cluster[$executors,1,$memMb]",
+      "spark.master" -> s"local-cluster[$executors,1,$execMb]",
       "spark.local.dir" -> localDir,
       // Delay scheduling buys nothing on a single host — every executor is
       // node-local to every block — but it DOES idle free slots at the
-      // multi-executor level (cached tracked frames + reduce-side
-      // map-output locality give tasks preferred executors; a slot
-      // elsewhere then waits up to 3s per locality tier; the 1-executor
-      // level is trivially all-local and never waits). Same value at both
-      // levels; measured min-of-2 at 30k docs / 4 executors: 18.4 → 16.6 s.
+      // multi-executor level (a slot waits up to 3 s per locality tier).
+      // Same value at both levels.
       "spark.locality.wait" -> "0s",
-      "spark.executor.memory" -> s"${memMb}m",
+      "spark.executor.memory" -> s"${execMb}m",
       "spark.executor.extraClassPath" -> classesDir,
       "spark.executor.extraJavaOptions" -> s"$addOpens -Xms512m")
   }
 
-  /** Fallback knob: SPARK_GRAFT_SCALE_MODE=threads restores the round-4
-    * shared-JVM local[n] levels; flipped automatically if the cluster
-    * launcher fails in this environment. */
-  private var scaleMode =
-    sys.env.getOrElse("SPARK_GRAFT_SCALE_MODE", "cluster")
+  /** `cluster`, or `threads` (shared-JVM local[n] levels) once a cluster
+    * launch has failed in this environment. */
+  private var scaleMode = "cluster"
 
-  /** Open a scaling-level session: a fresh executor cluster (cluster
-    * mode) or a local[n] session (thread mode), warmed with one untimed
-    * 12k-doc pipeline run — the warmup JITs the fresh executor JVMs and
-    * the driver codegen paths (12k docs already run every hot method
-    * thousands of times; a larger warmup buys budget-costing seconds, no
-    * extra warmth). The session is REUSED for every timed run at its
-    * level inside one block — exactly how a real cluster benchmark reuses
-    * its cluster across repetitions — so launch + JIT are paid once per
-    * block instead of once per run (measured ~25-30 s/run in cluster
-    * mode: the single biggest budget line, and budget is corpus size,
-    * and corpus size dilutes the serial floor the ≥0.8 criterion is
-    * fighting). */
-  private def openLevel(cores: Int, warm: Boolean = true): SparkSession = {
-    val spark =
-      if (scaleMode != "threads") clusterSession(cores) else session(cores)
-    if (warm) runPipeline(spark, 12000L)
-    spark
-  }
-
-  private def closeLevel(spark: SparkSession): Unit = {
-    Sessions.stop(spark)
-    // one full GC between sessions: the stopped session's cached blocks
-    // and shuffle buffers otherwise age into the next timed run's heap
-    System.gc()
-  }
+  private def levelSession(cores: Int): SparkSession =
+    if (scaleMode == "threads") session(cores) else clusterSession(cores)
 
   /** (wall sec, spilled MiB) of one timed end-to-end flagship run inside
     * an already-open (and warmed) level session. */
@@ -185,231 +178,120 @@ object Bench {
   }
 
   /** One timed flagship run: which level (small = true), corpus size,
-    * wall, spill, and the bench-clock offset when it STARTED — the runs
-    * are grouped per level (see [[openLevel]]), so the offsets make any
-    * weather drift across the blocks auditable in the artifact. */
-  private final case class RunSample(small: Boolean, docs: Long,
+    * wall, spill, and the bench-clock offset when it STARTED, so any
+    * weather drift across the blocks is auditable in the artifact. */
+  private[graft] final case class RunSample(small: Boolean, docs: Long,
       wall: Double, spill: Double, atSec: Double)
 
-  /** The bench protocol's pure sizing decisions, extracted so the logic
-    * that guarantees "≥ 2 timed pairs by construction" is itself
-    * spec-tested (BenchSizingSpec) — the one part of the bench whose
-    * failure modes only surface under driver-VM weather that a local
-    * session cannot reproduce on demand. */
-  object Sizing {
-    /** Candidate corpus sizes, largest first: bigger corpora dilute the
-      * core-count-independent serial floor (the Amdahl term that costs a
-      * few hundredths of efficiency at ≤ 120k docs — post the round-5
-      * floor cut, ~0.8 becomes reachable from ~140k up, so the rungs are
-      * deliberately fine in the 120–200k region the budget usually
-      * lands in). */
-    val Ladder: Seq[Long] =
-      Seq(250000L, 220000L, 200000L, 180000L, 160000L, 150000L, 140000L,
-        120000L, 100000L, 80000L, 60000L)
+  /** One level's walls: min, median, spread (max − min), and the spill of
+    * the min-wall run. */
+  private[graft] final case class LevelStats(min: Double, median: Double,
+      spread: Double, spill: Double)
 
-    /** Wall model: wall(n) ≈ floor + c·n at the small level and
-      * floor_b + c·n/width·1.05 at the big one (≈5% steady-state
-      * contention measured on quiet runs). Floors are the per-run serial
-      * component — post the round-5 cuts (window-form stars, one-pass id
-      * enforcement, overlapped LSH/substring materialization, zero
-      * locality wait) the cluster mode measures ~12 s small / ~10 s big
-      * as the 2k-doc intercept; thread mode ~8 s at both. */
-    def tSmallSec(cPerDoc: Double, n: Long, floorS: Double = 12.0): Double =
-      floorS + cPerDoc * n
-    def tBigSec(cPerDoc: Double, n: Long, floorB: Double = 10.0,
-                width: Int = 4): Double =
-      floorB + cPerDoc * n / width * 1.05
+  /** What the record says about the samples. `efficiency` is
+    * (min small wall / min big wall) / (NBig / NSmall), the one statistic
+    * of every run; -1 when a level has no sample. */
+  private[graft] final case class Summary(small: Option[LevelStats],
+      big: Option[LevelStats], timedPairs: Int, efficiency: Double)
 
-    /** Untimed 12k-doc session warmups (see Bench.openLevel). */
-    def warmSmallSec(cPerDoc: Double, floorS: Double = 12.0): Double =
-      tSmallSec(cPerDoc, 12000L, floorS)
-    def warmBigSec(cPerDoc: Double, floorB: Double = 10.0, width: Int = 4): Double =
-      tBigSec(cPerDoc, 12000L, floorB, width)
-
-    /** Planned seconds, from the moment the corpus is chosen (small
-      * session already open, warmed and sized) to the end of the
-      * guaranteed two-pair block schedule:
-      * S1, then [launch + warm + B1 + B2], then [launch + warm + S2] —
-      * ×1.12 estimate slack. Session launch ≈ 14 s cluster (incl. the
-      * previous session's close + inter-session GC) / 2 s thread. */
-    def plannedBlocksSec(cPerDoc: Double, n: Long,
-                         floorS: Double = 12.0, floorB: Double = 10.0,
-                         launchSec: Double = 14.0, width: Int = 4): Double = {
-      val s = tSmallSec(cPerDoc, n, floorS)
-      val b = tBigSec(cPerDoc, n, floorB, width)
-      (s +
-        (launchSec + warmBigSec(cPerDoc, floorB, width) + 2 * b) +
-        (launchSec + warmSmallSec(cPerDoc, floorS) + s)) * 1.12
-    }
-
-    /** Per-doc cost from the sizing warmup, wall(25k) = warmupFloor +
-      * 25k·c. Thread mode: floor 10 s, slope calibration ×1.35 (a 25k
-      * working set is cache/LLC-resident while 150k+ is DRAM-resident —
-      * measured small-level slopes ~0.60 ms/doc at 25k vs ~0.85 at 180k;
-      * uncalibrated, sizing over-picked 220k and the real pair overran
-      * the estimate by ~40%%). Cluster mode: floor 13 s and calibration
-      * ×1.1 — the 25k cluster slope already matches the 120–220k slope
-      * within noise (0.69 vs 0.66–0.69 ms/doc measured), because the
-      * executor-JVM session overhead that inflates the small-corpus wall
-      * shows up at 25k too; 1.1 only covers warmup-sample noise (±20%%
-      * observed across same-day warmups). */
-    def perDocCost(warmupWallSec: Double, warmupDocs: Long,
-                   warmupFloorSec: Double = 10.0,
-                   slopeCal: Double = 1.35): Double =
-      math.max(0.0, warmupWallSec - warmupFloorSec) / warmupDocs * slopeCal
-
-    /** Largest ladder size whose guaranteed two-pair block schedule fits
-      * `remainingSec`; if none fits, the largest continuous size in
-      * [20k, 60k) that does — never a bigger corpus with fewer pairs
-      * (round 4: one unprotected pair cost 0.4 of efficiency). */
-    def chooseCorpus(remainingSec: Double, cPerDoc: Double,
-                     floorS: Double = 12.0, floorB: Double = 10.0,
-                     launchSec: Double = 14.0, width: Int = 4): Long =
-      Ladder.find(n =>
-        plannedBlocksSec(cPerDoc, n, floorS, floorB, launchSec, width)
-          <= remainingSec)
-        .getOrElse {
-          // invert the planned-blocks model for the sub-ladder region:
-          // plannedBlocksSec is affine in n (slope = c·(2 + 2·1.05/width)
-          // ×1.12), so solve for n directly rather than scan
-          val fixed = plannedBlocksSec(cPerDoc, 0L, floorS, floorB, launchSec, width)
-          val slopePerDoc =
-            cPerDoc * (2.0 + 2.0 * 1.05 / width) * 1.12
-          val n = if (cPerDoc <= 0) 60000L
-                  else ((remainingSec - fixed) / slopePerDoc).toLong / 1000 * 1000
-          math.max(20000L, math.min(60000L, n))
-        }
-
-    /** Corpus for a rescued pair 2 when pair 1 (wall `pairWallSec` at
-      * `n` docs) left only `roomSec` before the hard deadline: scale by
-      * measured cost with 10% slack; None if nothing ≥ 20k fits (a
-      * smaller corpus would not dwarf the serial floor). */
-    def downsize(n: Long, roomSec: Double, pairWallSec: Double): Option[Long] = {
-      val n2 = (n * (roomSec * 0.9 / pairWallSec)).toLong / 1000 * 1000
-      if (n2 >= 20000L) Some(n2) else None
-    }
-
-    /** Projected wall of a SAME-SIZE pair 2, from pair 1's walls. The
-      * small wall is the stable signal; the big level is where the
-      * first-run-at-size penalty and CPU-steal spikes land (observed:
-      * big 127 s where the very next same-level run took 43.7 s), so the
-      * projection caps the big term at 0.6× small rather than trusting
-      * pair 1's raw big wall — one anomalous sample must not force a
-      * size split that then isolates the anomaly inside its own
-      * min-wall group. If the big level is GENUINELY that slow, pair 2
-      * overruns the projection by at most ~0.4× small, eating once into
-      * the hard reserve that precedes the (separately budget-guarded)
-      * headline phase. */
-    def projectedSameSizePair(tS: Double, tB: Double): Double =
-      tS * 1.05 + math.min(tB, tS * 0.6)
+  private[graft] def summarize(runs: Seq[RunSample]): Summary = {
+    def stats(rs: Seq[RunSample]): Option[LevelStats] =
+      if (rs.isEmpty) None
+      else {
+        val ws = rs.map(_.wall).sorted
+        val m = ws.size / 2
+        val median = if (ws.size % 2 == 1) ws(m) else (ws(m - 1) + ws(m)) / 2
+        Some(LevelStats(ws.head, median, ws.last - ws.head, rs.minBy(_.wall).spill))
+      }
+    val (ss, bs) = runs.partition(_.small)
+    val (s, b) = (stats(ss), stats(bs))
+    val eff = s.zip(b).map { case (x, y) => x.min / y.min / (NBig.toDouble / NSmall) }
+    Summary(s, b, math.min(ss.size, bs.size), eff.getOrElse(-1.0))
   }
 
-  /** The block schedule: ≥ 2 size-matched samples per level by
-    * construction, runs grouped per level so cluster launch + executor
-    * JIT are paid once per block (~25-30 s/run saved in cluster mode —
-    * budget that goes to corpus size, which dilutes the serial floor the
-    * ≥0.8 criterion is fighting):
+  /** The scaling phase's samples and costs: `blocksSec` is the wall of
+    * the whole block schedule (launches, warm-ups, timed runs),
+    * `warmupSec` the summed walls of the level sessions' warm-ups. */
+  private final case class Scaling(runs: Seq[RunSample], blocksSec: Double,
+      warmupSec: Double)
+
+  /** The fixed block schedule, every run at `nDocs`:
     *
-    *   [small session: warm → sizing (caller) → S1@n]
-    *   [big session:   warm → B1@n → B2@n]
-    *   [small session: warm → S2@n]
+    *   [small: warm → S1] [big: warm → B1 → B2] [small: warm → S2]
     *
-    * The small samples BRACKET the big block, so a monotone VM-weather
-    * drift across the schedule lands on both sides of the ratio instead
-    * of on one level (the honesty concern that made earlier rounds
-    * alternate full pairs; this VM shows one-sided ±50% CPU-steal noise,
-    * and a single sample of either level is never evidence — round 4's
-    * unprotected single pair recorded 0.335 on code that measures
-    * 0.72–0.84 sampled twice). Every run's wall, size, spill and
-    * bench-clock offset is recorded in the artifact.
+    * Runs are grouped per level, so cluster launch and executor JIT are
+    * paid once per block, the way a real cluster benchmark reuses its
+    * cluster across repetitions. The small samples BRACKET the big block,
+    * so a monotone drift in host load lands on both sides of the ratio.
     *
-    * Weather rescue: sizing happens before the schedule, and this VM can
-    * degrade 2×+ mid-run. If S1 overruns so far that the remaining
-    * schedule cannot fit before `hardDeadline`, the big block drops to
-    * one run and/or S2 runs DOWNSIZED (with a matching downsized big run
-    * appended to keep the pair size-matched) — smaller clean pairs beat
-    * lone samples under any weather. `smallSession` is the already-open,
-    * already-warmed session the caller sized in; the block runner closes
-    * it and manages the rest. */
-  private def scalingBlocks(smallSession: SparkSession, nSmall: Int, nBig: Int,
-                            nDocs0: Long, cPerDoc: Double,
-                            scalingDeadline: Double, hardDeadline: Double,
-                            floorS: Double, floorB: Double,
-                            launchSec: Double): Seq[RunSample] = {
+    * The deadline guard projects B2 and S2 from walls measured earlier in
+    * this schedule and skips a run that would eat into the headline
+    * reserve (B2 first, since S2 closes the bracket). It logs every skip;
+    * it never resizes the corpus and never adds a run. Each block is
+    * fail-soft: a failed block costs its own samples, and its session is
+    * stopped either way. */
+  private def scalingBlocks(nDocs: Long): Scaling = {
+    val start = elapsedSec
     val runs = scala.collection.mutable.ArrayBuffer.empty[RunSample]
-    def timed(spark: SparkSession, small: Boolean, n: Long): RunSample = {
+    var warmups = Seq.empty[Double]
+    def level(cores: Int)(body: SparkSession => Unit): Unit =
+      withSession(levelSession(cores)) { spark =>
+        val t0 = System.nanoTime()
+        runPipeline(spark, WarmupDocs)
+        warmups :+= (System.nanoTime() - t0) / 1e9
+        body(spark)
+      }
+    def timed(spark: SparkSession, small: Boolean): RunSample = {
       val at = elapsedSec
-      val (t, sp) = timedRunIn(spark, n)
-      val r = RunSample(small, n, t, sp, at)
-      System.err.println(f"[bench] ${if (small) "small" else "big"}@$n: $t%.1f s " +
+      val (t, sp) = timedRunIn(spark, nDocs)
+      val r = RunSample(small, nDocs, t, sp, at)
+      System.err.println(f"[bench] ${if (small) "small" else "big"}@$nDocs: $t%.1f s " +
         f"(spill $sp%.0f MiB, started at $at%.0f s)")
       runs += r
       r
     }
-
-    // S1 in the sizing session (already warm)
-    val s1 = timed(smallSession, small = true, nDocs0)
-    closeLevel(smallSession)
-
-    // Remaining-schedule costs from MEASURED walls, not the model
-    val width = nBig.toDouble / nSmall
-    def estB(n: Long): Double =
-      floorB + math.max(0.0, s1.wall * n / nDocs0 - floorS) / width * 1.05
-    val warmB = floorB + math.max(0.0, s1.wall * 12000.0 / nDocs0 - floorS) / width * 1.05
-    val warmS = s1.wall * 12000.0 / nDocs0 + floorS * (1 - 12000.0 / nDocs0)
-
-    // Every remaining block is individually fail-soft: a transient
-    // session/cluster-launch failure mid-schedule must cost ONE block,
-    // not the whole round's scaling record (bench.json still carries
-    // only the in_progress stamp at this point).
     def block(label: String)(body: => Unit): Unit =
       try body
       catch { case e: Throwable =>
         System.err.println(s"[bench] $label failed (${e.getMessage}); " +
           "recording what completed")
       }
+    def fits(run: String, projectedSec: Double): Boolean = {
+      val left = budgetSec - HeadlineReserveSec - elapsedSec
+      if (projectedSec > left)
+        System.err.println(f"[bench] guard: skipping $run (projected " +
+          f"$projectedSec%.0f s, $left%.0f s left before the headline reserve)")
+      projectedSec <= left
+    }
 
-    // Big block: B1 always (it is the cheapest level and the ratio is
-    // nothing without it); B2 if it still leaves room for the small
-    // closing block.
+    // The first small block doubles as the cluster-launcher smoke test: if
+    // local-cluster executors cannot launch and warm up in this
+    // environment, the levels fall back to thread mode rather than zeroing
+    // the round's scaling record.
+    var openSmallSec = 0.0
+    def firstSmall(): Unit = {
+      val t0 = elapsedSec
+      level(NSmall) { s => openSmallSec = elapsedSec - t0; timed(s, small = true) }
+    }
+    block("first small block") {
+      try firstSmall()
+      catch { case e: Throwable if scaleMode == "cluster" && warmups.isEmpty =>
+        System.err.println(s"[bench] cluster scaling unavailable " +
+          s"(${e.getMessage}); falling back to thread-mode levels")
+        scaleMode = "threads"
+        firstSmall()
+      }
+    }
+    val s1 = runs.find(_.small).fold(0.0)(_.wall)
     block("big block") {
-      val big = openLevel(nBig)
-      val b1 = timed(big, small = false, nDocs0)
-      val smallCloseCost = launchSec + warmS + s1.wall * 1.05
-      if (elapsedSec + b1.wall * 1.05 + smallCloseCost < hardDeadline)
-        timed(big, small = false, nDocs0)
-      closeLevel(big)
-    }
-
-    // Small closing block: same size if it fits; else a downsized
-    // size-matched PAIR (small + one more big session); else nothing.
-    if (elapsedSec + launchSec + warmS + s1.wall * 1.05 < hardDeadline) {
-      block("closing small block") {
-        val small2 = openLevel(nSmall)
-        timed(small2, small = true, nDocs0)
-        closeLevel(small2)
-      }
-    } else {
-      val room = hardDeadline - elapsedSec
-      Sizing.downsize(nDocs0, room,
-        launchSec * 2 + warmS + warmB + s1.wall + estB(nDocs0)) match {
-        case Some(n2) =>
-          System.err.println(f"[bench] S2@$nDocs0 does not fit ($room%.0f s " +
-            f"left) — closing with a downsized pair at $n2 docs")
-          block("downsized closing pair") {
-            val small2 = openLevel(nSmall)
-            timed(small2, small = true, n2)
-            closeLevel(small2)
-            val big2 = openLevel(nBig)
-            timed(big2, small = false, n2)
-            closeLevel(big2)
-          }
-        case None =>
-          System.err.println(f"[bench] hard deadline: no room for any " +
-            "closing small run ≥ 20k docs; recording what completed")
+      level(NBig) { big =>
+        val b1 = timed(big, small = false)
+        if (fits("B2", b1.wall + openSmallSec + s1)) timed(big, small = false)
       }
     }
-    runs.toSeq
+    if (fits("S2", openSmallSec + s1))
+      block("closing small block") { level(NSmall)(timed(_, small = true)) }
+    Scaling(runs.toSeq, elapsedSec - start, warmups.sum)
   }
 
   /** Per-stage wall times of one pipeline pass: `DedupPipeline.stages`
@@ -421,311 +303,136 @@ object Bench {
     * check inside `DedupPipeline.signatures` included — is attributed to
     * that stage. The holds run one after another, so no two walls
     * overlap. */
-  private def stagedRun(cores: Int, n: Long): Seq[(String, Double)] = {
-    val spark = session(cores)
-    // bench.json keys of the stages' store names
-    val keys = Map("signatures" -> "signatures", "scored" -> "lsh_verify",
-      "substr_edges" -> "substring", "assign" -> "connected_components",
-      "flags" -> "winner_flags")
-    val out = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-    val pages = SyntheticCorpus.pages(spark, n)
-    var t0 = System.nanoTime()
-    DedupPipeline.stages(pages, cfg) { (name, build) =>
-      val df = Caches.truncate(build())
-      df.count()
-      val t1 = System.nanoTime()
-      out += keys(name) -> (t1 - t0) / 1e9
-      t0 = t1
-      df
-    }
-    Caches.release(spark)
-    Sessions.stop(spark)
-    out.toSeq
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-
-    // Staleness stamp FIRST: if an external timeout kills this JVM before
-    // any phase completes, bench.json says so — a leftover artifact from
-    // a previous run can't masquerade as this run's result.
-    Files.writeString(Paths.get("bench.json"),
-      s"""{"metric":"total","value":-1.0,"unit":"sec","queries":{},"sf":"$sfDir","in_progress":true}\n""")
-
-    // -- 0. sizing: the corpus is chosen ADAPTIVELY so that the
-    // guaranteed two-pair block schedule provably fits the budget on THIS
-    // machine under THIS load (the round-4 failure: a fixed 250k corpus
-    // on a 2.6×-degraded VM left budget for exactly one pair, and the one
-    // unprotected sample recorded efficiency 0.335 on code that measures
-    // 0.72–0.84 with min-of-2 — a smaller corpus costs ~0.03–0.07 of
-    // efficiency from the serial-floor Amdahl term, a single pair can
-    // cost 0.4). The sizing run happens INSIDE the already-warmed small
-    // session, so its wall is the in-session small-level cost model's own
-    // intercept+slope — no fresh-JVM term to subtract out. Estimates only
-    // pick the SIZE — block scheduling uses measured walls
-    // (scalingBlocks).
-    val nSmall = sys.env.getOrElse("SPARK_GRAFT_SCALE_N", "1").toInt
-    val nBig = sys.env.getOrElse("SPARK_GRAFT_SCALE_4N", "4").toInt
-    // 100 s: the 26-query headline phase measures 53–61 s warm / ~59 cold
-    // across sessions (post the per-row simhash rewrite) — ~1.5× slack.
-    // Every 10 s freed here feeds the corpus ladder, and a bigger corpus
-    // dilutes the serial floor where it hurts most (the big level: floor
-    // is ~20% of a 120k big wall vs ~6% of the small one)
-    val headlineReserve =
-      sys.env.getOrElse("SPARK_GRAFT_HEADLINE_RESERVE_SEC", "100").toDouble
-    val scalingDeadline = budgetSec - headlineReserve
-    val warmupDocs = 25000L
-    // Opening the small session doubles as the cluster-launcher smoke
-    // test: if local-cluster executor launch fails in this environment
-    // (launcher layout, env), fall back to the thread-mode levels rather
-    // than zeroing the round's scaling record.
-    val smallSession: SparkSession =
-      try openLevel(nSmall)
-      catch {
-        case e: Throwable if scaleMode != "threads" =>
-          System.err.println(s"[bench] cluster scaling unavailable " +
-            s"(${e.getMessage}); falling back to thread-mode levels")
-          scaleMode = "threads"
-          openLevel(nSmall)
+  private def stagedRun(cores: Int): Map[String, Double] =
+    withSession(session(cores)) { spark =>
+      val keys = StageKeys.toMap
+      val out = Map.newBuilder[String, Double]
+      var t0 = System.nanoTime()
+      DedupPipeline.stages(SyntheticCorpus.pages(spark, StageDocs), cfg) { (name, build) =>
+        val df = Caches.truncate(build())
+        df.count()
+        val t1 = System.nanoTime()
+        out += keys(name) -> (t1 - t0) / 1e9
+        t0 = t1
+        df
       }
-    // scaleMode is final here — bind the mode's wall-model constants once.
-    // floors = measured 2k-doc intercepts per level (quiet VM, post the
-    // round-5 floor cuts); launch = session/cluster spin-up seconds.
-    val (wFloorS, wFloorB, wCal, wLaunch) =
-      if (scaleMode == "threads") (8.0, 8.0, 1.35, 2.0) else (12.0, 10.0, 1.1, 14.0)
-    val warmupWall: Double = {
-      val t0 = System.nanoTime()
-      runPipeline(smallSession, warmupDocs)
-      (System.nanoTime() - t0) / 1e9
+      Caches.release(spark)
+      out.result()
     }
-    val cPerDoc = Sizing.perDocCost(warmupWall, warmupDocs, wFloorS, wCal)
-    val nDocs = sys.env.get("SPARK_GRAFT_BENCH_DOCS").map(_.toLong)
-      .getOrElse(Sizing.chooseCorpus(scalingDeadline - elapsedSec, cPerDoc,
-        wFloorS, wFloorB, wLaunch, nBig / nSmall))
-    System.err.println(f"[bench] sizing: warmup $warmupDocs docs ${warmupWall}%.1f s " +
-      f"→ est blocks ${Sizing.plannedBlocksSec(cPerDoc, nDocs, wFloorS, wFloorB, wLaunch, nBig / nSmall)}%.0f s " +
-      f"→ corpus $nDocs docs")
 
-    // -- 1. scaling: same job, same input, N vs 4N EXECUTOR JVMs
-    // (local-cluster[n,1,mem]) — FIRST, in the freshest regime (running
-    // the 26 headline queries beforehand was measured to slow every
-    // subsequent pipeline session ~8-10% — heap fragmentation and
-    // allocator state leak across SparkSessions inside one JVM, and the
-    // scaling ratio is the round's tightest criterion). Each level is a
-    // real cluster of single-core executor processes with constant
-    // per-executor memory — the criterion's own shape: 4N executors
-    // bring 4× aggregate heap and GC throughput exactly like a cluster
-    // scale-out, and shuffles cross real netty, not an in-process map.
-    // N=1 vs 4N=4 (not 8 vs 32): this VM's shared memory subsystem
-    // saturates around ~8 busy threads, so 1→4 is the widest regime
-    // where executor scaling — the thing the criterion is about — is
-    // observable on one host. The per-stage table below is the evidence
-    // that no stage is serial by construction at any width.
-    val allRuns0 = scalingBlocks(smallSession, nSmall, nBig, nDocs, cPerDoc,
-      scalingDeadline = scalingDeadline, hardDeadline = budgetSec - 90,
-      floorS = wFloorS, floorB = wFloorB, launchSec = wLaunch)
-    // The recorded ratio takes the MINIMUM wall per level WITHIN one
-    // corpus size (walls are only comparable at equal size; sizes differ
-    // only when the downsize rescue fired) — min = the least-contended,
-    // most hardware-faithful sample of each level. NOT max-of-pair-ratios:
-    // a pair whose small wall was inflated by contention would win that
-    // contest spuriously (observed: pair ratios 0.643/0.881 where the
-    // 0.881 pair had the WORSE small wall — the honest read of that
-    // session is min-walls 0.756). With several sizes, the size whose
-    // min-wall ratio is best is recorded; every sample, its size, level
-    // and start offset stay in the artifact.
-    case class SizeGroup(docs: Long, tS: Double, tB: Double,
-                         spS: Double, spB: Double)
-    def bestGroup(runs: Seq[RunSample]): SizeGroup =
-      runs.groupBy(_.docs).flatMap { case (docs, rs) =>
-        val (ss, bs) = rs.partition(_.small)
-        if (ss.isEmpty || bs.isEmpty) None
-        else {
-          val s = ss.minBy(_.wall); val b = bs.minBy(_.wall)
-          Some(SizeGroup(docs, s.wall, b.wall, s.spill, b.spill))
-        }
-      } match {
-        case gs if gs.nonEmpty => gs.maxBy(g => g.tS / g.tB)
-        case _ =>
-          // catastrophe path (budget died before any big run): record a
-          // throughput-normalized degenerate group so the artifact still
-          // says what happened instead of crashing the whole bench
-          System.err.println("[bench] no size has samples at BOTH levels " +
-            "— recording a docs/sec-normalized group")
-          val ss = runs.filter(_.small)
-          val bs = runs.filterNot(_.small)
-          val s = if (ss.nonEmpty) ss.minBy(r => r.wall / r.docs) else RunSample(true, nDocs, -1, 0, 0)
-          val b = if (bs.nonEmpty) bs.minBy(r => r.wall / r.docs) else RunSample(false, nDocs, -1, 0, 0)
-          SizeGroup(s.docs, s.wall, b.wall * s.docs / b.docs, s.spill, b.spill)
-      }
-    var allRuns = allRuns0
-    var best = bestGroup(allRuns)
-    def efficiency = (best.tS / best.tB) / (nBig.toDouble / nSmall)
-    def tSmall = best.tS
-    def tBig = best.tB
-    def nPairs = allRuns.groupBy(_.docs).valuesIterator
-      .map(rs => math.min(rs.count(_.small), rs.count(!_.small))).sum
-    def bestDocs = best.docs
-    def dpsSmall = bestDocs / tSmall
-    def dpsBig = bestDocs / tBig
-
-    // -- 2. headline queries ------------------------------------------------
-    val spark = session(cpus)
-    // Untimed warmup pass over the SAME queries at a smaller SF before the
-    // timed pass: first-touch costs — JIT of the analysis/codegen paths the
-    // scaling pipeline never exercises (ANN, embeddings, n-gram scoring),
-    // parquet footer readers, the noop writer — otherwise land on whichever
-    // queries run first alphabetically (measured: 67 s cold vs 49 s warm
-    // for the identical 26 queries in one JVM; the round-4 driver record
-    // charged q_ann_ivf_top1 ~9 s of it). The warmup reads a DIFFERENT
-    // input directory, so nothing the timed pass touches is cached by this
-    // — only JVM-global state gets warm; tracked caches from the warmup
-    // are released before timing starts. Skipped when the budget is
-    // already tight — the timed pass is then merely cold, not wrong.
-    val warmupSfDir =
-      sys.env.getOrElse("SPARK_GRAFT_HEADLINE_WARMUP_DIR", "/root/testdata/sf0.001")
-    val headlineWarmupSec: Double =
-      if (sys.env.getOrElse("SPARK_GRAFT_HEADLINE_WARMUP", "1") == "1"
-          && warmupSfDir != sfDir && Files.isDirectory(Paths.get(warmupSfDir))
-          && elapsedSec < budgetSec - 110) {
+  /** The 26 headline queries at local[cpus], timed after one untimed
+    * warm-up pass of the same queries at a smaller SF: first-touch costs
+    * (JIT of the analysis paths the scaling pipeline never exercises,
+    * parquet footer readers, the noop writer) otherwise land on whichever
+    * queries run first (measured: 67 s cold vs 49 s warm for the identical
+    * 26 queries in one JVM). The warm-up reads a DIFFERENT input
+    * directory, so only JVM-global state gets warm. Returns the warm-up
+    * wall and each query's wall. */
+  private def headline(cpus: Int, sfDir: String): (Double, Seq[(String, Double)]) =
+    withSession(session(cpus)) { spark =>
+      val warmupSfDir =
+        sys.env.getOrElse("SPARK_GRAFT_HEADLINE_WARMUP_DIR", "/root/testdata/sf0.001")
+      val sorted = SparkEntry.queries.toSeq.sortBy(_._1)
+      val warmupSec =
+        if (warmupSfDir != sfDir && Files.isDirectory(Paths.get(warmupSfDir))
+            && elapsedSec < budgetSec - 110) {
+          val t0 = System.nanoTime()
+          // mid-loop guard: the alphabetically-first queries carry most of
+          // the first-touch cost, so a cut warm-up still does its job
+          val it = sorted.iterator
+          var cut = false
+          while (it.hasNext && !cut) {
+            val (name, fn) = it.next()
+            try fn(spark, warmupSfDir).write.mode("overwrite").format("noop").save()
+            catch { case e: Throwable =>
+              System.err.println(s"[bench] headline warmup $name failed: ${e.getMessage}")
+            }
+            if (elapsedSec > budgetSec - 85) {
+              System.err.println(f"[bench] headline warmup cut after $name at $elapsedSec%.0f s")
+              cut = true
+            }
+          }
+          Caches.release(spark)
+          spark.catalog.clearCache()
+          val t = (System.nanoTime() - t0) / 1e9
+          System.err.println(f"[bench] headline warmup pass ($warmupSfDir): $t%.1f s")
+          t
+        } else 0.0
+      val results = sorted.map { case (name, fn) =>
         val t0 = System.nanoTime()
-        // mid-loop guard: the pass measures ~33 s on a quiet VM, but it is
-        // the one phase with no per-unit cost model — under 2×+ degradation
-        // a partial warmup (the alphabetically-first queries carry most of
-        // the first-touch cost) must not consume the timed pass's room
-        val warmupBreaker = SparkEntry.queries.toSeq.sortBy(_._1).iterator
-        var warmupCut = false
-        while (warmupBreaker.hasNext && !warmupCut) {
-          val (name, fn) = warmupBreaker.next()
-          try fn(spark, warmupSfDir).write.mode("overwrite").format("noop").save()
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] headline warmup $name failed: ${e.getMessage}")
-          }
-          if (elapsedSec > budgetSec - 85) {
-            System.err.println(f"[bench] headline warmup cut after $name at $elapsedSec%.0f s")
-            warmupCut = true
-          }
+        try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
         }
-        Caches.release(spark)
-        spark.catalog.clearCache()
-        val t = (System.nanoTime() - t0) / 1e9
-        System.err.println(f"[bench] headline warmup pass ($warmupSfDir): $t%.1f s")
-        t
-      } else 0.0
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        name -> (System.nanoTime() - t0) / 1e9
       }
-      name -> (System.nanoTime() - t0) / 1e9
-    }
-    val total = results.map(_._2).sum
-    Caches.release(spark)
-    Sessions.stop(spark)
-
-    // -- 2b. bonus scaling pairs: the ratio is the round's tightest
-    // criterion and min-of-walls sharpens with samples, so leftover
-    // end-of-run budget goes to more SAME-SIZE pairs before the optional
-    // stage table (whose min-of-2 pass it displaces — a better efficiency
-    // sample is worth more than a denoised stage row). A bonus pair pays
-    // full fresh-session costs (launch + warm at each level). Guarded so
-    // a too-optimistic projection costs at most one overrun into the
-    // final margin; skipped once the recorded ratio already clears the
-    // target.
-    // try: the scaling + headline results above are not yet on disk —
-    // a transient session failure here must fall through to
-    // writeArtifacts with whatever completed, not kill the bench.
-    try {
-      val bonusOverhead = 2 * wLaunch +
-        Sizing.warmSmallSec(cPerDoc, wFloorS) + Sizing.warmBigSec(cPerDoc, wFloorB)
-      while (efficiency < 0.82 &&
-             elapsedSec + Sizing.projectedSameSizePair(best.tS, best.tB) +
-               bonusOverhead + 20.0 < budgetSec * 0.95) {
-        System.err.println(f"[bench] bonus pair at $bestDocs docs " +
-          f"(eff so far $efficiency%.3f, ${budgetSec - elapsedSec}%.0f s left)")
-        val docs = bestDocs
-        val sSess = openLevel(nSmall)
-        val atS = elapsedSec
-        val (tS, spS) = timedRunIn(sSess, docs)
-        closeLevel(sSess)
-        val bSess = openLevel(nBig)
-        val atB = elapsedSec
-        val (tB, spB) = timedRunIn(bSess, docs)
-        closeLevel(bSess)
-        allRuns = allRuns :+ RunSample(small = true, docs, tS, spS, atS) :+
-          RunSample(small = false, docs, tB, spB, atB)
-        best = bestGroup(allRuns)
-      }
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] bonus pair failed (${e.getMessage}); " +
-        "recording what completed")
+      Caches.release(spark)
+      (warmupSec, results)
     }
 
-    // -- 3. per-stage scaling table (smaller corpus; optional over budget).
-    // Artifacts are written BEFORE the optional table and rewritten with it
-    // after: if an external timeout kills the JVM mid-table, the headline
-    // and scaling results measured above are already on disk.
-    val nStage = math.max(50000L, nDocs / 5)
+  /** Everything one bench run records, rendered as the bench.json line,
+    * the bench_history.jsonl line and BENCH.md. `stages` holds
+    * (key, small-level sec, big-level sec) in pipeline order. */
+  private[graft] final case class Record(sfDir: String, cpus: Int,
+      queries: Seq[(String, Double)], headlineWarmupSec: Double, docs: Long,
+      runs: Seq[RunSample], scaleMode: String, execMb: Int, blocksSec: Double,
+      warmupSec: Double, stages: Seq[(String, Double, Double)]) {
 
-    def writeArtifacts(stages: Seq[(String, Double, Double)],
-                       emitStdout: Boolean): Unit = {
-      val qs = results.map { case (k, v) => "\"" + k + f"\":$v%.3f" }
-        .mkString("{", ",", "}")
+    lazy val summary: Summary = summarize(runs)
+    def total: Double = queries.map(_._2).sum
+    private def small = runs.filter(_.small)
+    private def big = runs.filterNot(_.small)
+    private def arr(xs: Seq[Double]): String = xs.map(x => f"$x%.2f").mkString("[", ",", "]")
+    private def docsArr(rs: Seq[RunSample]): String = rs.map(_.docs).mkString("[", ",", "]")
+    private def minWall(l: Option[LevelStats]): Double = l.fold(-1.0)(_.min)
+    private def dps(l: Option[LevelStats]): Double = l.fold(0.0)(docs / _.min)
+    private def spill(l: Option[LevelStats]): Double = l.fold(0.0)(_.spill)
+
+    def json: String = {
+      val s = summary
+      val qs = queries.map { case (k, v) => "\"" + k + f"\":$v%.3f" }.mkString("{", ",", "}")
       val stageJson = stages.map { case (k, ts, tb) =>
         "\"" + k + f"""":{"sec_small":$ts%.2f,"sec_big":$tb%.2f,"speedup":${ts / tb}%.2f}"""
       }.mkString("{", ",", "}")
-      def sampleArr(xs: Seq[Double]): String =
-        xs.map(x => f"$x%.2f").mkString("[", ",", "]")
-      val sRuns = allRuns.filter(_.small)
-      val bRuns = allRuns.filterNot(_.small)
-      // per-size min-wall efficiencies (sizes with both levels sampled)
-      val groupEffs = allRuns.groupBy(_.docs).toSeq.sortBy(-_._1).flatMap {
-        case (docs, rs) =>
-          val (ss, bs) = rs.partition(_.small)
-          if (ss.isEmpty || bs.isEmpty) None
-          else Some(docs ->
-            (ss.map(_.wall).min / bs.map(_.wall).min) / (nBig.toDouble / nSmall))
-      }
-      val groupEffJson = groupEffs
-        .map { case (d, e) => f""""$d":$e%.3f""" }.mkString("{", ",", "}")
       val scaling =
-        f"""{"pipeline_docs":$bestDocs,"cores_small":$nSmall,"cores_big":$nBig,""" +
-          f""""sec_small":$tSmall%.2f,"sec_big":$tBig%.2f,""" +
-          f""""docs_per_sec_small":$dpsSmall%.1f,"docs_per_sec_big":$dpsBig%.1f,""" +
-          f""""scaling_efficiency":$efficiency%.3f,"timed_pairs":$nPairs,""" +
-          f""""samples_small":${sampleArr(sRuns.map(_.wall))},""" +
-          f""""samples_big":${sampleArr(bRuns.map(_.wall))},""" +
-          f""""sample_docs_small":${sRuns.map(_.docs).mkString("[", ",", "]")},""" +
-          f""""sample_docs_big":${bRuns.map(_.docs).mkString("[", ",", "]")},""" +
-          f""""sample_at_sec_small":${sampleArr(sRuns.map(_.atSec))},""" +
-          f""""sample_at_sec_big":${sampleArr(bRuns.map(_.atSec))},""" +
-          f""""size_group_efficiencies":$groupEffJson,""" +
-          f""""warmup_docs":$warmupDocs,"warmup_sec":$warmupWall%.1f,""" +
-          s""""scale_mode":"$scaleMode","exec_mb":${sys.env.getOrElse("SPARK_GRAFT_EXEC_MB", "8192")},""" +
-          f""""est_blocks_sec":${Sizing.plannedBlocksSec(cPerDoc, nDocs, wFloorS, wFloorB, wLaunch, nBig / nSmall)}%.1f,""" +
-          f""""headline_reserve_sec":$headlineReserve%.0f,""" +
+        f"""{"pipeline_docs":$docs,"cores_small":$NSmall,"cores_big":$NBig,""" +
+          f""""sec_small":${minWall(s.small)}%.2f,"sec_big":${minWall(s.big)}%.2f,""" +
+          f""""docs_per_sec_small":${dps(s.small)}%.1f,"docs_per_sec_big":${dps(s.big)}%.1f,""" +
+          f""""scaling_efficiency":${s.efficiency}%.3f,"timed_pairs":${s.timedPairs},""" +
+          s""""samples_small":${arr(small.map(_.wall))},"samples_big":${arr(big.map(_.wall))},""" +
+          s""""sample_docs_small":${docsArr(small)},"sample_docs_big":${docsArr(big)},""" +
+          s""""sample_at_sec_small":${arr(small.map(_.atSec))},""" +
+          s""""sample_at_sec_big":${arr(big.map(_.atSec))},""" +
+          f""""size_group_efficiencies":{"$docs":${s.efficiency}%.3f},""" +
+          f""""warmup_docs":$WarmupDocs,"warmup_sec":$warmupSec%.1f,""" +
+          s""""scale_mode":"$scaleMode","exec_mb":$execMb,""" +
+          f""""est_blocks_sec":$blocksSec%.1f,"headline_reserve_sec":$HeadlineReserveSec%.0f,""" +
           """"mem_fraction_small":0.600,"mem_fraction_big":0.600,""" +
-          f""""spill_small_mb":${best.spS}%.1f,"spill_big_mb":${best.spB}%.1f,""" +
-          f""""stage_docs":$nStage,"stages":$stageJson}"""
-      val json =
-        f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,""" +
-          f""""headline_warmup_sec":$headlineWarmupSec%.1f,"sf":"$sfDir","scaling":$scaling}"""
-      if (emitStdout) println(json)
-      Files.writeString(Paths.get("bench.json"), json + "\n")
-      writeBenchMd(stages)
+          f""""spill_small_mb":${spill(s.small)}%.1f,"spill_big_mb":${spill(s.big)}%.1f,""" +
+          s""""stage_docs":$StageDocs,"stages":$stageJson}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,""" +
+        f""""headline_warmup_sec":$headlineWarmupSec%.1f,"sf":"$sfDir","scaling":$scaling}"""
     }
 
-    def writeBenchMd(stages: Seq[(String, Double, Double)]): Unit = {
+    def history(ts: String): String =
+      f"""{"ts":"$ts","docs":$docs,"eff":${summary.efficiency}%.3f,""" +
+        s""""pairs":${summary.timedPairs},"mode":"$scaleMode",""" +
+        s""""samples_small":${arr(small.map(_.wall))},"samples_big":${arr(big.map(_.wall))},""" +
+        s""""sample_docs_small":${docsArr(small)},"sample_docs_big":${docsArr(big)},""" +
+        f""""warmup_sec":$warmupSec%.1f,"headline_sec":$total%.1f,"sf":"$sfDir"}"""
+
+    def benchMd: String = {
+      val s = summary
+      // rows start "||": stripMargin takes the first bar
+      def levelRow(n: Int, rs: Seq[RunSample], l: Option[LevelStats]): String = l match {
+        case Some(x) =>
+          f"|| $n | ${rs.size} | ${x.min}%.2f | ${x.median}%.2f | ${x.spread}%.2f | " +
+            f"${docs / x.min}%.1f | ${x.spill}%.1f |"
+        case None => s"|| $n | 0 | – | – | – | – | – |"
+      }
       val stageRows =
         if (stages.isEmpty)
-          // the stage table is the LOWEST-priority phase (a better
-          // efficiency sample always displaces it) — say so rather than
-          // render an empty table
-          "|_(skipped this run: the scaling pairs + headline phase " +
-            "consumed the budget — the table is the lowest-priority " +
-            "phase; a prior run's table survives in git history, and " +
+          "|_(skipped this run: the deadline guard found no room for it; " +
             "`python3 perfbench/run.py --trace 1` reports per-layer cost)_"
         else stages.map { case (k, ts, tb) =>
           // sub-2 s stage walls are dominated by per-job driver latency at
@@ -733,203 +440,131 @@ object Bench {
           val mark = if (ts < 2.0) " †" else ""
           f"|| $k$mark | $ts%.2f | $tb%.2f | ${ts / tb}%.2f× |"
         }.mkString("\n")
-      val bench =
       f"""# BENCH — graft engine
          |
          |## Headline queries (local[$cpus], $sfDir)
          |
          |Timed after one untimed warmup pass of the same 26 queries at
-         |sf0.001 ($headlineWarmupSec%.1f s, recorded in bench.json as
-         |`headline_warmup_sec`): the warmup reads a different input
-         |directory — nothing the timed pass touches is cached by it — so
-         |it warms only JVM-global state (JIT, codegen caches, parquet
-         |footer readers) that would otherwise be charged to whichever
-         |query happens to run first.
+         |sf0.001 ($headlineWarmupSec%.1f s, `headline_warmup_sec` in
+         |bench.json): it reads a different input directory, so it warms
+         |only JVM-global state (JIT, codegen caches, parquet footer
+         |readers) that would otherwise be charged to whichever query runs
+         |first.
          |
          || query | sec |
          ||---|---|
-         ${results.map { case (k, v) => f"|| $k | $v%.3f |" }.mkString("\n")}
+         ${queries.map { case (k, v) => f"|| $k | $v%.3f |" }.mkString("\n")}
          || **total** | **$total%.3f** |
          |
          |## Cluster-size scaling criterion (north_rule)
          |
-         |Scaling mode: **$scaleMode** — `cluster` = each level is a real
-         |multi-executor local cluster (`local-cluster[n,1,mem]`): n
-         |single-core executor JVMs with their own heaps, GC, and netty
-         |shuffle, per-executor memory CONSTANT across levels, so the 4N
-         |level brings 4× aggregate memory and GC throughput exactly the
-         |way a real cluster scale-out does. This is the criterion's own
-         |shape (N vs 4N EXECUTORS); the earlier thread-mode levels
-         |(local[n], one shared heap) charged the 4N level a shared-JVM
-         |co-scheduling penalty a real cluster never pays — measured
-         |0.63–0.71 thread-mode vs 0.73–0.84 cluster-mode on identical
-         |code and corpus. The same flagship dedup pipeline (signature →
-         |LSH → verify → substring → connected components → winner →
-         |emission) runs on the identical deterministic synthetic corpus
-         |at both levels, $nPairs size-matched timed pair(s), scheduled
-         |as level BLOCKS — [small: sizing + S1] [big: B1 B2] [small: S2]
-         |— so cluster launch + executor-JVM JIT warmup are paid once per
-         |block, not once per run, the way a real cluster benchmark
-         |reuses its cluster across repetitions (the saved ~25-30 s/run
-         |goes to corpus size, which dilutes the serial floor the
-         |criterion is fighting); the small samples BRACKET the big block
-         |so monotone VM-weather drift lands on both sides of the ratio,
-         |and every run's start offset is in bench.json
-         |(`sample_at_sec_*`) to keep the drift auditable. The recorded
-         |efficiency takes the MINIMUM wall per level across the runs of
-         |one corpus size (min = the least-contended, most
-         |hardware-faithful sample of each level on a VM with one-sided
-         |CPU-steal noise; every raw sample, its corpus size, and every
-         |per-size min-wall ratio are recorded in bench.json —
-         |max-of-pair-ratios was considered and rejected: a
-         |contention-inflated small wall would win it spuriously). The
-         |corpus size is chosen ADAPTIVELY
-         |from a sizing warmup so ≥ 2 pairs fit the run budget under the
-         |current VM load, and if the VM degrades mid-run past what sizing
-         |could see, the closing pair runs at a DOWNSIZED corpus rather
-         |than not at all — a smaller clean pair costs a few hundredths of
-         |efficiency (serial-floor Amdahl term), an unprotected single
-         |sample under CPU steal has cost 0.4 (round-4 record).
-         |Both levels run IDENTICAL configuration — Spark's default
-         |`spark.memory.fraction` (0.6), same partitioning — so no per-level
-         |knob can shape the ratio; the spill column is the detector for
-         |the one thing a shared heap could hide (memory starvation at
-         |either width). Min walls at the recorded size ($bestDocs docs):
+         |Scaling mode: **$scaleMode** (`cluster`: each level is a
+         |`local-cluster[n,1,$execMb]` of n single-core executor JVMs with
+         |their own heaps, GC and netty shuffle; `threads`: `local[n]`, used
+         |only when a cluster launch fails). The same flagship pipeline
+         |runs on the same deterministic synthetic corpus at both levels.
          |
-         || parallelism | wall sec | docs/sec | spilled MiB |
-         ||---|---|---|---|
-         || local[$nSmall] | $tSmall%.2f | $dpsSmall%.1f | ${best.spS}%.1f |
-         || local[$nBig] | $tBig%.2f | $dpsBig%.1f | ${best.spB}%.1f |
+         |The protocol is fixed before any timing: every run is at
+         |$docs docs, and the blocks are [small: warm, S1] [big: warm, B1,
+         |B2] [small: warm, S2]; each level session first runs an untimed
+         |$WarmupDocs-doc warm-up. The small samples bracket the big block,
+         |so a monotone drift in host load lands on both sides of the
+         |ratio. A deadline guard may skip B2 or S2 (it logs the skip); it
+         |never resizes the corpus or adds a run. This run has
+         |${small.size} small and ${big.size} big samples, ${s.timedPairs}
+         |size-matched pair(s); the schedule took $blocksSec%.0f s.
          |
-         |**Scaling efficiency (T_N / T_4N) / 4 = $efficiency%.3f**
-         |(this VM shows one-sided ±50%% run-to-run noise from CPU steal on
-         |shuffle stages; taking min walls over $nPairs size-matched
-         |pair(s) bounds, not removes, that exposure — the per-level
-         |sample arrays, start offsets and per-size ratios in bench.json
-         |show the spread).
+         || executors | samples | min s | median s | spread s | docs/sec at min | spilled MiB at min |
+         ||---|---|---|---|---|---|---|
+         ${levelRow(NSmall, small, s.small)}
+         ${levelRow(NBig, big, s.big)}
          |
-         |Level choice: this VM's shared memory subsystem saturates around
-         |~8 busy threads, so 1→4 executors is the widest pair in which
-         |executor scaling — the thing the criterion is about — is
-         |observable on one host; a real 4N-executor cluster also scales
-         |memory BANDWIDTH with the executors, which no single host can
-         |emulate.
+         |Samples (s, in run order): small ${arr(small.map(_.wall))},
+         |big ${arr(big.map(_.wall))}; start offsets in bench.json
+         |(`sample_at_sec_*`).
          |
-         |### Per-stage $nSmall→$nBig speedup ($nStage docs)
+         |**Scaling efficiency (min T_N / min T_4N) / 4 = ${s.efficiency}%.3f**.
+         |Every run records this one statistic over its fixed samples.
+         |Single samples on this host swing by ±50%% with CPU steal, so
+         |read the median and spread beside it, and read the spread across
+         |runs in `bench_history.jsonl`.
+         |
+         |One host cannot show the criterion's 4N cluster: the 4N level
+         |runs 4 executor JVMs and the driver on the same 4 vCPUs, one
+         |memory bus and one page cache, so the driver's serial work and
+         |host contention both land on the big level.
+         |
+         |### Per-stage $NSmall→$NBig speedup ($StageDocs docs, one pass per level)
          |
          |(Thread-mode `local[n]` levels — an intra-JVM instrument for the
          |compute-vs-DRAM split per stage, separate from the
          |executor-scaling criterion above.)
          |
-         || stage | local[$nSmall] s | local[$nBig] s | speedup |
+         || stage | local[$NSmall] s | local[$NBig] s | speedup |
          ||---|---|---|---|
          $stageRows
          |
-         |† wall < 2 s at local[$nSmall]: dominated by per-job driver
+         |† wall < 2 s at local[$NSmall]: dominated by per-job driver
          |latency at this stage corpus, not by parallel work — its speedup
          |column is noise, not scaling signal.
-         |
-         |### Reading these numbers against the ≥0.8 target
-         |
-         |The target presumes 4× executors bring 4× of every resource.
-         |Cluster mode gives each executor its own fixed -Xms=-Xmx heap
-         |and GC (deliberately NOT pre-touched: zeroing 4×8 GB at launch
-         |measured 110-150 s under adverse hypervisor memory weather —
-         |the in-session warmup run pays first-touch for the pages runs
-         |actually use instead), so 4× executors do
-         |bring 4× CPU, heap, and GC throughput — but all executors still
-         |draw on ONE host's memory bandwidth, page cache, and driver —
-         |and the per-stage table shows the split: compute-dominant
-         |stages (signatures)
-         |scale near-linearly, shuffle-dominant stages track the DRAM
-         |ceiling, and the connected-components loop is bounded by its
-         |per-round driver latency, not by shuffle volume (its edge sets
-         |are tiny at this corpus size; on a cluster the loop's rounds
-         |are identical and the scheduler round-trips amortize over real
-         |work). The per-stage table is the evidence that no stage is
-         |serial by construction (no collect-loops, no driver-side joins,
-         |no unpartitioned state).
-         |
-         |Measured decomposition of one pipeline run: an
-         |executor-count-independent serial floor — ~7–8 s thread mode,
-         |~13 s cluster mode (the AQE stage-submission jobs cross real
-         |scheduler RPC) — after the round-5 cuts (window-form star rounds,
-         |one-pass id enforcement, window winner selection took the floor
-         |down from ~10.7 s / ~213 jobs); plus a contention term from
-         |hypervisor weather that varies by the hour (identical code and
-         |data measured 0.66–0.81 efficiency in one day — every run is a
-         |line in bench_history.jsonl, and single samples of either level
-         |swing ±50%%: observed 87.6/125.2 s small and 27.2/54.3 s big
-         |walls within ONE quiet-hour probe). GC was ruled out as that
-         |term: 0.4–1.3 s of collector time per 120k-doc run at BOTH
-         |levels. The benchmark's traced run
-         |(`python3 perfbench/run.py --workload dup_heavy --seed 1
-         |--seconds 15 --trace 1`) re-measures both from the flagship's
-         |own passes: jobs per stage layer (`*.jobs`) and collector time
-         |per run (`run.gc_s`). On a real 4N cluster the floor amortizes
-         |over real per-stage work and each executor brings its own
-         |memory bus, so both terms are artifacts of benchmarking on one
-         |host — which is exactly why the raw samples, not just the
-         |ratio, are in the artifact.
          |""".stripMargin
-      Files.writeString(Paths.get("BENCH.md"), bench)
     }
-
-    // The per-stage table runs under try: build.sbt documents the stdout
-    // contract as ONE bare JSON line, so intermediate state goes to
-    // bench.json only (the file survives an external kill) and the single
-    // stdout emission happens at the end — a crash in the optional phase
-    // falls through to it with whatever completed.
-    writeArtifacts(Seq.empty, emitStdout = false) // results-so-far safety net
-    val stages: Seq[(String, Double, Double)] =
-      try {
-        if (elapsedSec > budgetSec * 0.95) {
-          System.err.println(f"[bench] budget: skipping per-stage table at $elapsedSec%.0f s")
-          Seq.empty
-        } else {
-          // per-stage min-of-2 when budget allows: the stage table has the
-          // same one-sided CPU-steal exposure as the main pairs (observed:
-          // a contention episode put `signatures` — the most parallel
-          // stage — at speedup 1.0×); a second pass costs one stage-corpus
-          // pair and takes per-stage minima per level
-          var small = stagedRun(nSmall, nStage).toMap
-          var big = stagedRun(nBig, nStage).toMap
-          // +20 s: stage walls exclude the two session startups a pass pays
-          val passWall = small.values.sum + big.values.sum + 20.0
-          if (elapsedSec + passWall * 1.1 < budgetSec * 0.95) {
-            small = stagedRun(nSmall, nStage).toMap.map { case (k, t) =>
-              k -> math.min(t, small(k)) }
-            big = stagedRun(nBig, nStage).toMap.map { case (k, t) =>
-              k -> math.min(t, big(k)) }
-          }
-          // stage order from a fresh run's key order is not stable in a
-          // Map; emit in pipeline order
-          Seq("signatures", "lsh_verify", "substring",
-            "connected_components", "winner_flags")
-            .filter(k => small.contains(k) && big.contains(k))
-            .map(k => (k, small(k), big(k)))
-        }
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] per-stage table failed: ${e.getMessage}"); Seq.empty
-      }
-    writeArtifacts(stages, emitStdout = true) // THE stdout line
-
-    // Append-only session history: one line per completed bench run, so
-    // the run-to-run efficiency spread on identical code — the central
-    // fact about this VM — is data in the repo, not prose in commit
-    // messages. Never truncated; survives across rounds.
-    val hist =
-      f"""{"ts":"${java.time.Instant.now()}","docs":$bestDocs,""" +
-        f""""eff":$efficiency%.3f,"pairs":$nPairs,"mode":"$scaleMode",""" +
-        f""""samples_small":${sampleJson(allRuns.filter(_.small).map(_.wall))},""" +
-        f""""samples_big":${sampleJson(allRuns.filterNot(_.small).map(_.wall))},""" +
-        f""""sample_docs_small":${allRuns.filter(_.small).map(_.docs).mkString("[", ",", "]")},""" +
-        f""""sample_docs_big":${allRuns.filterNot(_.small).map(_.docs).mkString("[", ",", "]")},""" +
-        f""""warmup_sec":$warmupWall%.1f,"headline_sec":$total%.1f,"sf":"$sfDir"}""" + "\n"
-    Files.writeString(Paths.get("bench_history.jsonl"), hist,
-      java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
   }
 
-  private def sampleJson(xs: Seq[Double]): String =
-    xs.map(x => f"$x%.2f").mkString("[", ",", "]")
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val nDocs = sys.env.get("SPARK_GRAFT_BENCH_DOCS").map(_.toLong).getOrElse(DefaultDocs)
+
+    // Staleness stamp FIRST: if an external timeout kills this JVM before
+    // any phase completes, bench.json says so — a leftover artifact from
+    // a previous run can't masquerade as this run's result.
+    Files.writeString(Paths.get("bench.json"),
+      s"""{"metric":"total","value":-1.0,"unit":"sec","queries":{},"sf":"$sfDir","in_progress":true}\n""")
+
+    // -- 1. scaling FIRST, in the freshest regime: running the 26 headline
+    // queries beforehand was measured to slow every later pipeline session
+    // ~8-10% (heap and allocator state leak across sessions in one JVM).
+    // N=1 vs 4N=4: this host's shared memory subsystem saturates around ~8
+    // busy threads, so 1→4 is the widest regime where executor scaling is
+    // observable on one host.
+    val sc = scalingBlocks(nDocs)
+
+    // -- 2. headline queries
+    val (headlineWarmupSec, results) = headline(cpus, sfDir)
+    val record = Record(sfDir, cpus, results, headlineWarmupSec, nDocs, sc.runs,
+      scaleMode, execMb, sc.blocksSec, sc.warmupSec, Seq.empty)
+    def write(r: Record): Unit = {
+      Files.writeString(Paths.get("bench.json"), r.json + "\n")
+      Files.writeString(Paths.get("BENCH.md"), r.benchMd)
+    }
+    // results-so-far safety net: if an external timeout kills the JVM
+    // mid-table, the scaling and headline results are already on disk
+    write(record)
+
+    // -- 3. per-stage table. build.sbt documents the stdout contract as ONE
+    // bare JSON line, so a crash here falls through to it with whatever
+    // completed.
+    val stages: Seq[(String, Double, Double)] =
+      if (elapsedSec + StageTableSec > budgetSec) {
+        System.err.println(f"[bench] guard: skipping the per-stage table at $elapsedSec%.0f s")
+        Seq.empty
+      } else
+        try {
+          val small = stagedRun(NSmall)
+          val big = stagedRun(NBig)
+          StageKeys.map { case (_, k) => (k, small(k), big(k)) }
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench] per-stage table failed: ${e.getMessage}"); Seq.empty
+        }
+    val done = record.copy(stages = stages)
+    write(done)
+    println(done.json) // THE stdout line
+
+    // Append-only history: one line per completed bench run, so the
+    // run-to-run spread on identical code is data in the repo.
+    Files.writeString(Paths.get("bench_history.jsonl"),
+      done.history(java.time.Instant.now().toString) + "\n",
+      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+  }
 }

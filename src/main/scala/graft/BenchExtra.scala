@@ -1,11 +1,11 @@
 package graft
 
-/** Extra benchmark main (guide §1.4) — NOT the driver's harness
-  * (`graft.Bench` is frozen): times named SparkEntry queries (all if none
-  * named) on an sf dir with the noop sink, repeated `SPARK_GRAFT_EXTRA_REPS`
-  * times (default 2), reporting every sample and the min. One untimed
-  * warmup pass over the same queries at sf0.001 mirrors the frozen
-  * harness's JVM warmup so numbers are comparable to bench.json's.
+/** Single-query timer beside `graft.Bench`: times named SparkEntry
+  * queries (all if none named) on an sf dir with the noop sink, repeated
+  * `SPARK_GRAFT_EXTRA_REPS` times (default 2), reporting every sample and
+  * the min. One untimed warmup pass over the same queries at sf0.001
+  * mirrors `graft.Bench`'s headline warm-up, so numbers are comparable to
+  * bench.json's.
   *
   * Usage: sbt 'runMain graft.BenchExtra /root/testdata/sf0.1 [q1 q2 ...]'
   */

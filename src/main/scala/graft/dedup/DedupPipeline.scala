@@ -83,7 +83,10 @@ object DedupPipeline {
     val reason = F.when(F.col("url").isNull, "null_url")
       .when(F.col("dup_url"), "dup_url")
       .when(F.col("text").isNull, "null_text")
-      .when(F.trim(F.col("text")) === "", "empty_text")
+      // no character outside Unicode White_Space ((?U) gives \S that
+      // meaning): tabs, newlines and no-break spaces count like U+0020,
+      // the only character Spark's trim strips
+      .when(!F.col("text").rlike("(?U)\\S"), "empty_text")
       // NULL lang is a reject when a whitelist is set: isin() is
       // three-valued (NULL lang → NULL), so compare null-safely to true
       .when(F.not(langOk <=> F.lit(true)), "lang")

@@ -10,5 +10,13 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = Sessions.local(4, "graft-test")
+  private var current: SparkSession = _
+
+  /** The shared session, rebuilt when a spec that stops sessions (see
+    * `BenchSpec`) has stopped it. */
+  def session: SparkSession = synchronized {
+    if (current == null || current.sparkContext.isStopped)
+      current = Sessions.local(4, "graft-test")
+    current
+  }
 }

@@ -185,9 +185,9 @@ class DedupPipelineSpec extends SparkSpec {
     val rows = Seq(
       ("https://x/empty", ""),
       ("https://x/spaces", "   "),
-      // Spark's trim strips U+0020 only: a tab survives it, passes the
-      // gate and has no shingle, so it routes to no_content instead
+      // every Unicode whitespace counts alike, not only U+0020
       ("https://x/tab", "  \t "),
+      ("https://x/nbsp", "\u00A0"),
       ("https://x/one", "x"))
       .toDF("url", "text")
       .withColumn("lang", F.lit("en"))
@@ -198,7 +198,8 @@ class DedupPipelineSpec extends SparkSpec {
       val rej = res.rejects.select("url", "reject_reason").collect()
         .map(r => r.getString(0) -> r.getString(1)).toMap
       assert(rej === Map("https://x/empty" -> "empty_text",
-        "https://x/spaces" -> "empty_text", "https://x/tab" -> "no_content"))
+        "https://x/spaces" -> "empty_text", "https://x/tab" -> "empty_text",
+        "https://x/nbsp" -> "empty_text"))
       assert(res.deduped.select("url").collect().map(_.getString(0)).toSeq
         === Seq("https://x/one"))
     } finally res.cleanup()
