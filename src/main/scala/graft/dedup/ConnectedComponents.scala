@@ -19,6 +19,8 @@ import org.apache.spark.sql.{functions => F}
   * band buckets, so cross-bucket merging is the norm and needs a real
   * union-find at shuffle scale.
   *
+  * No GraphX (RDD) path: GraphX is only [[run]]'s test-side reference.
+  *
   * Scale design:
   *  - Contraction: after the canonical-orientation `distinct`, every
   *    partition runs an in-memory union-find over its edges (Dataset
@@ -189,23 +191,6 @@ object ConnectedComponents {
     }
     // keys snapshotted first: find rewrites the map while rows stream out
     parent.keysIterator.toArray.iterator.map(x => (x, find(x)))
-  }
-
-  /** GraphX connected components — the one place BASELINE.json permits an
-    * RDD ("no RDD fallback except where union-find iteration forces it").
-    * Same contract as [[run]], and GraphX's component id is the min vertex
-    * id too, so the two outputs are directly comparable. Nothing on the
-    * engine's path calls it; it stays as the independent parity reference
-    * for [[run]] (LshSpec). */
-  def runGraphX(edges: DataFrame): DataFrame = {
-    import org.apache.spark.graphx.{Edge, Graph}
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val in = edges.toDF("u", "v").where($"u".isNotNull && $"v".isNotNull)
-    val edgeRdd = in.as[(Long, Long)].rdd.map { case (u, v) => Edge(u, v, ()) }
-    val graph = Graph.fromEdges(edgeRdd, ())
-    val cc = org.apache.spark.graphx.lib.ConnectedComponents.run(graph)
-    cc.vertices.toDF("id", "component")
   }
 
   /** large-star: for every node u, connect every strictly-larger neighbor

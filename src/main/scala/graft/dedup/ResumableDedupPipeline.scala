@@ -22,8 +22,8 @@ import graft.io.StageStore
   * recomputes only what never committed. Emission is derived from the
   * source scan + the `flags` stage, so outputs stay projections of input
   * rows, and the metrics table is the plain run's (written to the store's
-  * `_metrics` table as well). Lineage (per-partition row counts +
-  * checksums) lands in `_lineage`.
+  * `metrics` table as well). Lineage (per-partition row counts +
+  * checksums) lands in `lineage`.
   *
   * Resume safety: the store is bound to a fingerprint of (config, input
   * row count, order-independent url checksum) on first run; re-running
@@ -33,11 +33,15 @@ import graft.io.StageStore
   */
 object ResumableDedupPipeline {
 
-  /** Order-independent input identity + config hash. The row hash covers
-    * url AND text (a recrawl with unchanged urls but new text must not
-    * resume against stale signatures), combined by count + xor + an
-    * overflow-proof decimal SUM (xor alone cancels rows repeated an even
-    * number of times). Costs one (url, text) projection scan per
+  /** [[StageStore]] layout tag in the binding: a store of an older layout
+    * (`_metrics`, `_lineage`) is refused, not resumed with a reset count. */
+  private[dedup] val StoreLayout = "layout=2"
+
+  /** Store layout + order-independent input identity + config hash. The
+    * row hash covers url AND text (a recrawl with unchanged urls but new
+    * text must not resume against stale signatures), combined by count +
+    * xor + an overflow-proof decimal SUM (xor alone cancels rows repeated
+    * an even number of times). Costs one (url, text) projection scan per
     * invocation — the price of resume safety. */
   private def fingerprint(pages: DataFrame, cfg: DedupConfig): String = {
     val row = pages
@@ -49,7 +53,7 @@ object ResumableDedupPipeline {
     val cfgHash = java.security.MessageDigest.getInstance("MD5")
       .digest(cfg.toString.getBytes("UTF-8"))
       .map(b => f"$b%02x").mkString
-    s"cfg=$cfgHash rows=${row.getLong(0)} xor=${row.getLong(1)} sum=${row.getDecimal(2)}"
+    s"$StoreLayout cfg=$cfgHash rows=${row.getLong(0)} xor=${row.getLong(1)} sum=${row.getDecimal(2)}"
   }
 
   def run(pages: DataFrame, cfg: DedupConfig, store: StageStore): DedupResult = {

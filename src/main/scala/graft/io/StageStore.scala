@@ -22,11 +22,12 @@ import org.apache.spark.sql.{functions => F}
   *
   * Lineage: after each stage commit, one row per output partition
   * (stage, partition_id, row_count, xor-of-row-hashes) is appended to
-  * `_lineage` — the audit trail for "which partition of which stage
+  * `lineage` — the audit trail for "which partition of which stage
   * produced what", queryable like any table. The analog of the
   * reference's per-op telemetry (reference/dupliganger/common.py:799-827)
   * plus its LMDB txn batching (constants.py:127-128), transposed to
-  * partition granularity.
+  * partition granularity. (`lineage` and `metrics` have no `_` prefix:
+  * Spark skips such paths as hidden and warns on every read.)
   */
 final class StageStore(spark: SparkSession, root: String) {
 
@@ -74,22 +75,22 @@ final class StageStore(spark: SparkSession, root: String) {
         F.coalesce(F.expr("bit_xor(h)"), F.lit(0L)).as("checksum"))
       .withColumn("stage", F.lit(stage))
       .select("stage", "partition_id", "row_count", "checksum")
-      .write.mode("append").parquet(s"$root/_lineage")
+      .write.mode("append").parquet(s"$root/lineage")
   }
 
-  def lineage(): DataFrame = spark.read.parquet(s"$root/_lineage")
+  def lineage(): DataFrame = spark.read.parquet(s"$root/lineage")
 
   /** Append one run's metrics (the report_db analog, as a table) with a
-    * last column `run`: 1 + the number of runs already in `_metrics`, so
+    * last column `run`: 1 + the number of runs already in `metrics`, so
     * the runs of a resumed store stay apart. */
   def writeMetrics(metrics: DataFrame): Unit = {
     val priorRuns =
-      if (!Files.exists(Paths.get(root, "_metrics"))) 0L
+      if (!Files.exists(Paths.get(root, "metrics"))) 0L
       else this.metrics().select("run").distinct().count()
     metrics.withColumn("run", F.lit(priorRuns + 1))
-      .write.mode("append").parquet(s"$root/_metrics")
+      .write.mode("append").parquet(s"$root/metrics")
   }
 
   /** Every run's metrics: (metric, value, run). */
-  def metrics(): DataFrame = spark.read.parquet(s"$root/_metrics")
+  def metrics(): DataFrame = spark.read.parquet(s"$root/metrics")
 }

@@ -35,6 +35,18 @@ class ConnectedComponentsSpec extends SparkSpec {
     edges.toDF("u", "v")
   }
 
+  /** GraphX connected components: the independent reference. Same
+    * contract as [[ConnectedComponents.run]], and GraphX's component id is
+    * the min vertex id too, so the two outputs compare directly. */
+  private def runGraphX(edges: DataFrame): DataFrame = {
+    import org.apache.spark.graphx.{Edge, Graph}
+    val spark2 = spark
+    import spark2.implicits._
+    val edgeRdd = edges.toDF("u", "v").as[(Long, Long)].rdd.map { case (u, v) => Edge(u, v, ()) }
+    val cc = org.apache.spark.graphx.lib.ConnectedComponents.run(Graph.fromEdges(edgeRdd, ()))
+    cc.vertices.toDF("id", "component")
+  }
+
   private def collect(df: DataFrame): Map[Long, Long] =
     df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
@@ -96,6 +108,13 @@ class ConnectedComponentsSpec extends SparkSpec {
     val b = collect(ConnectedComponents.run(frame(edges).repartition(13)))
     assert(a === b)
     assert(a === oracle(edges))
+  }
+
+  bothPaths("GraphX CC agrees with the DataFrame path") { multi =>
+    val rnd = new scala.util.Random(5)
+    val edges = Seq.fill(200)((rnd.nextInt(300).toLong, rnd.nextInt(300).toLong))
+      .filter { case (a, b) => a != b }
+    assert(runCC(edges, multi) === collect(runGraphX(frame(edges))))
   }
 
   bothPaths("empty edge set") { _ =>

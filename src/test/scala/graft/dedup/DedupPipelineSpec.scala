@@ -300,6 +300,17 @@ class DedupPipelineSpec extends SparkSpec {
     assert(out === Map("https://x/a" -> "new text", "https://x/b" -> "only row"))
   }
 
+  test("SparkEntry.entry: rows, one row per url, one canonical row per cluster") {
+    val rows = graft.SparkEntry.entry(spark)
+      .select("url", "cluster_id", "is_canonical").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getBoolean(2)))
+    assert(rows.nonEmpty)
+    assert(rows.map(_._1).distinct.length === rows.length)
+    val canonicalPerCluster = rows.groupBy(_._2).map { case (c, rs) => c -> rs.count(_._3) }
+    assert(canonicalPerCluster.values.forall(_ == 1),
+      s"clusters without exactly one canonical row: ${canonicalPerCluster.filter(_._2 != 1).take(5)}")
+  }
+
   test("cleanup releases engine-tracked caches") {
     val r = DedupPipeline.run(pages, cfg)
     r.metrics.collect() // materialize

@@ -168,17 +168,4 @@ class LshSpec extends SparkSpec {
     assert(Lsh.verifyPairs(ghost, sigs, cfg).count() === 0)
     p.unpersist(); sigs.unpersist()
   }
-
-  test("GraphX CC fallback agrees with the DataFrame loop") {
-    val spark2 = spark
-    import spark2.implicits._
-    val rnd = new scala.util.Random(5)
-    val edges = Seq.fill(200)((rnd.nextInt(300).toLong, rnd.nextInt(300).toLong))
-      .filter { case (a, b) => a != b }
-    val df = ConnectedComponents.run(edges.toDF("u", "v"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    val gx = ConnectedComponents.runGraphX(edges.toDF("u", "v"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    assert(df === gx)
-  }
 }

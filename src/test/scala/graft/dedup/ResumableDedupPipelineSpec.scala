@@ -165,4 +165,23 @@ class ResumableDedupPipelineSpec extends SparkSpec {
       assert(again.clusters.count() > 0)
     } finally rmRf(root)
   }
+
+  test("store binding: a store bound without the layout tag is refused") {
+    val root = tmpDir()
+    try {
+      val pages = SyntheticCorpus.pages(spark, 300)
+      val store = new StageStore(spark, root.toString)
+      ResumableDedupPipeline.run(pages, cfg, store)
+      val binding = root.resolve("_binding")
+      val tag = ResumableDedupPipeline.StoreLayout + " "
+      val bound = Files.readString(binding)
+      assert(bound.startsWith(tag))
+      // a store bound before the layout tag existed
+      Files.writeString(binding, bound.stripPrefix(tag))
+      val e = intercept[IllegalArgumentException] {
+        ResumableDedupPipeline.run(pages, cfg, store)
+      }
+      assert(e.getMessage.contains("bound to a different run"))
+    } finally rmRf(root)
+  }
 }
