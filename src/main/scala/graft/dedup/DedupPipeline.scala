@@ -22,6 +22,14 @@ import graft.functions._
   * Per-row invariant: `text`/`html` bytes pass through joins untouched —
   * every output row is a projection of an input row (the verbatim-emission
   * invariant, dedup.py:783-797).
+  *
+  * The frames are lazy (`metrics` excepted: its values are computed by
+  * the run). `flagged` is a lazy checkpoint that the run does not fill;
+  * the caller's first action on `flagged`, `deduped`, `duplicates` or
+  * `clusters` fills it. A concurrent first touch of an unfilled lazy
+  * checkpoint races on its SQL-metric accumulators, so touch `flagged`
+  * once (for example `flagged.count()`) before handing the frames to
+  * concurrent writers.
   */
 final case class DedupResult(
     flagged: DataFrame,
@@ -71,25 +79,23 @@ object DedupPipeline {
     //    pairs; ~10⁴ at 10^12 docs): the min-url row keeps its id, every
     //    other row is remapped to a salt-rehashed id. The remap is a pure
     //    function of the url — deterministic across runs/partitionings —
-    //    and keeps all documents in the run. Residual risk: see
-    //    [[IdRemapRounds]].
+    //    and keeps all documents in the run. Residual risk: see the
+    //    round-2 comment in [[enforceIds]].
     val base = enforceIds(hashed, cfg)
-    val langOk = cfg.allowedLangs match {
-      case Some(ls) => F.col("lang").isin(ls.toSeq: _*)
-      case None => F.lit(true)
-    }
     // null url cannot be keyed at all (joins and the remap are null-blind;
     // admitting several null-url rows would share one doc_id) → reject
-    val reason = F.when(F.col("url").isNull, "null_url")
+    val contentReason = F.when(F.col("url").isNull, "null_url")
       .when(F.col("dup_url"), "dup_url")
       .when(F.col("text").isNull, "null_text")
       // no character outside Unicode White_Space ((?U) gives \S that
       // meaning): tabs, newlines and no-break spaces count like U+0020,
       // the only character Spark's trim strips
       .when(!F.col("text").rlike("(?U)\\S"), "empty_text")
-      // NULL lang is a reject when a whitelist is set: isin() is
-      // three-valued (NULL lang → NULL), so compare null-safely to true
-      .when(F.not(langOk <=> F.lit(true)), "lang")
+    // the lang clause exists only under a whitelist. NULL lang is a reject
+    // there: isin() is three-valued (NULL lang → NULL), so compare
+    // null-safely to true
+    val reason = cfg.allowedLangs.fold(contentReason)(ls => contentReason
+      .when(F.not(F.col("lang").isin(ls.toSeq: _*) <=> F.lit(true)), "lang"))
     val gated0 = base.withColumn("reject_reason", reason).drop("dup_url")
     // windowed-quality gate (off by default): the low-quality id set is
     // narrow (ids of failing docs only) and folds into reject_reason via
@@ -97,10 +103,10 @@ object DedupPipeline {
     val gated =
       if (cfg.minWindowQualityPm <= 0) gated0
       else {
-        // tracked cache, like enforceIds' tables: the low-quality id set
-        // sits in the lineage of EVERY downstream frame, and uncached it
-        // would re-run the whole-corpus token-explode aggregation on each
-        // re-evaluation of the gated plan
+        // tracked cache, like enforceIds' anomaly table: the low-quality
+        // id set sits in the lineage of EVERY downstream frame, and
+        // uncached it would re-run the whole-corpus token-explode
+        // aggregation on each re-evaluation of the gated plan
         val lowQ = graft.Caches.track(graft.analysis.TextAnalysis
           .windowedMinQualityPermille(
             gated0.where(F.col("reject_reason").isNull)
@@ -124,15 +130,6 @@ object DedupPipeline {
     (sigsAll, gated.where(F.col("reject_reason").isNotNull))
   }
 
-  /** Salt-rehash rounds for distinct-url hash collisions in
-    * [[enforceIds]]. One round leaves a ~n_coll·n/2^64 ≈ 5·10⁻⁴
-    * corpus-wide chance (at 10^12 docs) that a REMAPPED id collides again;
-    * each further round multiplies the residual by n/2^64 (≈ 5·10⁻⁸), so
-    * 2 retires it (~3·10⁻¹¹) for the cost of one extra narrow
-    * (doc_id, url) aggregation + broadcast join — the reason a 128-bit id
-    * type (and its fatter shuffles everywhere) is not needed. */
-  private val IdRemapRounds = 2
-
   /** Id-uniqueness enforcement over a frame that already carries
     * doc_id = xxhash64(seed, url): flags duplicate urls (`dup_url`
     * column; the caller rejects them) and salt-rehashes the non-min-url
@@ -147,16 +144,15 @@ object DedupPipeline {
     * map-side — yields a TINY cached anomaly table (birthday math bounds
     * real collisions; even adversarial k-way xxhash64 multi-collisions
     * cost ≥ 2^43 hash evaluations for k=3, so per-id url lists stay
-    * single-digit). All resolution then happens on tiny cached frames,
-    * and the corpus pays at most ONE broadcast apply-join — zero joins
-    * when the corpus is clean, the overwhelmingly common case. Later
-    * remap rounds probe the corpus ONLY when the previous round actually
-    * remapped something (never, on real data) — the old form paid a
-    * corpus-wide aggregation + join per configured round unconditionally.
+    * single-digit). All resolution then happens on tiny frames over that
+    * cache, and the corpus pays at most ONE broadcast apply-join — zero
+    * joins when the corpus is clean, the overwhelmingly common case. The
+    * round-2 probe reads the corpus ONLY when round 1 remapped something
+    * (never, on real data).
     *
-    * NOTE: eager — the anomaly aggregation runs a small Spark job at
-    * call time so the clean-corpus case can skip the apply-join at plan
-    * level. */
+    * NOTE: eager — one count of the round-1 resolution runs at call time
+    * (it fills the anomaly cache), so the clean-corpus case can skip the
+    * apply-join at plan level. */
   private[dedup] def enforceIds(hashed: DataFrame, cfg: DedupConfig): DataFrame = {
     val spark = hashed.sparkSession
     import spark.implicits._
@@ -186,48 +182,44 @@ object DedupPipeline {
       .where($"url" =!= $"keep_url")
       .select($"url", F.lit(false).as("dup_url"),
         F.xxhash64(F.lit(salt), $"url").as("new_id"))
-    var resolved = graft.Caches.track(
-      dupResolved.unionByName(remapWith(anomalies.where($"n_clean" > 1), cfg.seed + 1)))
-    var lastRemapped = resolved.where($"new_id".isNotNull)
-    // dup_urls (contract violations) bound `resolved`, not birthday math:
-    // a self-unioned crawl makes it corpus-sized. The size is known
-    // eagerly (tiny cached count), so the broadcast hint is applied only
-    // when it actually fits — beyond that the apply-join degrades to a
-    // url-keyed shuffle under AQE instead of an OOM'd broadcast build.
-    val nResolved = resolved.count()
-    val broadcastable = nResolved <= 4000000L
+    val round1 =
+      dupResolved.unionByName(remapWith(anomalies.where($"n_clean" > 1), cfg.seed + 1))
+    // The one action: round 1's size and how many of its rows it remaps.
+    // dup_urls (contract violations) bound that size, not birthday math:
+    // a self-unioned crawl makes it corpus-sized. Knowing it eagerly, the
+    // broadcast hint is applied only when it actually fits — beyond that
+    // the apply-join degrades to a url-keyed shuffle under AQE instead of
+    // an OOM'd broadcast build.
+    val sizes = round1.agg(F.count(F.lit(1)), F.count($"new_id")).head()
+    val (nResolved, nRemapped) = (sizes.getLong(0), sizes.getLong(1))
     def maybeBroadcast(df: DataFrame): DataFrame =
-      if (broadcastable) F.broadcast(df) else df
+      if (nResolved <= 4000000L) F.broadcast(df) else df
 
-    // Rounds 2..IdRemapRounds: a fresh remap target can collide with an
-    // untouched existing id (or another fresh target). The probe joins
-    // the corpus against the broadcast remap set — a narrow scan, paid
-    // ONLY when the previous round remapped anything. Groups resolve as
-    // before: min url keeps its current id, the rest take this round's
-    // salt. See IdRemapRounds for the residual-risk arithmetic that
-    // makes round 2 the last one that matters.
-    var round = 2
-    while (round <= IdRemapRounds && !lastRemapped.isEmpty) {
-      val rIds = lastRemapped.select($"new_id".as("doc_id"), $"url")
+    // Round 2: a fresh remap target can collide with an untouched existing
+    // id (or another fresh target). The probe joins the corpus against
+    // the broadcast remap set — a narrow scan, paid ONLY when round 1
+    // remapped anything. Groups resolve as in round 1: min url keeps its
+    // current id, the rest take the round-2 salt. Residual risk: round 1
+    // leaves a ~n_coll·n/2^64 ≈ 5·10⁻⁴ corpus-wide chance (at 10^12 docs)
+    // that a REMAPPED id collides again; a further round multiplies that
+    // by n/2^64 (≈ 5·10⁻⁸), so round 2 retires it (~3·10⁻¹¹) for one
+    // extra narrow (doc_id, url) aggregation + broadcast join — the reason
+    // neither a third round nor a 128-bit id type (and its fatter shuffles
+    // everywhere) is needed.
+    val resolved = if (nRemapped == 0L) round1 else {
+      val rIds = round1.where($"new_id".isNotNull).select($"new_id".as("doc_id"), $"url")
       val existing = hashed.select($"doc_id", $"url")
         .where($"url".isNotNull)
-        .join(maybeBroadcast(resolved.select($"url", F.lit(true).as("_r"))),
-          Seq("url"), "left")
-        .where($"_r".isNull).drop("_r")
+        .join(maybeBroadcast(round1.select($"url")), Seq("url"), "left_anti")
         .join(F.broadcast(rIds.select($"doc_id")), Seq("doc_id"), "left_semi")
-      val groups = graft.Caches.track(
-        existing.unionByName(rIds.select($"doc_id", $"url"))
-          .groupBy($"doc_id").agg(
-            F.count(F.lit(1)).as("ng"),
-            F.min($"url").as("keep_url"),
-            F.sort_array(F.collect_list($"url")).as("clean_urls"))
-          .where($"ng" > 1))
-      val delta = remapWith(groups, cfg.seed + round)
-      resolved = graft.Caches.track(
-        resolved.join(delta.select($"url", F.lit(true).as("_upd")), Seq("url"), "left_anti")
-          .unionByName(delta))
-      lastRemapped = delta
-      round += 1
+      val groups = existing.unionByName(rIds)
+        .groupBy($"doc_id").agg(
+          F.count(F.lit(1)).as("ng"),
+          F.min($"url").as("keep_url"),
+          F.sort_array(F.collect_list($"url")).as("clean_urls"))
+        .where($"ng" > 1)
+      val delta = remapWith(groups, cfg.seed + 2)
+      round1.join(delta.select($"url"), Seq("url"), "left_anti").unionByName(delta)
     }
 
     // Apply — at most one broadcast join against the tiny resolution
@@ -250,26 +242,6 @@ object DedupPipeline {
     pages.withColumn("_rn", F.row_number().over(w))
       .where(F.col("_rn") === 1).drop("_rn")
   }
-
-  /** 8-bucket distance histograms over scored candidate pairs as 16
-    * aggregate columns — the analog of the reference's mismatch-distance
-    * report counters (reference/dupliganger/constants.py:67-88,
-    * incremented at dedup.py:442-458): est-Jaccard bucket =
-    * min(floor(est·8), 7), SimHash-Hamming bucket = min(hamming, 7).
-    * [[emit]] folds them into its one aggregation over the scored pairs,
-    * next to the candidate and verified counts. */
-  def distanceHistogramAggs: Seq[org.apache.spark.sql.Column] =
-    (0 until 8).map(b => F.coalesce(F.sum(F.when(
-      F.least(F.floor(F.col("est_jaccard") * 8), F.lit(7L)) === b, 1L)
-      .otherwise(0L)), F.lit(0L))) ++
-      (0 until 8).map(b => F.coalesce(F.sum(F.when(
-        F.least(F.col("sim_hamming"), F.lit(7)) === b, 1L)
-        .otherwise(0L)), F.lit(0L)))
-
-  /** Histogram metric names, positionally matching [[distanceHistogramAggs]]. */
-  val distanceHistogramLabels: Seq[String] =
-    (0 until 8).map(b => s"hist_est_jaccard_$b") ++
-      (0 until 8).map(b => s"hist_sim_hamming_$b")
 
   /** Winner flags per doc: (doc_id, cluster_id, is_canonical,
     * is_duplicate) from a cluster assignment (id, component). Pure hash
@@ -347,15 +319,6 @@ object DedupPipeline {
       assign: DataFrame,
       flags: DataFrame)
 
-  /** Forces `df` when its plan still holds an unmaterialized lazy
-    * checkpoint. Concurrent FIRST touch of such a checkpoint races on its
-    * SQL-metric accumulators ("attempted to access non-existent
-    * accumulator"), so every frame a future touches goes through here on
-    * the caller's thread first. Frames that hold no pending checkpoint (a
-    * materialized one, or a parquet stage) cost nothing here. */
-  private def firstTouch(df: DataFrame): Unit =
-    if (org.apache.spark.sql.graftshim.GraftSqlShim.hasPendingCheckpoint(df)) df.count()
-
   /** The stage graph, written once: `signatures` → `scored` (every LSH
     * candidate pair with its est-Jaccard / Hamming / verified verdict) →
     * `substr_edges` (a, b, containment) → `assign` (id, component) →
@@ -415,7 +378,7 @@ object DedupPipeline {
   private[graft] def emit(st: Stages): DedupResult = {
     val spark = st.sigsAll.sparkSession
     import spark.implicits._
-    import st.{sigsAll, scored, substr, flags, overflow}
+    import st.{sigsAll, scored, substr, assign, flags, overflow}
 
     val admittedWide = st.sigsAllRaw.where($"reject_reason".isNull)
       .drop("minhash", "simhash", "reject_reason")
@@ -445,55 +408,48 @@ object DedupPipeline {
       .drop("is_canonical", "is_duplicate")
     val clusters = flagged.select($"url", $"doc_id", $"cluster_id", $"is_canonical")
 
-    // Report — consolidated into 5 aggregate jobs (one per stage frame),
-    // not a count() per counter, with the four that read held stages
-    // (sigsAll/scored/substr, and overflow re-counting the band buckets
-    // from sigsAll) submitted CONCURRENTLY: the driver awaits them
-    // together, so their scheduler round-trips overlap instead of paying
-    // serial latencies (on a cluster the independent jobs also fill
-    // otherwise-idle executors). flagStats stays on the caller thread —
-    // it is the FIRST action on flagged's lazy checkpoint. ALL gate
-    // numbers (pages_total, per-reason rejects, signed/admitted) come
-    // from ONE aggregation of the signature stage — no job ever re-scans
-    // the source.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    // Enforced (not assumed): no future may first-touch a pending lazy
-    // checkpoint. CC's first job normally forces scored and substr; this
-    // guard forces whatever is still pending (sigsAll, which CC reads only
-    // through them) on this thread, and keeps a reordered or shortened
-    // stage path from reopening the accumulator race.
-    Seq(sigsAll, scored, substr).foreach(firstTouch)
-    val gateStatsF = Future(sigsAll.groupBy("reject_reason")
-      .agg(F.count(F.lit(1)).as("n"), F.count($"minhash").as("nsig")).collect())
-    val pairAggs = Seq(
-      F.count(F.lit(1)),
-      F.coalesce(F.sum(F.when($"verified", 1L).otherwise(0L)), F.lit(0L))) ++
-      distanceHistogramAggs
-    val pairStatsF = Future(scored.agg(pairAggs.head, pairAggs.tail: _*).head())
-    val substrPairsF = Future(substr.count())
-    val overflowF = Future(overflow.head())
-    val flagStats = flagged.agg(
-      F.coalesce(F.sum(F.when($"is_duplicate", 1L).otherwise(0L)), F.lit(0L)),
-      F.countDistinct(F.when($"is_duplicate", $"cluster_id"))).head()
-
-    val gateStats = Await.result(gateStatsF, Duration.Inf)
-    val admittedRow = gateStats.filter(_.isNullAt(0))
+    // Report — one aggregate per held stage, run one after another on
+    // this thread, not a count() per counter. Each reads a narrow held
+    // stage (or, for overflow, re-counts the band buckets from sigsAll);
+    // none touches the wide flagged checkpoint. ALL gate numbers
+    // (pages_total, per-reason rejects, signed/admitted) come from ONE
+    // aggregation of the signature stage — no job ever re-scans the
+    // source.
+    val gateStats = sigsAll.groupBy("reject_reason")
+      .agg(F.count(F.lit(1)).as("n"), F.count($"minhash").as("nsig")).collect()
+    val (admittedRow, gateRejectRows) = gateStats.partition(_.isNullAt(0))
     // n counts every gate-admitted row; nsig counts the signed subset
     // (non-null minhash) — the names mirror the counts they hold
     val docsGateAdmitted = admittedRow.map(_.getLong(1)).sum
     val docsSigned = admittedRow.map(_.getLong(2)).sum
     val pagesTotal = gateStats.map(_.getLong(1)).sum
-    val gateRejectRows = gateStats.filter(!_.isNullAt(0))
-      .map(r => r.getString(0) -> r.getLong(1))
-    val pairStats = Await.result(pairStatsF, Duration.Inf)
+    // One aggregate over the scored pairs: candidate and verified counts
+    // and the 8-bucket distance histograms, the analog of the reference's
+    // mismatch-distance counters (reference/dupliganger/constants.py:67-88,
+    // incremented at dedup.py:442-458): est-Jaccard bucket =
+    // min(floor(est·8), 7), SimHash-Hamming bucket = min(hamming, 7).
+    val histAggs = for {
+      (name, bucket) <- Seq(
+        "hist_est_jaccard" -> F.least(F.floor($"est_jaccard" * 8), F.lit(7L)),
+        "hist_sim_hamming" -> F.least($"sim_hamming", F.lit(7)))
+      b <- 0 until 8
+    } yield s"${name}_$b" -> F.count(F.when(bucket === b, true))
+    val pairStats = scored.agg(F.count(F.lit(1)),
+      F.count(F.when($"verified", true)) +: histAggs.map(_._2): _*).head()
     val (candPairs, verifiedPairs) = (pairStats.getLong(0), pairStats.getLong(1))
-    val hists = distanceHistogramLabels.zipWithIndex
-      .map { case (l, i) => l -> pairStats.getLong(i + 2) }
-    val substrPairs = Await.result(substrPairsF, Duration.Inf)
-    val (dupsRemoved, clustersMulti) = (flagStats.getLong(0), flagStats.getLong(1))
-    val o = Await.result(overflowF, Duration.Inf)
+    val substrPairs = substr.count()
+    val o = overflow.head()
+    // Cluster counts from the narrow assign stage. assign holds exactly the
+    // docs of multi-doc clusters, each cluster's min id once as its own row
+    // (id = component), on both CC paths. That needs two facts that hold by
+    // construction: the edges have no self-loops (scored has a < b, substr
+    // has a ≠ b), so every assign node shares a cluster with another doc;
+    // and every assign node is a signed doc, so winnerFlags keeps it. Each
+    // cluster's non-winners are its duplicates: rows − clusters.
+    val assignStats = assign.agg(F.count(F.lit(1)),
+      F.count(F.when($"id" === $"component", true))).head()
+    val clustersMulti = assignStats.getLong(1)
+    val dupsRemoved = assignStats.getLong(0) - clustersMulti
 
     val metrics = Seq(
       "pages_total" -> pagesTotal,
@@ -508,8 +464,8 @@ object DedupPipeline {
       "duplicates_removed" -> dupsRemoved,
       "lsh_overflow_buckets" -> o.getLong(0),
       "lsh_overflow_rows" -> o.getLong(1)
-    ).++(hists)
-      .++(gateRejectRows.map { case (reason, n) => s"reject_$reason" -> n })
+    ).++(histAggs.indices.map(i => histAggs(i)._1 -> pairStats.getLong(i + 2)))
+      .++(gateRejectRows.map(r => s"reject_${r.getString(0)}" -> r.getLong(1)))
       .toDF("metric", "value").orderBy("metric")
 
     DedupResult(flagged, deduped, duplicates, clusters, nearMisses, rejects, metrics)

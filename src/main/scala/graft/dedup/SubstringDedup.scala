@@ -35,10 +35,14 @@ object SubstringDedup {
     * signatures, land in identical LSH bands and are always verified at
     * est-Jaccard 1.0, so the LSH pass links every exact sibling to the
     * representative and connected components merges the substring edges
-    * transitively. On dup-heavy corpora this removes the densest
-    * fingerprint buckets outright (every exact pair shares ALL
-    * fingerprints). Callers composing substringEdges WITHOUT the LSH pass
-    * must expand edges over exact-text groups themselves. */
+    * transitively — except where an exact group is larger than
+    * `maxBucketSize`: then every band bucket it fills overflows, LSH emits
+    * no pair for it, and its siblings stay unlinked to the representative
+    * (ROADMAP item 7; `dup_heavy`'s two 2,050-copy groups). On dup-heavy
+    * corpora the reduction removes the densest fingerprint buckets
+    * outright (every exact pair shares ALL fingerprints). Callers
+    * composing substringEdges WITHOUT the LSH pass must expand edges over
+    * exact-text groups themselves. */
   def substringEdges(docs: DataFrame, cfg: DedupConfig): DataFrame = {
     // Representative selection shuffles IDS ONLY (16 B/row): min doc_id
     // per text-hash, joined back to the scan. The direct
@@ -68,7 +72,7 @@ object SubstringDedup {
 
     // directed candidates: shorter doc (a) potentially inside longer (b);
     // shared-fingerprint count / |fp(a)| = containment estimate
-    val candRaw = buckets
+    val cand = buckets
       .select(F.explode(F.col("members")).as("x"), F.col("members"))
       .select(F.col("x"), F.explode(F.col("members")).as("y"))
       .where(F.col("x.len") < F.col("y.len") ||
@@ -78,7 +82,6 @@ object SubstringDedup {
       .withColumn("containment", F.col("shared").cast("double") / F.col("nfp_a"))
       .where(F.col("containment") >= cfg.containmentThreshold)
       .select("a", "b", "containment")
-    val cand = candRaw
 
     // exact verification: literal substring occurrence, folded with the
     // SAME ASCII-only A-Z→a-z fold the fingerprints sampled (F.lower is

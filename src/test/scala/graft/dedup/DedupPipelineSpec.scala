@@ -128,6 +128,22 @@ class DedupPipelineSpec extends SparkSpec {
     assert(m("lsh_overflow_rows") === 0L)
   }
 
+  test("report counts: duplicates_removed and clusters_multi match the duplicates output") {
+    def check(r: DedupResult): Unit = {
+      val m = r.metrics.collect().map(x => x.getString(0) -> x.getLong(1)).toMap
+      assert(m("duplicates_removed") === r.duplicates.count())
+      assert(m("clusters_multi") === r.duplicates.select("cluster_id").distinct().count())
+    }
+    check(result)
+    // with partition coalescing off, CC's contraction spans several
+    // partitions and its star rounds build the cluster assignment
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try check(DedupPipeline.run(pages, cfg))
+    finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("distance histograms: 8 buckets per family, totals = candidate pairs") {
     val m = result.metrics.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val ej = (0 until 8).map(b => m(s"hist_est_jaccard_$b"))
@@ -177,6 +193,15 @@ class DedupPipelineSpec extends SparkSpec {
     assert(rej === Map("https://x/2" -> "lang", "https://x/3" -> "lang"))
     assert(sigsAll.where(F.col("reject_reason").isNull)
       .select("url").collect().map(_.getString(0)).toSeq === Seq("https://x/1"))
+  }
+
+  test("no lang predicate without a whitelist: no null-safe equality of two literals") {
+    import org.apache.spark.sql.catalyst.expressions.{EqualNullSafe, Literal}
+    val (sigsAll, _) = DedupPipeline.signatures(pages, DedupConfig())
+    val trivial = sigsAll.queryExecution.analyzed.flatMap(_.expressions.flatMap(_.collect {
+      case e @ EqualNullSafe(_: Literal, _: Literal) => e
+    }))
+    assert(trivial.isEmpty, s"trivially true predicates: ${trivial.mkString(", ")}")
   }
 
   test("empty_text gate: empty after trim is rejected, one character is not") {
@@ -267,6 +292,30 @@ class DedupPipelineSpec extends SparkSpec {
     }.toMap
     assert(out("https://x/b") === round1OfB, "min url of round-2 group keeps its id")
     assert(out("https://x/c") === round2("https://x/c"))
+  }
+
+  test("id check on a clean corpus: at most 6 Spark jobs") {
+    val hashed = pages.withColumn("doc_id", F.xxhash64(F.lit(cfg.seed), F.col("url")))
+    hashed.count() // fills the corpus cache outside the counted group
+    // an earlier run over the same pages may still hold the anomaly cache
+    graft.Caches.release(spark)
+    val sc = spark.sparkContext
+    val group = "enforce-ids-budget"
+    sc.setJobGroup(group, "enforceIds on a clean corpus")
+    try DedupPipeline.enforceIds(hashed, cfg)
+    finally sc.clearJobGroup()
+    // the status store is filled asynchronously from the listener bus:
+    // poll until the count holds still
+    def jobs = sc.statusTracker.getJobIdsForGroup(group).length
+    var (last, stableFor) = (jobs, 0)
+    while (stableFor < 5) {
+      Thread.sleep(100)
+      val now = jobs
+      stableFor = if (now == last) stableFor + 1 else 0
+      last = now
+    }
+    assert(last >= 1, "the id check ran no job: it is no longer eager")
+    assert(last <= 6, s"the id check ran $last jobs on a clean corpus")
   }
 
   test("NULL url is rejected (cannot be keyed; would share one doc_id)") {
