@@ -245,7 +245,7 @@ object SparkEntry {
     }),
 
     "q_simhash_dup_pairs" -> ((s, dir) => {
-      // SimHash near-dup pairs via the pigeonhole multi-index join
+      // SimHash near-dup pairs via the pigeonhole multi-index
       // (hamming ≤ 3) — which is EXACT (any pair within the budget shares
       // one of maxHamming+1 chunks verbatim). The signature is a 60-bit
       // SimHash over md5-hashed distinct word trigrams, computed per ROW
@@ -258,12 +258,14 @@ object SparkEntry {
       // projection. md5 derivation keeps the query replayable in DuckDB;
       // the production signature is the SimHash64 Catalyst expression
       // (q_simhash_production).
-      // Tracked cache: the pigeonhole join consumes the signature
-      // relation three times (chunk size counts + both join sides).
-      val sigs = graft.Caches.track(
-        docsWithCopies(s, dir).select(F.col("doc_id"),
+      // Eager checkpoint: the chunk groups read the signature relation
+      // twice (chunk size counts + join back); filling it once before
+      // the query runs keeps its two concurrent map stages from both
+      // computing (and racing to store) the same partitions.
+      val sigs = docsWithCopies(s, dir).select(F.col("doc_id"),
           md5NgramSimhash(F.col("text"), 3, 60).as("sim"))
-          .where(F.col("sim").isNotNull))
+        .where(F.col("sim").isNotNull)
+        .localCheckpoint(true)
       // chunk-posting cap pinned unbounded: the brute-force SQL oracle has
       // no cap to mirror (production callers keep the default cap)
       SimHashJoin.nearPairs(sigs, maxHamming = 3, maxChunkPostings = Long.MaxValue)

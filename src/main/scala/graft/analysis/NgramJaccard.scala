@@ -62,7 +62,7 @@ object NgramJaccard {
     *
     * Round 6 (guide §2.3/§2.4): shared-gram pairs come from ONE
     * aggregation of the postings into per-(block, gram) doc-id lists plus
-    * a two-explode pair expansion (the Lsh pair-generation shape) — the
+    * the engine's one pair expansion ([[graft.dedup.Lsh.memberPairs]]) — the
     * round-5 form SELF-JOINED the exploded postings on (blk, gram
     * string), which ran the n-gram explode twice and moved every gram
     * string through two join sides; now each posting crosses exactly one
@@ -75,14 +75,15 @@ object NgramJaccard {
     // not a columnar persist (round 6) — the payload is gram STRING
     // arrays, the most expensive column shape the columnar cache can
     // encode; the checkpoint writes UnsafeRows once (memcpy) and both
-    // consumers scan it
-    val d = graft.Caches.truncate(prepared(docs, blockCol, n))
+    // consumers scan it. Eager: it is filled by its own job before the
+    // two branches of the query's plan read it, not first-touched by
+    // both of them at once.
+    val d = prepared(docs, blockCol, n).localCheckpoint(true)
     val postings = d.select(F.col("blk"), F.col("doc_id"), F.explode(F.col("g")).as("t"))
-    val shared = postings.groupBy("blk", "t")
-      .agg(F.collect_list(F.col("doc_id")).as("ids"))
-      .where(F.size(F.col("ids")) >= 2)
-      .select(F.explode(F.col("ids")).as("a"), F.col("ids"))
-      .select(F.col("a"), F.explode(F.col("ids")).as("b"))
+    val groups = postings.groupBy("blk", "t")
+      .agg(F.collect_list(F.col("doc_id")).as("members"))
+      .where(F.size(F.col("members")) >= 2)
+    val shared = graft.dedup.Lsh.memberPairs(groups, "a", "b")
       .where(F.col("a") < F.col("b"))
       .groupBy(F.col("a").as("doc_a"), F.col("b").as("doc_b"))
       .agg(F.count(F.lit(1)).as("inter_size"))

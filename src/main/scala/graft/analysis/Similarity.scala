@@ -214,7 +214,10 @@ object Similarity {
     * each), so exchanging the n-row member table against it was a wasted
     * full shuffle — same fix the round-5 PLANS audit made for IVF's cell
     * filter. For plane counts past 20 the bound stops being small, so the
-    * hint degrades to AQE's runtime choice. */
+    * hint degrades to AQE's runtime choice. This bounded, broadcast key
+    * set is why the cap is written here and not through
+    * `graft.dedup.Lsh.cappedGroups`, the engine's form for unbounded key
+    * spaces (count, keep 2..cap, join back with AQE's choice of join). */
   private def eligibleMembers(e: DataFrame, numPlanes: Int, probes: Int,
                               maxBucket: Int, payload: Seq[Column]): DataFrame = {
     val bucketed = graft.Caches.truncate((0 until probes)
@@ -309,8 +312,10 @@ object Similarity {
     *     candidate scoring is floating cosine.
     *  3. PROBE: each query scans the vectors of its own `nProbe` nearest
     *     cells — a cell-id equi-join (shuffles on cell id, cells average
-    *     n/C members; the same count-filter cap discipline as LSH guards
-    *     degenerate cells).
+    *     n/C members; a count-filter cap guards degenerate cells). The
+    *     cap is its own code, not `graft.dedup.Lsh.cappedGroups`: its
+    *     key set (at most C cells) is bounded and broadcast, and it keeps
+    *     singleton cells (1..maxCell), which a 2..cap pair cap drops.
     *
     * Output columns and tie rule match [[bruteForceTopK]]; recall < 1 by
     * design and rises with `nProbe`. */

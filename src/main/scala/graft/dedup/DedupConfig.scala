@@ -45,9 +45,8 @@ final case class DedupConfig(
     /** Sliding-window quality floor (permille, 0 = off): reject docs whose
       * minimum `qualityWin`-token window alpha-density drops below this —
       * the literal analog of the reference's windowed quality filter
-      * (barcode_split_quality_filter_umi_anno.py:378-403). Enabling costs
-      * one narrow token-explode aggregation plus a doc_id join of the
-      * (small) low-quality id set back onto the gate. */
+      * (barcode_split_quality_filter_umi_anno.py:378-403). Enabling adds
+      * one per-row kernel and one clause to the reject-reason chain. */
     minWindowQualityPm: Int = 0,
     /** Token window size for [[minWindowQualityPm]]. */
     qualityWin: Int = 8,

@@ -94,30 +94,16 @@ object DedupPipeline {
     // the lang clause exists only under a whitelist. NULL lang is a reject
     // there: isin() is three-valued (NULL lang → NULL), so compare
     // null-safely to true
-    val reason = cfg.allowedLangs.fold(contentReason)(ls => contentReason
+    val langReason = cfg.allowedLangs.fold(contentReason)(ls => contentReason
       .when(F.not(F.col("lang").isin(ls.toSeq: _*) <=> F.lit(true)), "lang"))
-    val gated0 = base.withColumn("reject_reason", reason).drop("dup_url")
-    // windowed-quality gate (off by default): the low-quality id set is
-    // narrow (ids of failing docs only) and folds into reject_reason via
-    // a doc_id join — AQE broadcasts it when small, the common case
-    val gated =
-      if (cfg.minWindowQualityPm <= 0) gated0
-      else {
-        // tracked cache, like enforceIds' anomaly table: the low-quality
-        // id set sits in the lineage of EVERY downstream frame, and
-        // uncached it would re-run the whole-corpus token-explode
-        // aggregation on each re-evaluation of the gated plan
-        val lowQ = graft.Caches.track(graft.analysis.TextAnalysis
-          .windowedMinQualityPermille(
-            gated0.where(F.col("reject_reason").isNull)
-              .select("doc_id", "text"), cfg.qualityWin)
-          .where(F.col("min_window_quality_pm") < cfg.minWindowQualityPm)
-          .select(F.col("doc_id"), F.lit(true).as("_lowq")))
-        gated0.join(lowQ, Seq("doc_id"), "left")
-          .withColumn("reject_reason", F.coalesce(F.col("reject_reason"),
-            F.when(F.col("_lowq"), "low_quality")))
-          .drop("_lowq")
-      }
+    // windowed-quality gate (off by default): a per-row kernel, so one
+    // more clause of the same chain (a null score, no window, passes)
+    val reason =
+      if (cfg.minWindowQualityPm <= 0) langReason
+      else langReason.when(
+        windowedMinQuality(F.col("text"), cfg.qualityWin) < cfg.minWindowQualityPm,
+        "low_quality")
+    val gated = base.withColumn("reject_reason", reason).drop("dup_url")
     // signatures only where admitted: shingles(null) → null → null
     // minhash/simhash, so reject rows never pay signature compute and
     // minhash.isNotNull still means "signed" downstream

@@ -10,12 +10,13 @@ import graft.functions.hammingDistance
   * Pigeonhole multi-index (the standard Manku/Jain/Sarma WWW'07 layout):
   * split the 64-bit fingerprint into `maxHamming + 1` chunks — any pair
   * within the Hamming budget must agree EXACTLY on at least one chunk, so
-  * equi-joining per (chunk index, chunk value) finds every qualifying pair
+  * grouping by (chunk index, chunk value) finds every qualifying pair
   * with zero probability of a miss; `bit_count(xor)` then verifies
-  * exactly. Each of the m+1 passes is a plain shuffle equi-join — at
-  * 10^12 docs this is m+1 sort-merge joins on ~16-bit-entropy keys, no
-  * cross product anywhere. Chunk-key skew (boilerplate fingerprints)
-  * inherits the same cap discipline as LSH buckets via `maxChunkPostings`.
+  * exactly. The chunk keys go through the engine's one hot-key form
+  * ([[Lsh.cappedGroups]], capped at `maxChunkPostings`): sizes counted
+  * map-side first, then each key of 2..cap postings collected into one
+  * member list and expanded into pairs by [[Lsh.memberPairs]] — no
+  * self-join, and a boilerplate fingerprint's chunk never co-locates.
   *
   * This is the web-scale form of the reference's Hamming-distance-ladder
   * tolerant match (reference/dupliganger/dedup.py:230-269): there, 96
@@ -32,25 +33,18 @@ object SimHashJoin {
     require(maxHamming >= 0 && maxHamming <= 15, s"maxHamming in [0,15], got $maxHamming")
     val chunks = maxHamming + 1
     val width = 64 / chunks
-    val base = sigs.select(F.col(idCol).as("id"), F.col(simCol).as("sim"))
-      .where(F.col("sim").isNotNull)
-
-    val chunked = base.select(
-      F.col("id"), F.col("sim"),
+    val chunked = sigs.where(F.col(simCol).isNotNull).select(
+      F.col(idCol).as("id"), F.col(simCol).as("sim"),
       F.posexplode(F.array((0 until chunks).map { c =>
         // chunk c = bits [c*width, (c+1)*width) (last chunk takes the rest)
         val lo = c * width
         val w = if (c == chunks - 1) 64 - lo else width
-        F.shiftrightunsigned(F.col("sim"), lo)
+        F.shiftrightunsigned(F.col(simCol), lo)
           .bitwiseAND(F.lit(if (w == 64) -1L else (1L << w) - 1L))
       }: _*)).as(Seq("chunk_idx", "chunk_val")))
-
-    val sizes = chunked.groupBy("chunk_idx", "chunk_val").count()
-    val ok = sizes.where(F.col("count").between(2, maxChunkPostings))
-      .select("chunk_idx", "chunk_val")
-    val members = chunked.join(ok, Seq("chunk_idx", "chunk_val"))
-
-    members.as("x").join(members.as("y"), Seq("chunk_idx", "chunk_val"))
+    val (groups, _) = Lsh.cappedGroups(chunked, Seq("chunk_idx", "chunk_val"),
+      F.struct(F.col("id"), F.col("sim")), maxChunkPostings)
+    Lsh.memberPairs(groups)
       .where(F.col("x.id") < F.col("y.id"))
       .select(F.col("x.id").as("id_a"), F.col("y.id").as("id_b"),
         hammingDistance(F.col("x.sim"), F.col("y.sim")).as("hamming"))

@@ -12,13 +12,14 @@ import graft.functions._
   * one task — a memory wall at web scale. Winnowing gives the same
   * guarantee distributively: any shared substring of length ≥ w + win − 1
   * shares a selected fingerprint, so "text(A) occurs inside text(B)"
-  * implies containment(A→B) = |fp(A)∩fp(B)| / |fp(A)| ≈ 1. We generate
-  * candidate directed pairs by a fingerprint equi-join (posting lists
-  * capped like LSH buckets), score containment by a count aggregation,
-  * and then verify candidates EXACTLY with `contains(text_b, text_a)` —
-  * so the emitted edges carry no approximation (what the suffix array
-  * would have certified, restored at the pair level where the join is
-  * cheap).
+  * implies containment(A→B) = |fp(A)∩fp(B)| / |fp(A)| ≈ 1. Candidate
+  * directed pairs come from the fingerprint posting lists, capped and
+  * collected like LSH buckets ([[Lsh.cappedGroups]]) and expanded by
+  * [[Lsh.memberPairs]]; containment is scored by a count aggregation, and
+  * candidates are then verified EXACTLY with `contains(text_b, text_a)`
+  * on texts attached by [[Lsh.endpointJoin]] — so the emitted edges carry
+  * no approximation (what the suffix array would have certified, restored
+  * at the pair level where the join is cheap).
   *
   * Scale: posting-list cap before any pairing (partial-agg count, same
   * discipline as Lsh); containment scoring is a groupBy on (small, large)
@@ -72,9 +73,7 @@ object SubstringDedup {
 
     // directed candidates: shorter doc (a) potentially inside longer (b);
     // shared-fingerprint count / |fp(a)| = containment estimate
-    val cand = buckets
-      .select(F.explode(F.col("members")).as("x"), F.col("members"))
-      .select(F.col("x"), F.explode(F.col("members")).as("y"))
+    val cand = Lsh.memberPairs(buckets)
       .where(F.col("x.len") < F.col("y.len") ||
         (F.col("x.len") === F.col("y.len") && F.col("x.doc_id") < F.col("y.doc_id")))
       .groupBy(F.col("x.doc_id").as("a"), F.col("y.doc_id").as("b"))
@@ -87,38 +86,13 @@ object SubstringDedup {
     // SAME ASCII-only A-Z→a-z fold the fingerprints sampled (F.lower is
     // full Unicode and can change string length — e.g. 'İ' — so the
     // verified predicate would not be the sampled one on non-ASCII text).
-    //
-    // Stacked single-join form (round 6; guide §2.4 — same melt as
-    // Lsh.verifyPairs): each candidate pair explodes into one row per
-    // endpoint keyed by doc_id, ONE shuffle-hash join attaches the folded
-    // text (the inner join IS the member reduction — non-candidate texts
-    // drop at the join; sort-merge would sort kilobytes of text per row
-    // for a hash-equality lookup), and an (a, b) aggregation pivots the
-    // two endpoints back onto one row. The round-5 chain — member-id
-    // union, left_semi reduction, two id-keyed text joins — cost 7
-    // exchanges and pushed the text payload through three shuffles; this
-    // costs 3 exchanges and ships each candidate text once. The
-    // npresent = 2 filter reproduces the double-inner-join semantics
-    // (reps is unique per doc_id by construction); the candidate frame is
-    // consumed once, so round 5's cand cache is gone too.
-    val asciiFold = (c: org.apache.spark.sql.Column) =>
-      F.translate(c, "ABCDEFGHIJKLMNOPQRSTUVWXYZ", "abcdefghijklmnopqrstuvwxyz")
-    val stacked = cand.select(F.col("a"), F.col("b"), F.col("containment"),
-      F.explode(F.array(F.col("a"), F.col("b"))).as("doc_id"))
-    val folded = reps.select(F.col("doc_id"), asciiFold(F.col("text")).as("t"))
-    // build side = stacked (2 narrow rows per surviving candidate), not
-    // the folded texts — the round-6.0 form built the hash table from
-    // kilobyte text rows and streamed the tiny pair frame (see the same
-    // swap in Lsh.verifyPairs)
-    stacked.hint("shuffle_hash").join(folded, Seq("doc_id"))
-      .groupBy("a", "b").agg(
-        F.max(F.col("containment")).as("containment"),
-        F.count(F.lit(1)).as("npresent"),
-        F.first(F.when(F.col("doc_id") === F.col("a"), F.col("t")),
-          ignoreNulls = true).as("text_a"),
-        F.first(F.when(F.col("doc_id") === F.col("b"), F.col("t")),
-          ignoreNulls = true).as("text_b"))
-      .where(F.col("npresent") === 2)
+    // The folded texts reach the pairs through Lsh.endpointJoin (reps is
+    // unique per doc_id by construction); the candidate frame is consumed
+    // once, so it is not cached.
+    val folded = reps.select(F.col("doc_id"),
+      F.translate(F.col("text"), "ABCDEFGHIJKLMNOPQRSTUVWXYZ", "abcdefghijklmnopqrstuvwxyz")
+        .as("text"))
+    Lsh.endpointJoin(cand, folded, Seq("text"), carried = Seq("containment"))
       .where(F.col("text_b").contains(F.col("text_a")))
       .select("a", "b", "containment")
   }
@@ -133,7 +107,7 @@ object SubstringDedup {
   private def cappedPostingBuckets(eligible: DataFrame, cfg: DedupConfig): DataFrame = {
     val postings = eligible.select(F.col("doc_id"), F.col("len"), F.col("nfp"),
       F.explode(F.col("fp")).as("f"))
-    Lsh.cappedGroups(postings, "f",
+    Lsh.cappedGroups(postings, Seq("f"),
       F.struct(F.col("doc_id"), F.col("len"), F.col("nfp")), cfg.maxFingerprintPostings)._1
   }
 }

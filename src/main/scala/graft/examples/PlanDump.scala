@@ -28,8 +28,8 @@ object PlanDump {
       "q_exact_dedup_groups" -> "map-side partial aggregation before the hash shuffle",
       "q_exact_dedup_kept" -> "same partial-agg shape keyed by text; winner = min(doc_id), ids-only output",
       "q_minhash_lsh_dedup" -> "[r6] codegen BandBuckets explode → bucket-size counts → 2..cap eligibility join (AQE broadcasts the small eligible set; no window sort, no eager probe job) → STACKED single-join verify, hash table built from the narrow pair frame (3 exchanges, was 7) → 2-exchange CC rounds; signature frame lineage-checkpointed, not columnar-persisted",
-      "q_simhash_dup_pairs" -> "per-row Md5NgramSimHash signature (no gram explode, no per-bit aggregates) → cached narrow (doc_id, sim) → pigeonhole chunk equi-joins",
-      "q_ngram_jaccard_pairs" -> "[r6] codegen WordNgrams + postings groupBy into per-gram member lists + two-explode pair expansion — postings cross ONE exchange (was a postings self-join shipping gram strings twice); prepared gram table lineage-checkpointed, not columnar-persisted",
+      "q_simhash_dup_pairs" -> "per-row Md5NgramSimHash signature (no gram explode, no per-bit aggregates) → eagerly checkpointed narrow (doc_id, sim) → pigeonhole chunk keys through Lsh.cappedGroups (map-side counts, 2..cap join back, collected chunk groups) → two-explode pair expansion + hamming filter + distinct; no chunk self-join",
+      "q_ngram_jaccard_pairs" -> "[r6] codegen WordNgrams + postings groupBy into per-gram member lists + two-explode pair expansion — postings cross ONE exchange (was a postings self-join shipping gram strings twice); prepared gram table eagerly lineage-checkpointed, not columnar-persisted",
       "q_embedding_dedup" -> "[r6] codegen RhpBucket, bucketed members CACHED (was 4 full recomputes), broadcast eligibility, exact cosine verify via codegen DoubleDot",
       "q_embedding_top1" -> "[r6] blocked exact kNN: no LocalTableScan (no driver collect); blocks relation cached (q- and c-sides shared), cells cross-joined in mapPartitions",
       "q_ann_lsh_top1" -> "[r6] codegen RhpBucket buckets, members cached, broadcast count-filter cap, equi-join on (rep, bucket), codegen LongDot ranking, window top-k",

@@ -23,7 +23,7 @@ object GraftFunctions {
       s"$name expects a literal INT, got $other")
   }
 
-  private def longArg(e: Expression, name: String, default: Long): Long = e match {
+  private def longArg(e: Expression, name: String): Long = e match {
     case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v.toLong
     case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v
     case other => throw new IllegalArgumentException(
@@ -37,7 +37,7 @@ object GraftFunctions {
       case Seq(text) => ShingleHashes(text, 9, HashUtil.DefaultSeed)
       case Seq(text, k) => ShingleHashes(text, intArg(k, "k"), HashUtil.DefaultSeed)
       case Seq(text, k, seed) =>
-        ShingleHashes(text, intArg(k, "k"), longArg(seed, "seed", HashUtil.DefaultSeed))
+        ShingleHashes(text, intArg(k, "k"), longArg(seed, "seed"))
       case _ => throw new IllegalArgumentException(
         "shingle_hashes(text[, k[, seed]])")
     }, "scala_udf")
@@ -46,23 +46,25 @@ object GraftFunctions {
       case Seq(sh) => MinHashSignature(sh, 128, HashUtil.DefaultSeed)
       case Seq(sh, n) => MinHashSignature(sh, intArg(n, "numHashes"), HashUtil.DefaultSeed)
       case Seq(sh, n, seed) => MinHashSignature(sh, intArg(n, "numHashes"),
-        longArg(seed, "seed", HashUtil.DefaultSeed))
+        longArg(seed, "seed"))
       case _ => throw new IllegalArgumentException(
         "minhash_signature(shingles[, numHashes[, seed]])")
     }, "scala_udf")
 
     reg.createOrReplaceTempFunction("simhash64", exprs => exprs match {
       case Seq(sh) => SimHash64(sh, HashUtil.DefaultSeed)
-      case Seq(sh, seed) => SimHash64(sh, longArg(seed, "seed", HashUtil.DefaultSeed))
+      case Seq(sh, seed) => SimHash64(sh, longArg(seed, "seed"))
       case _ => throw new IllegalArgumentException("simhash64(shingles[, seed])")
     }, "scala_udf")
 
     reg.createOrReplaceTempFunction("winnowed_fingerprints", exprs => exprs match {
-      case Seq(text) => WinnowedFingerprints(text, 48, 64, HashUtil.DefaultSeed)
+      case Seq(text) =>
+        val cfg = graft.dedup.DedupConfig()
+        WinnowedFingerprints(text, cfg.winnowW, cfg.winnowWin, cfg.seed)
       case Seq(text, w, win) => WinnowedFingerprints(text,
         intArg(w, "w"), intArg(win, "win"), HashUtil.DefaultSeed)
       case Seq(text, w, win, seed) => WinnowedFingerprints(text,
-        intArg(w, "w"), intArg(win, "win"), longArg(seed, "seed", HashUtil.DefaultSeed))
+        intArg(w, "w"), intArg(win, "win"), longArg(seed, "seed"))
       case _ => throw new IllegalArgumentException(
         "winnowed_fingerprints(text[, w, win[, seed]])")
     }, "scala_udf")

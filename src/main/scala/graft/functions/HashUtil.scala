@@ -41,6 +41,55 @@ object HashUtil {
     mix64(h)
   }
 
+  private val md5 = new ThreadLocal[java.security.MessageDigest] {
+    override def initialValue(): java.security.MessageDigest =
+      java.security.MessageDigest.getInstance("MD5")
+  }
+
+  /** Value of the first 15 hex digits of md5(bytes[off, off + len)) — a
+    * 60-bit gram hash that SQL replays as
+    * `conv(substring(md5(g), 1, 15), 16, 10)`: big-endian bytes 0..7
+    * shifted right a nibble. */
+  def md5Prefix60(bytes: Array[Byte], off: Int, len: Int): Long = {
+    val md = md5.get()
+    md.reset()
+    md.update(bytes, off, len)
+    val d = md.digest()
+    var be = 0L
+    var b = 0
+    while (b < 8) { be = (be << 8) | (d(b) & 0xFFL); b += 1 }
+    be >>> 4
+  }
+
+  /** Winnowing min-sampling (Schleimer/Wilkerson/Aiken, SIGMOD'03): the
+    * sorted distinct minima of every `win`-window of consecutive values of
+    * `grams`; fewer than `win` grams keep the single global minimum, no
+    * grams give an empty array. A monotone deque of indices (ascending
+    * values) makes it one pass. */
+  def winnow(grams: Array[Long], win: Int): Array[Long] = {
+    val n = grams.length
+    if (n == 0) return Array.emptyLongArray
+    val set = new LongSet(math.max(16, n / win))
+    if (n <= win) {
+      var m = grams(0)
+      var i = 1
+      while (i < n) { if (grams(i) < m) m = grams(i); i += 1 }
+      set.add(m)
+    } else {
+      val deque = new Array[Int](n)
+      var head = 0; var tail = 0 // [head, tail)
+      var i = 0
+      while (i < n) {
+        while (tail > head && grams(deque(tail - 1)) >= grams(i)) tail -= 1
+        deque(tail) = i; tail += 1
+        if (deque(head) <= i - win) head += 1
+        if (i >= win - 1) set.add(grams(deque(head)))
+        i += 1
+      }
+    }
+    set.toSortedArray
+  }
+
   /** Open-addressing hash set for primitive longs (no boxing in the per-row
     * hot path). 0 is reserved as the empty marker; the value 0 is remapped. */
   final class LongSet(initialCapacity: Int) {

@@ -312,59 +312,22 @@ case class Md5NgramSimHash(child: Expression, n: Int, bits: Int)
 }
 
 object Md5NgramSimHash {
-  private val digest = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
   /** null iff the text has fewer than n tokens (the oracle's empty gram
-    * list — such docs vanish from the vote aggregation). */
+    * list — such docs vanish from the vote aggregation). Grams are the
+    * distinct space-token n-grams (deduped on the STRING, exactly
+    * list_distinct(tri)), each hashed by [[HashUtil.md5Prefix60]]. */
   def compute(text: String, n: Int, bits: Int): java.lang.Long = {
-    // tokens = maximal runs between single ' ' separators (NOT general
-    // whitespace — mirrors string_split(text, ' ') + non-empty filter)
-    val tokens = new java.util.ArrayList[String]()
-    val len = text.length
-    var i = 0
-    while (i < len) {
-      while (i < len && text.charAt(i) == ' ') i += 1
-      if (i < len) {
-        val start = i
-        while (i < len && text.charAt(i) != ' ') i += 1
-        tokens.add(text.substring(start, i))
-      }
-    }
-    val nt = tokens.size()
-    if (nt < n) return null
-    // distinct n-grams (dedupe on the STRING, exactly list_distinct(tri))
-    val seen = new java.util.HashSet[String](math.max(16, nt * 2))
-    val md = digest.get()
+    val grams = WordNgrams.distinct(text, n)
+    if (grams.isEmpty) return null
     val ones = new Array[Int](bits)
-    var m = 0
-    val sb = new java.lang.StringBuilder(64)
-    var g = 0
-    while (g <= nt - n) {
-      sb.setLength(0)
-      var j = 0
-      while (j < n) {
-        if (j > 0) sb.append(' ')
-        sb.append(tokens.get(g + j))
-        j += 1
-      }
-      val gram = sb.toString
-      if (seen.add(gram)) {
-        md.reset()
-        val d = md.digest(gram.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        // first 15 hex digits = big-endian bytes 0..7 shifted right a nibble
-        var be = 0L
-        var b = 0
-        while (b < 8) { be = (be << 8) | (d(b) & 0xFFL); b += 1 }
-        val hv = be >>> 4
-        var t = 0
-        while (t < bits) { ones(t) += ((hv >>> t) & 1L).toInt; t += 1 }
-        m += 1
-      }
-      g += 1
+    val it = grams.iterator()
+    while (it.hasNext) {
+      val g = it.next().getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      val hv = HashUtil.md5Prefix60(g, 0, g.length)
+      var t = 0
+      while (t < bits) { ones(t) += ((hv >>> t) & 1L).toInt; t += 1 }
     }
+    val m = grams.size
     var out = 0L
     var b = 0
     while (b < bits) { if (2 * ones(b) > m) out |= (1L << b); b += 1 }
@@ -501,25 +464,6 @@ object WinnowedFingerprints {
       grams(i) = mix64(raw ^ seed)
       i += 1
     }
-    // winnow: rightmost min of each window of `win` consecutive gram hashes
-    val set = new HashUtil.LongSet(math.max(16, numGrams / win))
-    if (numGrams <= win) {
-      var m = grams(0); i = 1
-      while (i < numGrams) { if (grams(i) <= m) m = grams(i); i += 1 }
-      set.add(m)
-    } else {
-      // monotone deque over indices (ascending hash values)
-      val deque = new Array[Int](numGrams)
-      var head = 0; var tail = 0 // [head, tail)
-      i = 0
-      while (i < numGrams) {
-        while (tail > head && grams(deque(tail - 1)) >= grams(i)) tail -= 1
-        deque(tail) = i; tail += 1
-        if (deque(head) <= i - win) head += 1
-        if (i >= win - 1) set.add(grams(deque(head)))
-        i += 1
-      }
-    }
-    set.toSortedArray
+    HashUtil.winnow(grams, win)
   }
 }

@@ -143,8 +143,20 @@ case class WordNgrams(child: Expression, n: Int) extends UnaryExpression {
 
 object WordNgrams {
   def compute(text: String, n: Int): ArrayData = {
-    // tokens = maximal runs between ' ' separators, empties dropped
-    // (mirrors filter(split(text, " "), _ != ""))
+    val grams = distinct(text, n)
+    val out = new Array[Any](grams.size)
+    val it = grams.iterator()
+    var k = 0
+    while (it.hasNext) { out(k) = UTF8String.fromString(it.next()); k += 1 }
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+  }
+
+  /** The distinct space-token n-grams of `text` in first-occurrence order
+    * (exactly array_distinct's): tokens are the maximal runs between ' '
+    * separators, empties dropped (NOT general whitespace — mirrors
+    * filter(split(text, " "), _ != "")), and a gram is n consecutive
+    * tokens joined by one space. Empty iff fewer than n tokens. */
+  def distinct(text: String, n: Int): java.util.LinkedHashSet[String] = {
     val tokens = new java.util.ArrayList[String]()
     val len = text.length
     var i = 0
@@ -157,8 +169,6 @@ object WordNgrams {
       }
     }
     val nt = tokens.size()
-    if (nt < n) return new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Any])
-    // first-occurrence order, exactly array_distinct's
     val seen = new java.util.LinkedHashSet[String](math.max(16, nt * 2))
     val sb = new java.lang.StringBuilder(64)
     var g = 0
@@ -173,11 +183,7 @@ object WordNgrams {
       seen.add(sb.toString)
       g += 1
     }
-    val out = new Array[Any](seen.size)
-    val it = seen.iterator()
-    var k = 0
-    while (it.hasNext) { out(k) = UTF8String.fromString(it.next()); k += 1 }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    seen
   }
 }
 
@@ -221,15 +227,10 @@ case class Md5WinnowedFingerprints(child: Expression, w: Int, win: Int)
 }
 
 object Md5WinnowedFingerprints {
-  private val digest = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
-  /** Sorted distinct fingerprint minima; empty for texts under w chars.
-    * Gram windows count CODE POINTS (both engines' substring semantics);
-    * each gram is hashed from its UTF-8 byte slice — no per-gram string
-    * allocation. */
+  /** Sorted distinct fingerprint minima ([[HashUtil.winnow]]); empty for
+    * texts under w chars. Gram windows count CODE POINTS (both engines'
+    * substring semantics); each gram is hashed from its UTF-8 byte slice
+    * ([[HashUtil.md5Prefix60]]) — no per-gram string allocation. */
   def compute(text: UTF8String, w: Int, win: Int): Array[Long] = {
     val bytes = text.getBytes
     val nb = bytes.length
@@ -246,41 +247,8 @@ object Md5WinnowedFingerprints {
       i += 1
     }
     offs(numChars) = nb
-
-    val numGrams = numChars - w + 1
-    val md = digest.get()
-    val grams = new Array[Long](numGrams)
-    var g = 0
-    while (g < numGrams) {
-      md.reset()
-      md.update(bytes, offs(g), offs(g + w) - offs(g))
-      val d = md.digest()
-      // first 15 hex digits = big-endian bytes 0..7 shifted right a nibble
-      var be = 0L
-      var b = 0
-      while (b < 8) { be = (be << 8) | (d(b) & 0xFFL); b += 1 }
-      grams(g) = be >>> 4
-      g += 1
-    }
-
-    val set = new HashUtil.LongSet(math.max(16, numGrams / win))
-    if (numGrams <= win) {
-      var m = grams(0); i = 1
-      while (i < numGrams) { if (grams(i) < m) m = grams(i); i += 1 }
-      set.add(m)
-    } else {
-      // monotone deque over indices (ascending hash values)
-      val deque = new Array[Int](numGrams)
-      var head = 0; var tail = 0 // [head, tail)
-      i = 0
-      while (i < numGrams) {
-        while (tail > head && grams(deque(tail - 1)) >= grams(i)) tail -= 1
-        deque(tail) = i; tail += 1
-        if (deque(head) <= i - win) head += 1
-        if (i >= win - 1) set.add(grams(deque(head)))
-        i += 1
-      }
-    }
-    set.toSortedArray
+    val grams = Array.tabulate(numChars - w + 1)(g =>
+      HashUtil.md5Prefix60(bytes, offs(g), offs(g + w) - offs(g)))
+    HashUtil.winnow(grams, win)
   }
 }

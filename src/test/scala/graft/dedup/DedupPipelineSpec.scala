@@ -176,6 +176,25 @@ class DedupPipelineSpec extends SparkSpec {
     assert(m("pages_total") === 2L)
   }
 
+  test("windowed-quality gate is one reason clause: no join, no persisted relation") {
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val spark2 = spark
+    import spark2.implicits._
+    // an uncached input, so any persisted relation is the gate's own
+    val rows = Seq("https://x/1" -> "perfectly clean english prose with many good words",
+      "https://x/2" -> "good start then 00 11 22 33 44 55 66 77 and words after")
+      .toDF("url", "text")
+      .withColumn("warc_ts", F.current_timestamp())
+      .withColumn("html", F.encode(F.col("text"), "UTF-8"))
+      .withColumn("lang", F.lit("en"))
+    val (sigsAll, _) = DedupPipeline.signatures(rows,
+      DedupConfig(minWindowQualityPm = 300, qualityWin = 4))
+    val qe = sigsAll.queryExecution
+    assert(qe.analyzed.collectFirst { case j: Join => j }.isEmpty)
+    assert(qe.withCachedData.collectFirst { case r: InMemoryRelation => r }.isEmpty)
+  }
+
   test("NULL lang is rejected when a language whitelist is set") {
     val spark2 = spark
     import spark2.implicits._

@@ -25,6 +25,21 @@ class GraftFunctionsSpec extends SparkSpec {
     assert(viaSql.getInt(2) === viaCol.getInt(2))
   }
 
+  test("1-arg winnowed_fingerprints uses the pipeline's winnow sizes") {
+    GraftFunctions.register(spark)
+    val spark2 = spark
+    import spark2.implicits._
+    // long enough that windows of 64 and of 96 grams sample differently
+    val text = (1 to 200).map(i => s"w${i * 7919 % 1000}").mkString(" ")
+    Seq(text).toDF("text").createOrReplaceTempView("long_t")
+    val cfg = graft.dedup.DedupConfig()
+    val viaSql = spark.sql("SELECT winnowed_fingerprints(text) FROM long_t").head()
+    val viaCol = spark.table("long_t").select(
+      winnowedFingerprints(F.col("text"), cfg.winnowW, cfg.winnowWin, cfg.seed)).head()
+    assert(viaSql.getSeq[Long](0).nonEmpty)
+    assert(viaSql.getSeq[Long](0) === viaCol.getSeq[Long](0))
+  }
+
   test("bad SQL arity / non-literal args fail with clear messages") {
     GraftFunctions.register(spark)
     val e1 = intercept[Exception](spark.sql("SELECT shingle_hashes()").collect())

@@ -11,7 +11,7 @@ import graft.SparkSpec
   * SQL-oracle-pinned, so equality must be exact). The old forms are
   * reconstructed inline, verbatim from the round-5 code. */
 class TextWindowExpressionsSpec extends SparkSpec {
-  import graft.functions.{md5WinnowedFingerprints, windowedMinQuality}
+  import graft.functions.{md5WinnowedFingerprints, windowedMinQuality, winnowedFingerprints}
 
   private val edgeTexts = Seq(
     "",                              // no tokens / no grams
@@ -72,6 +72,28 @@ class TextWindowExpressionsSpec extends SparkSpec {
       .distinct()
   }
 
+  // the production kernel's layout with each gram hashed directly (no
+  // rolling update): polynomial over the ASCII-folded UTF-16 chars, then
+  // mix64 with the seed; windows and minima in SQL as above
+  private def explodedWinnow(in: DataFrame, w: Int, win: Int): DataFrame = {
+    val gramHashes = F.udf((text: String) => (0 to text.length - w).map { i =>
+      var h = 0L
+      text.substring(i, i + w).foreach { c =>
+        h = h * 0x100000001B3L + (if (c >= 'A' && c <= 'Z') c + 32 else c.toInt)
+      }
+      HashUtil.mix64(h ^ HashUtil.DefaultSeed)
+    })
+    val wnd = Window.partitionBy("doc_id").orderBy("i")
+      .rowsBetween(Window.currentRow, win - 1)
+    in.select(F.col("doc_id"), gramHashes(F.col("text")).as("g"))
+      .select(F.col("doc_id"), F.size(F.col("g")).as("ng"),
+        F.posexplode(F.col("g")).as(Seq("i", "hv")))
+      .withColumn("wmin", F.min("hv").over(wnd))
+      .where(F.col("i") <= F.greatest(F.col("ng") - win, F.lit(0)))
+      .select(F.col("doc_id"), F.col("wmin").as("fp"))
+      .distinct()
+  }
+
   private def asSet(df: DataFrame): Set[(Long, Long)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
@@ -119,5 +141,14 @@ class TextWindowExpressionsSpec extends SparkSpec {
       F.explode(md5WinnowedFingerprints(F.col("text"), 2, 1)).as("fp"))
     val oldForm = explodedMd5Winnow(docs, 2, 1)
     assert(asSet(newForm) == asSet(oldForm))
+  }
+
+  test("winnowedFingerprints (production) matches the explode+window form") {
+    for ((w, win) <- Seq((48, 96), (2, 1), (24, 16))) {
+      val newForm = docs.select(F.col("doc_id"), F.explode(
+        winnowedFingerprints(F.col("text"), w, win, HashUtil.DefaultSeed)).as("fp"))
+      val oldForm = explodedWinnow(docs.where(F.col("text").isNotNull), w, win)
+      assert(asSet(newForm) == asSet(oldForm), s"mismatch at w=$w win=$win")
+    }
   }
 }
